@@ -39,6 +39,13 @@ object Bench {
   private def force(df: org.apache.spark.sql.DataFrame): Unit =
     if (action == "count") { df.count(); () }
     else df.write.format("noop").mode("overwrite").save()
+
+  /** A JSON number with `digits` decimals, in `Locale.ROOT` — a
+    * comma-decimal default locale would emit invalid JSON (`1,234`).
+    */
+  private[graft] def num(v: Double, digits: Int = 3): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -105,14 +112,14 @@ object Bench {
     raw.unpersist(); m1.unpersist()
     val rollupTps = nTurns / tM1
 
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + num(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"""" +
-      s""","bench_turns":$nTurns,"rollup_1m_sec":${f"$tM1%.3f"},"cascade_1h_sec":${f"$tH1%.3f"}""" +
-      s""","cascade_1d_sec":${f"$tD1%.3f"},"blocks_1h_sec":${f"$tBlocks%.3f"}""" +
-      s""","rollup_throughput_turns_per_sec":${f"$rollupTps%.0f"},"cpus":$cpus}"""
+      s""","bench_turns":$nTurns,"rollup_1m_sec":${num(tM1)},"cascade_1h_sec":${num(tH1)}""" +
+      s""","cascade_1d_sec":${num(tD1)},"blocks_1h_sec":${num(tBlocks)}""" +
+      s""","rollup_throughput_turns_per_sec":${num(rollupTps, 0)},"cpus":$cpus}"""
     println(line)
     // the driver captures only a stdout tail, which has truncated the
     // full per-query vector in past rounds — persist the identical

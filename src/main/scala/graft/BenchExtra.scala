@@ -56,7 +56,7 @@ object BenchExtra {
       name -> (ts.head, med)
     }
     val qs = out.map { case (k, (mn, md)) =>
-      "\"" + k + "\":{\"min\":" + f"$mn%.3f" + ",\"med\":" + f"$md%.3f" + "}"
+      "\"" + k + "\":{\"min\":" + Bench.num(mn) + ",\"med\":" + Bench.num(md) + "}"
     }.mkString("{", ",", "}")
     println(s"""{"metric":"focus","reps":$reps,"queries":$qs,"sf":"$sfDir","cpus":$cpus}""")
     spark.stop()

@@ -54,10 +54,8 @@ object SparkEntry {
   }
   private def stitchWarehouse(s: SparkSession, dir: String): String =
     memoWarehouse(stitchWarehouses, dir) {
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft-stitch-wh").toString
+      val wh = tempWarehouse("graft-stitch-wh")
       new graft.jobs.RollupJob(wh).run(s, transcripts(s, dir), "q141-build")
-      Runtime.getRuntime.addShutdownHook(cleanupHook(wh))
       wh
     }
 
@@ -71,16 +69,24 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def servingWarehouse(s: SparkSession, dir: String): String =
     memoWarehouse(servingWarehouses, dir) {
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft-serving-wh").toString
+      val wh = tempWarehouse("graft-serving-wh")
       val truncated = transcripts(s, dir).filter(
         org.apache.spark.sql.functions.col("ts") <
           org.apache.spark.sql.functions.lit("2024-01-15 00:00:00")
             .cast(transcripts(s, dir).schema("ts").dataType))
       new graft.jobs.RollupJob(wh).run(s, truncated, "q144-build")
-      Runtime.getRuntime.addShutdownHook(cleanupHook(wh))
       wh
     }
+
+  /** A fresh temp warehouse dir, deleted at JVM exit — the hook is
+    * registered BEFORE the caller's build, so a failed build (the memo
+    * caches nothing and a retry makes a new dir) leaks no dir either.
+    */
+  private def tempWarehouse(prefix: String): String = {
+    val wh = java.nio.file.Files.createTempDirectory(prefix).toString
+    Runtime.getRuntime.addShutdownHook(cleanupHook(wh))
+    wh
+  }
 
   private def cleanupHook(wh: String): Thread =
     new Thread(() => {

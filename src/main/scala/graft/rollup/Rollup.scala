@@ -500,9 +500,9 @@ object Rollup {
     lazy val h1 = cascade(m1, Tier.H1).localCheckpoint()
     lazy val d1 = cascade(h1, Tier.D1)
     // both sub-minute raw edges (a ragged range has two) aggregate in
-    // ONE combined fromRaw frame via rawEdgeParts — each edge as its
+    // ONE combined fromRaw frame via rawParts — each edge as its
     // own branch re-ran the full scan + conv window per edge
-    val rawCombined = rawEdgeParts(transcripts,
+    val rawCombined = rawParts(transcripts,
       slices.collect { case ("raw", lo, hi) => (lo, hi) })
     val parts = rawCombined ++ slices.collect {
       case (tier, lo, hi) if tier != "raw" =>
@@ -528,10 +528,16 @@ object Rollup {
     * `IoTDBWriter.java:147-185`; TimescaleDB answers real-time
     * aggregates the same way): [[graft.jobs.RollupJob]] has already
     * materialized `rollup_1m/1h/1d` as day-partitioned
-    * [[graft.table.SnapshotTable]]s, so each [[rangeSlices]] tier
-    * slice becomes ONE manifest-pruned table scan — only the day
-    * partitions overlapping the slice are even LISTED, then
-    * `window_start` filters trim to the slice inside those days.
+    * [[graft.table.SnapshotTable]]s, so each tier table is read ONCE
+    * per query, however many [[rangeSlices]] slices it serves (a
+    * ragged range has two 1h and two 1m slices): one manifest-pruned
+    * scan per tier, in which only the day partitions overlapping that
+    * tier's slices are even LISTED, then one `window_start` filter (the
+    * OR of the tier's slices) trims to the slices inside those days.
+    * The union thus has at most 3 tier branches plus the raw edges,
+    * and planning starts no Spark job
+    * ([[graft.table.SnapshotTable.readFiles]] takes the schema from a
+    * footer instead of inferring it).
     * Raw turns are touched exclusively by the ≤2 sub-minute edge
     * slices (an aligned range reads NO raw file at all — plan-pinned
     * in StitchSpec); the per-call tier recompute + localCheckpoint
@@ -586,19 +592,10 @@ object Rollup {
       dt: org.apache.spark.sql.types.DataType): Column =
     lit(t.format(stitchFmt)).cast(dt)
 
-  /** The raw-served slice [lo, hi) in stitch-mergeable form. */
-  private def rawPart(transcripts: DataFrame,
-      lo: java.time.LocalDateTime, hi: java.time.LocalDateTime): DataFrame = {
-    val rawTs = transcripts.schema("ts").dataType
-    fromRaw(
-      transcripts.filter(col("ts") >= stitchBound(lo, rawTs) &&
-        col("ts") < stitchBound(hi, rawTs)),
-      Tier.M1).select(stitchCols.map(col): _*)
-  }
-
-  /** The ladder's raw edge slices as ONE stitch-mergeable frame: a
-    * ragged range has up to two sub-minute raw edges, and deriving
-    * each with its own [[rawPart]] re-runs the ENTIRE transcripts
+  /** Raw-served spans (the ladder's sub-minute edges, or the serving
+    * mode's live tail) as ONE stitch-mergeable frame, none for no
+    * spans: a ragged range has up to two sub-minute raw edges, and
+    * deriving each as its own frame re-runs the ENTIRE transcripts
     * derivation (scan + conv exchange + row-number window — the ts
     * filter cannot push below the window because turn identity is a
     * whole-conversation function) once per edge. Instead the edges
@@ -611,23 +608,29 @@ object Rollup {
     * shared the pass via localCheckpoint, which paid an eager
     * materialization job per stitch call for the same saving).
     */
-  private def rawEdgeParts(transcripts: DataFrame,
+  private def rawParts(transcripts: DataFrame,
       spans: Seq[(java.time.LocalDateTime, java.time.LocalDateTime)])
       : Seq[DataFrame] =
     if (spans.isEmpty) Seq.empty
-    else {
-      val rawTs = transcripts.schema("ts").dataType
-      val union = spans.map { case (lo, hi) =>
-        col("ts") >= stitchBound(lo, rawTs) && col("ts") < stitchBound(hi, rawTs)
-      }.reduce(_ || _)
-      Seq(fromRaw(transcripts.filter(union), Tier.M1)
-        .select(stitchCols.map(col): _*))
-    }
+    else Seq(fromRaw(transcripts.filter(inSpans(transcripts, "ts", spans)), Tier.M1)
+      .select(stitchCols.map(col): _*))
 
-  /** Ladder slices of [from, to) as stitch-mergeable frames, tier
-    * slices read from the STORED tables with manifest-level day
-    * pruning, raw only for sub-minute edges. See [[stitchRangeStored]]
-    * for the contract.
+  /** `c` falls in one of the disjoint `[lo, hi)` spans (non-empty),
+    * boundary literals cast to `c`'s own timestamp flavor in `df`.
+    */
+  private def inSpans(df: DataFrame, c: String,
+      spans: Seq[(java.time.LocalDateTime, java.time.LocalDateTime)]): Column = {
+    val dt = df.schema(c).dataType
+    spans.map { case (lo, hi) =>
+      col(c) >= stitchBound(lo, dt) && col(c) < stitchBound(hi, dt)
+    }.reduce(_ || _)
+  }
+
+  /** Ladder slices of [from, to) as stitch-mergeable frames: ONE read
+    * per tier table covering all of that tier's slices, pruned in the
+    * manifest to the union of their days and filtered on the OR of
+    * their `window_start` ranges; raw only for sub-minute edges. See
+    * [[stitchRangeStored]] for the contract.
     */
   private def storedParts(spark: org.apache.spark.sql.SparkSession,
       m1Table: graft.table.SnapshotTable,
@@ -647,21 +650,18 @@ object Rollup {
     }
     val slices = rangeSlices(from, to)
     // the ≤2 sub-minute raw edges aggregate in ONE combined fromRaw
-    // frame (rawEdgeParts) instead of one full scan + conv window EACH
-    val rawCombined = rawEdgeParts(transcripts,
+    // frame (rawParts) instead of one full scan + conv window EACH
+    val rawCombined = rawParts(transcripts,
       slices.collect { case ("raw", lo, hi) => (lo, hi) })
-    rawCombined ++ slices.flatMap {
-      case ("raw", _, _) => None
-      case (tier, lo, hi) =>
-        val table = tier match {
-          case "1m" => m1Table; case "1h" => h1Table; case _ => d1Table
-        }
-        val t = table.read(spark, Some(dayParts(lo, hi)))
-        if (t.columns.isEmpty) None // no committed files in range days
+    rawCombined ++ Seq("1d" -> d1Table, "1h" -> h1Table, "1m" -> m1Table).flatMap {
+      case (tier, table) =>
+        val spans = slices.collect { case (`tier`, lo, hi) => (lo, hi) }
+        if (spans.isEmpty) None
         else {
-          val wsType = t.schema("window_start").dataType
-          Some(t.filter(col("window_start") >= stitchBound(lo, wsType) &&
-              col("window_start") < stitchBound(hi, wsType))
+          val days = spans.flatMap { case (lo, hi) => dayParts(lo, hi) }.toSet
+          val t = table.read(spark, Some(days))
+          if (t.columns.isEmpty) None // no committed files in range days
+          else Some(t.filter(inSpans(t, "window_start", spans))
             .select(stitchCols.map(col): _*))
         }
     }
@@ -744,8 +744,7 @@ object Rollup {
       if (cut.isAfter(from))
         storedParts(spark, m1Table, h1Table, d1Table, transcripts, from, cut)
       else Seq.empty
-    val tail =
-      if (to.isAfter(cut)) Seq(rawPart(transcripts, cut, to)) else Seq.empty
+    val tail = rawParts(transcripts, if (to.isAfter(cut)) Seq((cut, to)) else Nil)
     stitchMerge(stored ++ tail, transcripts)
   }
 }

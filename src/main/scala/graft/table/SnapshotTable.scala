@@ -46,10 +46,13 @@ final class SnapshotTable(val root: String) {
     * and sorted on it), the Iceberg manifest column-stats analogue:
     * per-conversation reads prune to the files whose key range covers
     * the conversation, without opening any footer. Empty string = bounds
-    * unknown (file never pruned by key).
+    * unknown (file never pruned by key). `rows` is the file's record
+    * count, read from the same footer at staging (-1 = unknown: a
+    * manifest written before counts were recorded), so [[rowCount]]
+    * opens no footer for files committed with it.
     */
   final case class FileEntry(path: String, partition: String, bytes: Long,
-      minKey: String = "", maxKey: String = "")
+      minKey: String = "", maxKey: String = "", rows: Long = -1L)
   final case class Manifest(
       version: Long,
       partitionCol: String,
@@ -78,7 +81,7 @@ final class SnapshotTable(val root: String) {
 
   private def manifestJson(m: Manifest): String = {
     val files = m.files
-      .map(f => s"""{"path":"${esc(f.path)}","partition":"${esc(f.partition)}","bytes":${f.bytes},"minKey":"${esc(f.minKey)}","maxKey":"${esc(f.maxKey)}"}""")
+      .map(f => s"""{"path":"${esc(f.path)}","partition":"${esc(f.partition)}","bytes":${f.bytes},"minKey":"${esc(f.minKey)}","maxKey":"${esc(f.maxKey)}","rows":${f.rows}}""")
       .mkString("[", ",", "]")
     val keys = m.batchKeys.map(k => s""""${esc(k)}"""").mkString("[", ",", "]")
     s"""{"version":${m.version},"partitionCol":"${esc(m.partitionCol)}","clusterKey":"${esc(m.clusterKey)}","parentVersion":${m.parentVersion},"batchKeys":$keys,"files":$files}"""
@@ -93,11 +96,13 @@ final class SnapshotTable(val root: String) {
       s""""$name":"((?:[^"\\\\]|\\\\.)*)"""".r.findFirstMatchIn(src).map(m => unesc(m.group(1)))
         .getOrElse(throw new IllegalStateException(s"bad manifest: $name"))
     val fileRe = ("""\{"path":"((?:[^"\\]|\\.)*)","partition":"((?:[^"\\]|\\.)*)","bytes":(\d+)""" +
-      """(?:,"minKey":"((?:[^"\\]|\\.)*)","maxKey":"((?:[^"\\]|\\.)*)")?\}""").r
+      """(?:,"minKey":"((?:[^"\\]|\\.)*)","maxKey":"((?:[^"\\]|\\.)*)")?""" +
+      """(?:,"rows":(-?\d+))?\}""").r
     val files = fileRe.findAllMatchIn(json).map { m =>
       FileEntry(unesc(m.group(1)), unesc(m.group(2)), m.group(3).toLong,
         Option(m.group(4)).map(unesc).getOrElse(""),
-        Option(m.group(5)).map(unesc).getOrElse(""))
+        Option(m.group(5)).map(unesc).getOrElse(""),
+        Option(m.group(6)).map(_.toLong).getOrElse(-1L))
     }.toSeq
     val clusterKey = // absent in pre-stats manifests
       """"clusterKey":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(json)
@@ -160,7 +165,9 @@ final class SnapshotTable(val root: String) {
 
   /** Read the current snapshot, optionally pruned to a partition subset
     * BEFORE any file is opened (manifest-level partition pruning — the
-    * 100 TB path never lists or opens expired/foreign partitions).
+    * 100 TB path never lists or opens expired/foreign partitions). Lazy:
+    * no Spark job runs before an action on the result (see
+    * [[readFiles]] for where the schema comes from).
     */
   def read(spark: SparkSession, partitions: Option[Set[String]] = None): DataFrame =
     readFiles(spark, planFiles(partitions))
@@ -208,9 +215,21 @@ final class SnapshotTable(val root: String) {
     }
   }
 
+  /** Read exactly `files` with the Spark schema stored in the FIRST
+    * file's footer ([[ParquetFooters.sparkSchema]], one in-process
+    * footer open) — the file Spark's own inference would read first, so
+    * the schema is the same, while a bare `spark.read.parquet(paths)`
+    * would start a schema-inference JOB on every call (one per tier
+    * read of a stitch query). No job runs before an action. A file whose
+    * footer has no Spark schema fails, naming it; there is no fallback
+    * to inference. No files → a zero-column empty frame.
+    */
   def readFiles(spark: SparkSession, files: Seq[FileEntry]): DataFrame =
     if (files.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(files.map(_.path): _*)
+    else spark.read
+      .schema(ParquetFooters.sparkSchema(
+        files.head.path, spark.sparkContext.hadoopConfiguration))
+      .parquet(files.map(_.path): _*)
 
   /** Point lookup by clustering key: manifest key-range pruning BEFORE
     * any file is opened, then the parquet-level filter. Throws when the
@@ -302,10 +321,8 @@ final class SnapshotTable(val root: String) {
         Files.list(dir).iterator().asScala.toSeq
           .filter(_.getFileName.toString.endsWith(".parquet"))
           .map { f =>
-            val (lo, hi) =
-              if (clusterKey.isEmpty) ("", "")
-              else keyBounds(f.toString, clusterKey, conf)
-            FileEntry(f.toString, part, Files.size(f), lo, hi)
+            val (lo, hi, rows) = footerStats(f.toString, clusterKey, conf)
+            FileEntry(f.toString, part, Files.size(f), lo, hi, rows)
           }
       }
     (stage, entries)
@@ -331,19 +348,17 @@ final class SnapshotTable(val root: String) {
     sb.toString
   }
 
-  /** Clustering-key bounds of one parquet file, from row-group footer
-    * statistics only (no data pages read) — the write-side cost of the
-    * manifest column-stats analogue. BINARY (string) keys only: footer
-    * stats are ordered by unsigned UTF-8 bytes, and a numeric key's
-    * minAsString would prune lexicographically ('10' < '9'), so any
-    * non-BINARY physical type yields empty bounds (file never pruned).
+  /** Clustering-key bounds and record count of one parquet file, from
+    * ONE footer open (row-group statistics only, no data pages read) —
+    * the write-side cost of the manifest column-stats analogue. Bounds
+    * for BINARY (string) keys only: footer stats are ordered by
+    * unsigned UTF-8 bytes, and a numeric key's minAsString would prune
+    * lexicographically ('10' < '9'), so any non-BINARY physical type,
+    * or no `column` at all, yields empty bounds (file never pruned).
     */
-  private def keyBounds(path: String, column: String,
-      conf: org.apache.hadoop.conf.Configuration): (String, String) = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
+  private def footerStats(path: String, column: String,
+      conf: org.apache.hadoop.conf.Configuration): (String, String, Long) =
+    ParquetFooters.withFooter(path, conf) { r =>
       var lo: String = null
       var hi: String = null
       var nonBinary = false
@@ -365,10 +380,9 @@ final class SnapshotTable(val root: String) {
             }
           }
       }
-      if (nonBinary) ("", "")
-      else (Option(lo).getOrElse(""), Option(hi).getOrElse(""))
-    } finally r.close()
-  }
+      if (nonBinary || lo == null) ("", "", r.getRecordCount)
+      else (lo, hi, r.getRecordCount)
+    }
 
   /** Replace exactly the partitions present in `df` (dynamic partition
     * overwrite = the idempotent MERGE of rollup windows).
@@ -390,13 +404,15 @@ final class SnapshotTable(val root: String) {
     } finally releaseStage(stage)
   }
 
-  /** Row count of a set of committed files from parquet FOOTER metadata
-    * only — read driver-side via parquet-hadoop, no Spark job at all
-    * (a Spark count() costs a full job-schedule round trip per tier).
+  /** Row count of a set of committed files: the counts the manifest
+    * recorded at staging, and parquet FOOTER metadata (in-process, no
+    * Spark job) only for files whose count is unknown — a Spark count()
+    * costs a full job-schedule round trip per tier.
     */
   def rowCount(spark: SparkSession, files: Seq[FileEntry]): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    files.map(f => ParquetFooters.fileRowCount(f.path, conf)).sum
+    lazy val conf = spark.sparkContext.hadoopConfiguration
+    files.map(f =>
+      if (f.rows >= 0) f.rows else ParquetFooters.fileRowCount(f.path, conf)).sum
   }
 
   /** Append-only commit. `batchKey`: a streaming micro-batch's
@@ -456,7 +472,7 @@ final class SnapshotTable(val root: String) {
     val stagedAll = scala.collection.mutable.ArrayBuffer[(Path, Seq[FileEntry])]()
     try {
       frag.toSeq.foreach { case (_, files) =>
-        val df = spark.read.parquet(files.map(_.path): _*).coalesce(1)
+        val df = readFiles(spark, files).coalesce(1)
         stagedAll += stageWrite(df, prev.partitionCol, prev.clusterKey)
       }
       val m = Manifest(

@@ -7,12 +7,14 @@ import ConfigModel._
 /** Mirrors the reference's config-validation rules
   * (`ConfigValidator.java:29-174`) with cases lifted from its fixture
   * configs (reference `configs/` JSON files) and the illegal-conversion
-  * table (`README.md:325-343`), plus declared reads of the reference's
-  * own test CSVs through the registry.
+  * table (`README.md:325-343`), plus declared reads through the
+  * registry of the reference's test scenarios, rebuilt from their
+  * descriptions as the CSVs in `src/test/resources/reference_tests`.
   */
 class ConfigValidatorSpec extends SparkTestBase {
 
-  private val refTests = "/root/reference/tests"
+  private val refTests =
+    java.nio.file.Paths.get(getClass.getResource("/reference_tests").toURI).toString
 
   /** standard_config.json re-expressed in the model. */
   private def standardSetting(

@@ -189,11 +189,22 @@ class StitchSpec extends SparkTestBase {
       s"expected all three tier tables in the scan set:\n${files.mkString("\n")}")
     assert(files.forall(f => f.contains("rollup_1")),
       s"only tier files may be scanned from disk:\n${files.mkString("\n")}")
-    // the 1m scans prune to the two edge days
-    val m1Files = files.filter(_.contains("rollup_1m"))
-    assert(m1Files.forall(f =>
-      f.contains("p=2024-01-03") || f.contains("p=2024-01-27")),
-      s"1m reads must prune to the edge days:\n${m1Files.mkString("\n")}")
+    // the ladder has two 1h and two 1m slices, yet each tier table is
+    // scanned ONCE: a tier's slices share one read
+    val byTier = scans.groupBy { s =>
+      val tiers = s.relation.location.inputFiles
+        .flatMap(f => "rollup_(1[mhd])".r.findFirstMatchIn(f).map(_.group(1))).toSet
+      assert(tiers.size == 1, s"a scan spans tiers $tiers")
+      tiers.head
+    }
+    assert(byTier.keySet == Set("1m", "1h", "1d") && byTier.values.forall(_.size == 1),
+      s"scans per tier: ${byTier.view.mapValues(_.size).toMap}")
+    // the 1m scan prunes to the two edge days
+    val dayRe = "p=(\\d{4}-\\d{2}-\\d{2})".r
+    val m1Days = byTier("1m").head.relation.location.inputFiles
+      .flatMap(f => dayRe.findFirstMatchIn(f).map(_.group(1))).toSet
+    assert(m1Days == Set("2024-01-03", "2024-01-27"),
+      s"1m reads must prune to the edge days: $m1Days")
   }
 
   // ---- serving mode (lagging warehouse + live raw tail) -------------------
@@ -250,6 +261,14 @@ class StitchSpec extends SparkTestBase {
     assert(plan.contains("InMemoryTableScan") || plan.contains("LocalTableScan")
       || plan.contains("ExistingRDD"),
       s"live tail must read raw transcripts:\n$plan")
+  }
+
+  test("stitchRangeServing starts no Spark job until collect") {
+    val (lo, hi) = ("2024-01-03 07:41:23", "2024-01-20 18:22:05")
+    assert(lagWh.nonEmpty) // build the warehouse outside the probe
+    val (df, jobs) = jobsStarted(serving(lo, hi))
+    assert(jobs == 0, s"the lazy serving call started $jobs job(s)")
+    assertSameRows(df, direct(lo, hi))
   }
 
   test("stitchRangeServing: late row in a CLOSED day serves the committed answer until the job heals it") {

@@ -248,6 +248,77 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(ParquetFooters.rowCount(spark, emb) == spark.read.parquet(emb).count())
   }
 
+  /** A small RollupJob warehouse: conv-clustered tier and blocks tables. */
+  private lazy val rollupWh: graft.jobs.RollupJob = {
+    val job = new graft.jobs.RollupJob(tmpDir("snap-rollup-wh"))
+    job.run(spark, graft.ingest.Synth.transcripts(
+      spark, nConvs = 12, avgTurns = 20, seed = 5L).toDF(), "snap-spec-build")
+    job
+  }
+
+  test("read takes the schema Spark would infer, from a footer (tier and blocks tables)") {
+    import graft.model.Tier
+    for (t <- Seq(rollupWh.tierTable(Tier.H1), rollupWh.blocksTable(Tier.H1))) {
+      val files = t.planFiles()
+      assert(files.size > 1, s"${t.root}: want several files, got ${files.size}")
+      assert(t.read(spark).schema == spark.read.parquet(files.map(_.path): _*).schema,
+        t.root)
+    }
+  }
+
+  test("read and readForKey start no Spark job before an action") {
+    import graft.model.Tier
+    val t = rollupWh.tierTable(Tier.M1)
+    val key = t.currentManifest.get.files.head.minKey
+    val ((all, one), jobs) = jobsStarted {
+      (t.read(spark), t.readForKey(spark, key, Some(t.partitionsOf)))
+    }
+    assert(jobs == 0, s"lazy reads started $jobs job(s)")
+    assert(all.count() > 0 && one.count() > 0)
+  }
+
+  test("a file without a Spark schema in its footer fails, naming the file") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType("message m { required int32 v; }")
+    val path = java.nio.file.Paths.get(tmpDir("snap-foreign"), "foreign.parquet").toString
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(path))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("v", 1))
+    finally w.close()
+    val t = new SnapshotTable(tmpDir("snap-foreign-table"))
+    val e = intercept[IllegalStateException](
+      t.readFiles(spark, Seq(t.FileEntry(path, "d1", java.nio.file.Files.size(
+        java.nio.file.Paths.get(path))))))
+    assert(e.getMessage.contains(path) && e.getMessage.contains(ParquetFooters.SparkSchemaKey),
+      e.getMessage)
+  }
+
+  test("row counts recorded at staging persist; unknown counts fall back to footers") {
+    val t = new SnapshotTable(tmpDir("snap-rows"))
+    val rows = (0 until 300).map(i => (i, s"d${i % 3}")).toDF("v", "p")
+    t.overwritePartitions(rows, "p", maxRecordsPerFile = 40L)
+    val files = new SnapshotTable(t.root).currentManifest.get.files
+    assert(files.forall(_.rows > 0), files)
+    assert(files.map(_.rows).sum == 300L)
+    files.foreach(f => assert(f.rows == ParquetFooters.fileRowCount(
+      f.path, spark.sparkContext.hadoopConfiguration), f))
+    // a manifest written before counts were recorded: rows = -1, and
+    // rowCount reads those files' footers instead
+    val mf = java.nio.file.Paths.get(t.root, "snapshots", s"v${t.currentVersion.get}.json")
+    val legacy = new String(java.nio.file.Files.readAllBytes(mf), "UTF-8")
+      .replaceAll(""","rows":\d+""", "")
+    java.nio.file.Files.write(mf, legacy.getBytes("UTF-8"))
+    val reopened = new SnapshotTable(t.root)
+    val unknown = reopened.currentManifest.get.files
+    assert(unknown.forall(_.rows == -1L) && unknown.map(_.path) == files.map(_.path))
+    assert(reopened.rowCount(spark, unknown) == 300L)
+    val mixed = unknown.take(1) ++
+      unknown.zip(files).drop(1).map { case (u, f) => u.copy(rows = f.rows) }
+    assert(reopened.rowCount(spark, mixed) == 300L)
+  }
+
   test("manifest batchKeys survive JSON roundtrip including escapes") {
     val t = new SnapshotTable(tmpDir("snap-keys"))
     t.append(df("a" -> 1), "p", batchKey = Some("""ck pt"odd\name-1a2b-batch-0"""))
