@@ -29,16 +29,8 @@ import org.apache.spark.sql.functions.col
   */
 object Bench {
 
-  /** `SPARK_GRAFT_BENCH_ACTION=count` restores the r1-r3 count()
-    * semantics — kept ONLY for same-phase anchoring against the old
-    * numbers (JVM-to-JVM comparisons on this host are meaningless;
-    * see BENCH/BASELINE.md variance section).
-    */
-  private val action = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "noop")
-
   private def force(df: org.apache.spark.sql.DataFrame): Unit =
-    if (action == "count") { df.count(); () }
-    else df.write.format("noop").mode("overwrite").save()
+    df.write.format("noop").mode("overwrite").save()
 
   /** A JSON number with `digits` decimals, in `Locale.ROOT` — a
     * comma-decimal default locale would emit invalid JSON (`1,234`).

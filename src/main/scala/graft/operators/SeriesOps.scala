@@ -80,14 +80,21 @@ object SeriesOps {
         col("turn_idx"),
         length(col("text")).cast("long").as("char_len"))
       .groupBy(col("conv_id"), col("window_start"))
-      .agg(
-        count(lit(1)).as("n_samples"),
-        min_by(col("char_len"), col("turn_idx")).as("open_len"),
-        max(col("char_len")).as("high_len"),
-        min(col("char_len")).as("low_len"),
-        max_by(col("char_len"), col("turn_idx")).as("close_len"))
-      .withColumn("hl_range", col("high_len") - col("low_len"))
+      .agg(ohlcAggs.head, ohlcAggs.tail: _*)
+      .withColumn("hl_range", hlRange)
   }
+
+  /** The candle aggregates over `char_len` ordered by the unique
+    * `turn_idx` — shared by [[ohlcCandles]] and its streaming sibling
+    * [[graft.streaming.StreamingRollup.ohlc]], with [[hlRange]]. */
+  private[graft] def ohlcAggs: Seq[Column] = Seq(
+    count(lit(1)).as("n_samples"),
+    min_by(col("char_len"), col("turn_idx")).as("open_len"),
+    max(col("char_len")).as("high_len"),
+    min(col("char_len")).as("low_len"),
+    max_by(col("char_len"), col("turn_idx")).as("close_len"))
+
+  private[graft] def hlRange: Column = col("high_len") - col("low_len")
 
   /** Day-over-day turn-count deltas per conversation: the daily
     * activity series with its previous-day value, absolute change, and

@@ -36,24 +36,35 @@ object Rollup {
     "char_len_max", "token_sum", "min_turn_idx", "max_turn_idx",
     "first_text", "last_text", "char_len_avg", "turn_rate")
 
-  private def derived(df: DataFrame, tier: Tier): DataFrame =
-    df.withColumn(
-        "char_len_avg",
-        col("char_len_sum") * lit(1.0) / col("turn_count"))
+  /** Mean turn length from the carried sums — recomputed at every tier
+    * and in every stitch, never averaged-of-averages. */
+  private[graft] def charLenAvg: Column =
+    col("char_len_sum") * lit(1.0) / col("turn_count")
+
+  /** Carried tier metrics → the [[columns]] tier schema: adds the
+    * derived `char_len_avg`/`turn_rate` and projects to canonical order.
+    * `df` must hold `conv_id`, `window_start` and the [[rawAggregate]]
+    * / [[mergeAggs]] outputs. */
+  private[graft] def derived(df: DataFrame, tier: Tier): DataFrame =
+    df.withColumn("char_len_avg", charLenAvg)
       .withColumn(
         "turn_rate",
         col("turn_count") * lit(1.0) / lit(tier.windowSeconds.toDouble))
       .select(columns.map(col): _*)
 
-  /** Raw turns → tier rollup. One shuffle on (conv_id, window). */
-  def fromRaw(transcripts: DataFrame, tier: Tier): DataFrame = {
-    val withLen = transcripts
+  /** Raw turns grouped by `keys` → the raw partial of every carried
+    * tier metric: the per-turn `char_len`/`tokens` measures aggregated
+    * with the 12 partials [[mergeAggs]] merges. ONE definition for
+    * [[fromRaw]], [[fromRawSalted]]'s first phase and the streaming
+    * tier ([[graft.streaming.StreamingRollup.rollup]]), so the batch
+    * and streamed tiers cannot drift. Every partial also runs in
+    * streaming state (`min_by`/`max_by` keep a (value, key) pair).
+    */
+  private[graft] def rawAggregate(turns: DataFrame, keys: Column*): DataFrame =
+    turns
       .withColumn("char_len", length(col("text")).cast("long"))
       .withColumn("tokens", size(split(col("text"), " ")).cast("long"))
-    val agg = withLen
-      .groupBy(
-        col("conv_id"),
-        window(col("ts"), tier.windowExpr).getField("start").as("window_start"))
+      .groupBy(keys: _*)
       .agg(
         count(lit(1)).as("turn_count"),
         count_if(col("role") === "user").as("user_turns"),
@@ -67,14 +78,17 @@ object Rollup {
         max(col("turn_idx")).as("max_turn_idx"),
         min_by(col("text"), col("turn_idx")).as("first_text"),
         max_by(col("text"), col("turn_idx")).as("last_text"))
-    derived(agg, tier)
-  }
+
+  /** Raw turns → tier rollup. One shuffle on (conv_id, window). */
+  def fromRaw(transcripts: DataFrame, tier: Tier): DataFrame =
+    derived(rawAggregate(transcripts, col("conv_id"),
+      window(col("ts"), tier.windowExpr).getField("start").as("window_start")), tier)
 
   /** The decomposable-merge aggregate list — counts/sums add, min/max
     * nest, first/last resolve by the carried unique
-    * `min_turn_idx`/`max_turn_idx`. ONE definition shared by
-    * [[cascade]], [[fromRawSalted]]'s final phase, and [[stitchRange]]
-    * so the three merge sites cannot drift.
+    * `min_turn_idx`/`max_turn_idx`. ONE definition shared by every
+    * merge site — [[cascade]], [[fromRawSalted]]'s final phase and
+    * [[stitchMerge]] — so they cannot drift.
     */
   private def mergeAggs: Seq[Column] = Seq(
     sum(col("turn_count")).as("turn_count"),
@@ -108,27 +122,10 @@ object Rollup {
   def fromRawSalted(transcripts: DataFrame, tier: Tier, salts: Int): DataFrame = {
     val salted = transcripts.withColumn(
       "salt", pmod(hash(col("turn_idx")), lit(salts)))
-    val withLen = salted
-      .withColumn("char_len", length(col("text")).cast("long"))
-      .withColumn("tokens", size(split(col("text"), " ")).cast("long"))
-    val phase1 = withLen
-      .groupBy(
-        col("conv_id"),
-        window(col("ts"), tier.windowExpr).getField("start").as("window_start"),
-        col("salt"))
-      .agg(
-        count(lit(1)).as("turn_count"),
-        count_if(col("role") === "user").as("user_turns"),
-        count_if(col("role") === "assistant").as("assistant_turns"),
-        count(col("tool")).as("tool_calls"),
-        sum(col("char_len")).as("char_len_sum"),
-        min(col("char_len")).as("char_len_min"),
-        max(col("char_len")).as("char_len_max"),
-        sum(col("tokens")).as("token_sum"),
-        min(col("turn_idx")).as("min_turn_idx"),
-        max(col("turn_idx")).as("max_turn_idx"),
-        min_by(col("text"), col("turn_idx")).as("first_text"),
-        max_by(col("text"), col("turn_idx")).as("last_text"))
+    val phase1 = rawAggregate(salted,
+      col("conv_id"),
+      window(col("ts"), tier.windowExpr).getField("start").as("window_start"),
+      col("salt"))
     val merged = phase1
       .groupBy(col("conv_id"), col("window_start"))
       .agg(mergeAggs.head, mergeAggs.tail: _*)
@@ -176,14 +173,17 @@ object Rollup {
       .groupBy(
         col("conv_id"),
         window(col("ts"), windowExpr, slideExpr).getField("start").as("window_start"))
-      .agg(
-        count(lit(1)).as("turn_count"),
-        count_if(col("role") === "user").as("user_turns"),
-        count(col("tool")).as("tool_calls"),
-        sum(col("char_len")).as("char_len_sum"))
-      .withColumn(
-        "char_len_avg",
-        col("char_len_sum") * lit(1.0) / col("turn_count"))
+      .agg(slidingAggs.head, slidingAggs.tail: _*)
+      .withColumn("char_len_avg", charLenAvg)
+
+  /** The aggregates [[sliding]] carries over a frame with a `char_len`
+    * column — shared with its streaming sibling
+    * [[graft.streaming.StreamingRollup.sliding]]. */
+  private[graft] def slidingAggs: Seq[Column] = Seq(
+    count(lit(1)).as("turn_count"),
+    count_if(col("role") === "user").as("user_turns"),
+    count(col("tool")).as("tool_calls"),
+    sum(col("char_len")).as("char_len_sum"))
 
   /** Fixed-width histogram of turn length per GLOBAL time window — the
     * distribution tier dashboards heat-map (who sends long messages,
@@ -512,14 +512,7 @@ object Rollup {
         t.filter(col("window_start") >= ntz(lo) && col("window_start") < ntz(hi))
           .select(stitchCols.map(col): _*)
     }
-    val unioned = parts.reduceOption(_ union _).getOrElse(
-      fromRaw(transcripts.filter(lit(false)), Tier.M1)
-        .select(stitchCols.map(col): _*))
-    unioned
-      .groupBy(col("conv_id"))
-      .agg(mergeAggs.head, mergeAggs.tail: _*)
-      .withColumn("char_len_avg",
-        col("char_len_sum") * lit(1.0) / col("turn_count"))
+    stitchMerge(parts, transcripts)
   }
 
   /** [[stitchRange]] served from STORED warehouse tiers — the
@@ -667,6 +660,11 @@ object Rollup {
     }
   }
 
+  /** The one stitch merge behind [[stitchRange]], [[stitchRangeStored]]
+    * and [[stitchRangeServing]]: slice frames in [[stitchCols]] re-summed
+    * per conversation with [[mergeAggs]]; no slices → the empty frame of
+    * the same schema.
+    */
   private def stitchMerge(parts: Seq[DataFrame],
       transcripts: DataFrame): DataFrame = {
     val unioned = parts.reduceOption(_ union _).getOrElse(
@@ -675,8 +673,7 @@ object Rollup {
     unioned
       .groupBy(col("conv_id"))
       .agg(mergeAggs.head, mergeAggs.tail: _*)
-      .withColumn("char_len_avg",
-        col("char_len_sum") * lit(1.0) / col("turn_count"))
+      .withColumn("char_len_avg", charLenAvg)
   }
 
   /** REAL-TIME serving mode — the TimescaleDB real-time-aggregate

@@ -1,6 +1,8 @@
 package graft.streaming
 
 import graft.model.Tier
+import graft.operators.SeriesOps
+import graft.rollup.Rollup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,9 +19,12 @@ import org.apache.spark.sql.types._
   * reference encodes in its per-file state machine,
   * `MigrateTask.java:79-111`).
   *
-  * The aggregate set is the decomposable subset (counts/sums/min/max —
-  * streaming state must merge incrementally); first/last text are a
-  * batch-tier concern (they ride on the unique turn_idx key there).
+  * [[rollup]] emits the batch tier schema ([[graft.rollup.Rollup.columns]])
+  * from the batch definition itself ([[graft.rollup.Rollup.rawAggregate]]
+  * then [[graft.rollup.Rollup.derived]]): every carried metric merges
+  * incrementally in streaming state — first/last text ride min_by/
+  * max_by's (value, turn_idx) pair — so an emitted window equals the
+  * batch 1m row on all columns.
   */
 object StreamingRollup {
 
@@ -35,26 +40,16 @@ object StreamingRollup {
   /** Windowed continuous aggregates with a watermark; append mode emits
     * each (conv, window) exactly once, when it can no longer change.
     */
-  def rollup(stream: DataFrame, tier: Tier, watermarkDelay: String = "10 minutes"): DataFrame =
-    stream
-      .filter(col("ts").isNotNull && col("conv_id").isNotNull)
-      .withColumn("char_len", length(col("text")).cast("long"))
-      .withWatermark("ts", watermarkDelay)
+  def rollup(stream: DataFrame, tier: Tier, watermarkDelay: String = "10 minutes"): DataFrame = {
+    val agg = Rollup.rawAggregate(
+      stream
+        .filter(col("ts").isNotNull && col("conv_id").isNotNull)
+        .withWatermark("ts", watermarkDelay),
       // group on the window STRUCT itself — the analyzer only links the
       // watermark to the window when it appears unprojected in the keys
-      .groupBy(col("conv_id"), window(col("ts"), tier.windowExpr).as("w"))
-      .agg(
-        count(lit(1)).as("turn_count"),
-        count_if(col("role") === "user").as("user_turns"),
-        count_if(col("role") === "assistant").as("assistant_turns"),
-        count(col("tool")).as("tool_calls"),
-        sum(col("char_len")).as("char_len_sum"),
-        min(col("char_len")).as("char_len_min"),
-        max(col("char_len")).as("char_len_max"))
-      .select(col("conv_id"), col("w.start").as("window_start"),
-        col("turn_count"), col("user_turns"), col("assistant_turns"),
-        col("tool_calls"), col("char_len_sum"), col("char_len_min"),
-        col("char_len_max"))
+      col("conv_id"), window(col("ts"), tier.windowExpr).as("w"))
+    Rollup.derived(agg.withColumn("window_start", col("w.start")), tier)
+  }
 
   /** Streaming sibling of [[graft.rollup.Rollup.sliding]]: overlapping
     * hopping windows computed incrementally. Spark keeps one state row
@@ -79,15 +74,10 @@ object StreamingRollup {
       .withColumn("char_len", length(col("text")).cast("long"))
       .withWatermark("ts", watermarkDelay)
       .groupBy(col("conv_id"), window(col("ts"), windowExpr, slideExpr).as("w"))
-      .agg(
-        count(lit(1)).as("turn_count"),
-        count_if(col("role") === "user").as("user_turns"),
-        count(col("tool")).as("tool_calls"),
-        sum(col("char_len")).as("char_len_sum"))
+      .agg(Rollup.slidingAggs.head, Rollup.slidingAggs.tail: _*)
       .select(col("conv_id"), col("w.start").as("window_start"),
         col("turn_count"), col("user_turns"), col("tool_calls"),
-        col("char_len_sum"),
-        (col("char_len_sum") * lit(1.0) / col("turn_count")).as("char_len_avg"))
+        col("char_len_sum"), Rollup.charLenAvg.as("char_len_avg"))
 
   /** Streaming sibling of [[graft.operators.SeriesOps.ohlcCandles]]:
     * OHLC is fully decomposable — min/max merge trivially and the
@@ -107,15 +97,10 @@ object StreamingRollup {
       .withColumn("char_len", length(col("text")).cast("long"))
       .withWatermark("ts", watermarkDelay)
       .groupBy(col("conv_id"), window(col("ts"), windowExpr).as("w"))
-      .agg(
-        count(lit(1)).as("n_samples"),
-        min_by(col("char_len"), col("turn_idx")).as("open_len"),
-        max(col("char_len")).as("high_len"),
-        min(col("char_len")).as("low_len"),
-        max_by(col("char_len"), col("turn_idx")).as("close_len"))
+      .agg(SeriesOps.ohlcAggs.head, SeriesOps.ohlcAggs.tail: _*)
       .select(col("conv_id"), col("w.start").as("window_start"),
         col("n_samples"), col("open_len"), col("high_len"), col("low_len"),
-        col("close_len"), (col("high_len") - col("low_len")).as("hl_range"))
+        col("close_len"), SeriesOps.hlRange.as("hl_range"))
 
   /** Streaming sibling of
     * [[graft.operators.SeriesOps.dailyCardinalityApprox]] — and the

@@ -253,9 +253,8 @@ class DedupSpec extends SparkTestBase {
       val pairs = es.toDF("doc_a", "doc_b")
       val got = Dedup.components(pairs).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // shared union-by-min union-find reference (root == component
-      // min id) — one implementation, used here and by the scale probe
-      val uf = new graft.jobs.UnionFindRef
+      // union-by-min union-find reference (root == component min id)
+      val uf = new UnionFindRef
       es.foreach { case (a, b) => uf.union(a, b) }
       val want = es.flatMap(p => Seq(p._1, p._2)).distinct
         .map(d => d -> uf.find(d)).toMap

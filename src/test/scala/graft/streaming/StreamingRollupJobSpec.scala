@@ -25,11 +25,11 @@ class StreamingRollupJobSpec extends SparkTestBase {
     val stored = table.read(spark).drop("p")
     val emitted = stored.count()
     assert(emitted > 0, "watermark should have closed windows into the table")
-    // every stored window matches the batch rollup exactly (decomposable subset)
+    // the stream stores the batch tier schema
+    assert(stored.columns.toSeq == Rollup.columns)
+    // every stored window matches the batch rollup exactly, on all columns
     val batch = Rollup.fromRaw(turns, Tier.M1)
-      .select(stored.columns.map(org.apache.spark.sql.functions.col): _*)
-    assert(stored.join(batch, stored.columns, "inner").count() == emitted,
-      "stored windows must be batch-identical")
+    assert(stored.exceptAll(batch).isEmpty, "stored windows must be batch-identical")
     // lineage rows recorded per committed batch under the STREAM
     // namespace (never the batch planner's tier key), rows exact
     val state = new StateStore(s"$wh/_state")
@@ -79,8 +79,7 @@ class StreamingRollupJobSpec extends SparkTestBase {
     assert(dups.isEmpty, s"duplicated windows: ${dups.head(3).mkString(",")}")
     // every stored window matches the batch rollup over the FULL input
     val batch = Rollup.fromRaw(all.drop("r"), Tier.M1)
-      .select(stored.columns.map(col): _*)
-    assert(stored.join(batch, stored.columns, "inner").count() == stored.count(),
+    assert(stored.exceptAll(batch).isEmpty,
       "stored windows must be batch-identical after restart")
     assert(stored.count() > 0)
   }
