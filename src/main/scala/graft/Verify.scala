@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.matching.Regex
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -37,22 +38,16 @@ object Verify {
         // queries' caches stack up in one session
         spark.sharedState.cacheManager.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => re.findFirstIn(k).isDefined }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(re))
     spark.stop()
+  }
+
+  /** `oracle_sql.json`: query name → DuckDB SQL for the oracle queries
+    * whose name `re` matches (substring match), one JSON object.
+    */
+  private[graft] def oracleJson(re: Regex): String = {
+    val o = Json.mapper.createObjectNode()
+    SparkEntry.oracleSql.foreach { case (k, v) => if (re.findFirstIn(k).isDefined) o.put(k, v) }
+    Json.mapper.writeValueAsString(o)
   }
 }

@@ -1,7 +1,11 @@
 package graft.ingest
 
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.JsonNode
+import graft.Json
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Declared multi-source ingest settings for the TRANSCRIPT pipeline —
   * the config surface behind `RollupMain --source settings:<json>`, the
@@ -9,8 +13,9 @@ import java.nio.file.{Files, Paths}
   * (`Main.java:36-60`: load config, validate, then run every declared
   * `CsvSettings` with per-setting status rows).
   *
-  * JSON shape (flat objects, engine-owned — no external parser deps,
-  * same hand-rolled approach as the SnapshotTable manifest):
+  * JSON shape (standard JSON, read with the engine's one codec
+  * [[graft.Json]]; paths go to `spark.read.csv` verbatim, so globs such
+  * as `part-[0-9].csv` or `{a,b}.csv` work):
   *
   * {{{
   * {"settings": [
@@ -47,21 +52,17 @@ object TranscriptSettings {
   private def fail(msg: String): Nothing = throw new IllegalArgumentException(msg)
 
   private[graft] def parse(json: String): Seq[Setting] = {
-    val arr = """"settings"\s*:\s*\[([\s\S]*)\]""".r.findFirstMatchIn(json)
-      .getOrElse(fail("settings json: missing \"settings\" array"))
-      .group(1)
-    // setting objects are flat (no nested braces), so brace matching is
-    // a simple non-greedy scan
-    val objs = """\{[^{}]*\}""".r.findAllIn(arr).toSeq
-    if (objs.isEmpty) fail("settings json: empty \"settings\" array")
-    objs.map { obj =>
-      def strField(name: String): Option[String] =
-        (s""""$name"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""").r
-          .findFirstMatchIn(obj).map(m => unesc(m.group(1)))
-      val paths = s""""paths"\\s*:\\s*\\[([^\\]]*)\\]""".r.findFirstMatchIn(obj)
-        .map(m => """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(m.group(1))
-          .map(g => unesc(g.group(1))).toSeq)
-        .getOrElse(Seq.empty)
+    val root =
+      try Json.mapper.readTree(json)
+      catch { case e: JsonProcessingException => fail(s"settings json: ${e.getOriginalMessage}") }
+    val arr = root.path("settings")
+    if (!arr.isArray) fail("settings json: missing \"settings\" array")
+    if (arr.isEmpty) fail("settings json: empty \"settings\" array")
+    arr.asScala.toSeq.map { obj =>
+      def str(name: String, v: JsonNode): String =
+        if (v.isTextual) v.asText else fail(s"settings json: \"$name\" must hold strings")
+      def strField(name: String): Option[String] = Option(obj.get(name)).map(str(name, _))
+      val paths = obj.path("paths").asScala.map(str("paths", _)).toSeq
       if (paths.isEmpty) fail("settings json: each setting needs a non-empty \"paths\" array")
       val fmt = strField("tsFormat").getOrElse("ISO") match {
         case "ISO" => CsvSource.Iso
@@ -75,41 +76,5 @@ object TranscriptSettings {
       Setting(paths, strField("delimiter").getOrElse(","),
         strField("quote").getOrElse("\""), fmt)
     }
-  }
-
-  private def unesc(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        // full JSON escape set — this file is USER-written json (unlike
-        // the engine-written manifests, whose escaper only ever emits
-        // \" \\ \n \uXXXX): a TSV setting declares {"delimiter": "\t"},
-        // and dropping the backslash would split rows on the letter 't'
-        s.charAt(i + 1) match {
-          case '"' => sb += '"'; i += 2
-          case '\\' => sb += '\\'; i += 2
-          case '/' => sb += '/'; i += 2
-          case 'n' => sb += '\n'; i += 2
-          case 't' => sb += '\t'; i += 2
-          case 'r' => sb += '\r'; i += 2
-          case 'b' => sb += '\b'; i += 2
-          case 'f' => sb += '\f'; i += 2
-          case 'u' =>
-            // validate before parsing: a truncated or non-hex (or
-            // signed — parseInt accepts '-') sequence must be the same
-            // pointed settings-json error as every other bad escape
-            if (i + 6 > s.length ||
-                !s.substring(i + 2, i + 6).forall(c =>
-                  ('0' to '9').contains(c) || ('a' to 'f').contains(c) ||
-                  ('A' to 'F').contains(c)))
-              fail(s"settings json: bad \\u escape near '${s.substring(i)}'")
-            sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-          case other => fail(s"settings json: unknown escape '\\$other'")
-        }
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
   }
 }

@@ -165,150 +165,109 @@ final class RollupJob(
       // census moved has late arrivals the plain anti-join would skip
       val dayRawN = okStats.map(r => r.getString(1) -> r.getLong(2)).toMap
 
-      val results = scala.collection.mutable.ArrayBuffer[TierResult]()
-      var finerParts: Set[String] = Set.empty
+      def rawFor(target: Seq[String]): DataFrame =
+        // skip the per-row day filter when every partition is a target
+        // (the common first-run case) — it costs a date_format + N-way
+        // isin over every input row
+        if (target.size == rawParts.size) valid
+        else valid.filter(dayOf(col("ts")).isin(target: _*))
 
-      for (tier <- Tier.cascade) {
-        val done = state.completedPartitions(tier.name)
-        // day partitions align across tiers (1m/1h/1d windows nest in days)
-        val allParts = tier match {
-          case Tier.M1 => rawParts
-          case _ => finerParts
-        }
+      /** The per-tier commit step, shared by the cascade tiers and the
+        * block tier: plan the target days of `allParts`, compute them
+        * with `frame`, commit through [[commitWithRetry]], then write
+        * checkpoints, lineage and metrics. Returns the result and the
+        * poisoned partitions (excluded from planning).
+        */
+      def commitTier(name: String, allParts: Set[String], table: SnapshotTable)(
+          frame: Seq[String] => DataFrame): (TierResult, Set[String]) = {
+        val done = state.completedPartitions(name)
         // cross-run retry cap: skip partitions poisoned by repeated
         // failed runs (latest lineage FAILED, retryCount >= cap)
-        val poisoned = state.failedRetryCounts(tier.name)
+        val poisoned = state.failedRetryCounts(name)
           .filter(_._2 >= maxCrossRunRetries).keySet
         if (poisoned.nonEmpty) {
-          state.log("WARNING", tier.name,
+          state.log("WARNING", name,
             s"skipping ${poisoned.size} poisoned partition(s) after " +
               s"$maxCrossRunRetries failed runs: ${poisoned.toSeq.sorted.mkString(",")}",
             jobId)
           state.commitMetrics(Seq(state.MetricsRow(
-            jobId, tier.name, 0, poisoned.size, state.nextSeq())))
+            jobId, name, 0, poisoned.size, state.nextSeq())))
         }
         // late-data backfill: COMPLETED days whose raw census moved are
         // dirty — pulled back into the target set and recomputed through
         // the same idempotent partition overwrite the resume path uses.
         // Every tier compares its OWN recorded census, so a kill between
         // tiers cannot strand a coarser tier on stale finer data.
-        val dirty = state.dirtyPartitions(tier.name, dayRawN)
+        val dirty = state.dirtyPartitions(name, dayRawN)
           .intersect(allParts) -- poisoned
         if (dirty.nonEmpty)
-          state.log("WARNING", tier.name,
+          state.log("WARNING", name,
             s"${dirty.size} closed day(s) have late arrivals; recomputing: " +
               dirty.toSeq.sorted.mkString(","), jobId)
         val target = (allParts -- done -- poisoned ++ dirty).toSeq.sorted
-        phase(s"tier ${tier.name}: ${target.size} target partitions planned")
-        if (target.nonEmpty) {
-          val tierDf = tier match {
-            case Tier.M1 =>
-              // skip the per-row day filter when every partition is a
-              // target (the common first-run case) — it costs a
-              // date_format + N-way isin over every input row
-              val src =
-                if (target.size == allParts.size) valid
-                else valid.filter(dayOf(col("ts")).isin(target: _*))
-              Rollup.fromRaw(src, Tier.M1)
+        phase(s"tier $name: ${target.size} target partitions planned")
+        if (target.isEmpty) return (TierResult(name, Seq.empty, 0L), poisoned)
+        // cluster the write by day via RANGE partitioning on
+        // (p, conv_id): sampling balances task row counts even when
+        // day sizes are skewed or the day count is below / barely
+        // above the task count (hash-by-day left cores idle on few
+        // days and straggled on hot days), while contiguous ranges
+        // keep each day in O(1) files — not tasks×days small files.
+        // Sorted for parquet encoding locality; the row count
+        // afterwards comes from the committed files' parquet FOOTERS
+        // (metadata-only) — never recompute the aggregation.
+        val withP = writeClustered(spark,
+          frame(target).withColumn("p", dayOf(col("window_start"))))
+        phase(s"tier $name: computing + staging write")
+        val rows = commitWithRetry(name, jobId, target) {
+          val manifest = table.overwritePartitions(withP, "p", clusterKey = "conv_id")
+          table.rowCount(spark, manifest.files.filter(f => target.contains(f.partition)))
+        }
+        phase(s"tier $name: committed $rows rows")
+        state.log("INFO", name,
+          s"committed $rows rows across ${target.size} partition(s)", jobId)
+        // per-partition checkpoint: closed days are COMPLETED
+        state.commitCheckpoints(target.map { p =>
+          val dayEndUs = (java.time.LocalDate.parse(p).plusDays(1)
+            .atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond) * 1000000L
+          state.Checkpoint(name, p, watermarkUs,
+            if (dayEndUs <= watermarkUs) "COMPLETED" else "IN_PROGRESS", jobId,
+            state.nextSeq(), dayRawN.getOrElse(p, -1L))
+        })
+        state.commitLineage(target.map(p => state.LineageRow(
+          name, p, "COMPLETED", "", 0, rows, jobId, state.nextSeq())))
+        state.commitMetrics(Seq(state.MetricsRow(
+          jobId, name, rows, 0, state.nextSeq())))
+        (TierResult(name, target, rows), poisoned)
+      }
+
+      val results = scala.collection.mutable.ArrayBuffer[TierResult]()
+      // day partitions align across tiers (1m/1h/1d windows nest in days)
+      var finerParts = rawParts
+      for (tier <- Tier.cascade) {
+        val (result, poisoned) = commitTier(tier.name, finerParts, tierTable(tier)) {
+          target => tier match {
+            case Tier.M1 => Rollup.fromRaw(rawFor(target), Tier.M1)
             case t =>
               val finer = Tier.cascade(Tier.cascade.indexOf(t) - 1)
-              val src = tierTable(finer).read(spark, Some(target.toSet))
-              Rollup.cascade(src, t)
+              Rollup.cascade(tierTable(finer).read(spark, Some(target.toSet)), t)
           }
-          // cluster the write by day via RANGE partitioning on
-          // (p, conv_id): sampling balances task row counts even when
-          // day sizes are skewed or the day count is below / barely
-          // above the task count (hash-by-day left cores idle on few
-          // days and straggled on hot days), while contiguous ranges
-          // keep each day in O(1) files — not tasks×days small files.
-          // Sorted for parquet encoding locality; the row count
-          // afterwards comes from the committed files' parquet FOOTERS
-          // (metadata-only) — never recompute the aggregation.
-          val withP = writeClustered(spark,
-            tierDf.withColumn("p", dayOf(col("window_start"))))
-          phase(s"tier ${tier.name}: computing + staging write")
-          val rows = commitWithRetry(tier.name, jobId, target) {
-            val table = tierTable(tier)
-            val manifest = table.overwritePartitions(withP, "p", clusterKey = "conv_id")
-            val committed = manifest.files.filter(f => target.contains(f.partition))
-            table.rowCount(spark, committed)
-          }
-          phase(s"tier ${tier.name}: committed $rows rows")
-          state.log("INFO", tier.name,
-            s"committed $rows rows across ${target.size} partition(s)", jobId)
-          // per-partition checkpoint: closed days are COMPLETED
-          val cps = target.map { p =>
-            val dayEndUs = (java.time.LocalDate.parse(p).plusDays(1)
-              .atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond) * 1000000L
-            val closed = dayEndUs <= watermarkUs
-            state.Checkpoint(tier.name, p, watermarkUs,
-              if (closed) "COMPLETED" else "IN_PROGRESS", jobId,
-              state.nextSeq(), dayRawN.getOrElse(p, -1L))
-          }
-          state.commitCheckpoints(cps)
-          state.commitLineage(target.map(p => state.LineageRow(
-            tier.name, p, "COMPLETED", "", 0, rows, jobId, state.nextSeq())))
-          state.commitMetrics(Seq(state.MetricsRow(
-            jobId, tier.name, rows, 0, state.nextSeq())))
-          results += TierResult(tier.name, target, rows)
-        } else {
-          results += TierResult(tier.name, Seq.empty, 0L)
         }
+        results += result
         // downstream tiers only see partitions that exist at this tier —
         // a poisoned partition must not be read (empty) one level up
-        finerParts = allParts -- poisoned
+        finerParts = finerParts -- poisoned
         if (killAfterTier.contains(tier.name))
           throw new SimulatedKill(s"killed after tier ${tier.name}")
       }
 
       // encoded block tier (Gorilla/DoD binary columns per (conv, 1h
-      // window)) — same commit protocol, own checkpoint stream, so the
-      // raw tier is droppable after retention without losing
-      // point-level answers.
-      {
-        val done = state.completedPartitions("blocks_1h")
-        val poisoned = state.failedRetryCounts("blocks_1h")
-          .filter(_._2 >= maxCrossRunRetries).keySet
-        if (poisoned.nonEmpty)
-          state.log("WARNING", "blocks_1h",
-            s"skipping ${poisoned.size} poisoned partition(s)", jobId)
-        val dirty = state.dirtyPartitions("blocks_1h", dayRawN)
-          .intersect(rawParts) -- poisoned
-        if (dirty.nonEmpty)
-          state.log("WARNING", "blocks_1h",
-            s"${dirty.size} closed day(s) have late arrivals; recomputing: " +
-              dirty.toSeq.sorted.mkString(","), jobId)
-        val target = (rawParts -- done -- poisoned ++ dirty).toSeq.sorted
-        phase(s"tier blocks_1h: ${target.size} target partitions planned")
-        if (target.nonEmpty) {
-          val src =
-            if (target.size == rawParts.size) valid
-            else valid.filter(dayOf(col("ts")).isin(target: _*))
-          val blocks = writeClustered(spark,
-            graft.rollup.BlockRollup.encode(src, Tier.H1)
-              .withColumn("p", dayOf(col("window_start"))))
-          val rows = commitWithRetry("blocks_1h", jobId, target) {
-            val table = blocksTable(Tier.H1)
-            val manifest = table.overwritePartitions(blocks, "p", clusterKey = "conv_id")
-            table.rowCount(spark, manifest.files.filter(f => target.contains(f.partition)))
-          }
-          phase(s"tier blocks_1h: committed $rows rows")
-          state.commitCheckpoints(target.map { p =>
-            val dayEndUs = (java.time.LocalDate.parse(p).plusDays(1)
-              .atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond) * 1000000L
-            state.Checkpoint("blocks_1h", p, watermarkUs,
-              if (dayEndUs <= watermarkUs) "COMPLETED" else "IN_PROGRESS",
-              jobId, state.nextSeq(), dayRawN.getOrElse(p, -1L))
-          })
-          state.commitLineage(target.map(p => state.LineageRow(
-            "blocks_1h", p, "COMPLETED", "", 0, rows, jobId, state.nextSeq())))
-          state.commitMetrics(Seq(state.MetricsRow(
-            jobId, "blocks_1h", rows, 0, state.nextSeq())))
-          results += TierResult("blocks_1h", target, rows)
-        } else {
-          results += TierResult("blocks_1h", Seq.empty, 0L)
-        }
-      }
+      // window)) — same commit step, own checkpoint stream, computed
+      // from raw, so the raw tier is droppable after retention without
+      // losing point-level answers.
+      results += commitTier("blocks_1h", rawParts, blocksTable(Tier.H1)) { target =>
+        graft.rollup.BlockRollup.encode(rawFor(target), Tier.H1)
+      }._1
       results.toSeq
     }
   }

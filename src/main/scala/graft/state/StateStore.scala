@@ -1,7 +1,10 @@
 package graft.state
 
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.JsonNode
+import graft.Json
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** Checkpoint / lineage / metrics state, mirroring the reference's H2
@@ -86,12 +89,8 @@ class StateStore(root: String) {
       f <- Files.list(dir(kind)).iterator().asScala.toSeq
       if !f.getFileName.toString.startsWith(".")
     } yield f
-    val rowSeqs = for {
-      f <- entries
-      line <- Files.readAllLines(f).asScala
-      m <- """"seq":(\d+)""".r.findFirstMatchIn(line)
-    } yield m.group(1).toLong
-    // file-NAME seqs count too: writeLines/compactKind consume counter
+    val rowSeqs = entries.flatMap(fileRows).map(_.path("seq").asLong)
+    // file-NAME seqs count too: writeRows/compactKind consume counter
     // values for names beyond any row seq, and a compaction snapshot
     // written as the process's LAST act has a name-seq ABOVE every row
     // inside it — seeding from rows alone would let the next process
@@ -103,28 +102,34 @@ class StateStore(root: String) {
 
   def nextSeq(): Long = seqCounter.incrementAndGet()
 
-  private def esc(s: String): String =
-    Option(s).getOrElse("").flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
-
-  private def writeFile(kind: String, name: String, lines: Seq[String]): Unit = {
+  private def writeFile(kind: String, name: String, rows: Seq[JsonNode]): Unit = {
     Files.createDirectories(dir(kind))
     val tmp = dir(kind).resolve(s".$name.tmp")
-    Files.write(tmp, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, rows.map(Json.mapper.writeValueAsString)
+      .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, dir(kind).resolve(name), StandardCopyOption.ATOMIC_MOVE)
   }
 
-  private def writeLines(kind: String, lines: Seq[String]): Unit = {
-    if (lines.isEmpty) return
+  private def writeRows(kind: String, rows: Seq[JsonNode]): Unit = {
+    if (rows.isEmpty) return
     // incrementAndGet (not get): file-name seqs are strictly monotone
     // within a process, so a compaction snapshot's name-seq strictly
     // bounds every file it absorbed and every later commit exceeds it
     writeFile(kind,
       f"commit-${seqCounter.incrementAndGet()}%012d-${java.util.UUID.randomUUID()}.jsonl",
-      lines)
+      rows)
   }
+
+  /** One file's rows: each line is one JSON object, key order = the
+    * `commit*` writers' (the on-disk format).
+    */
+  private def fileRows(f: Path): Seq[JsonNode] =
+    Files.readAllLines(f).asScala.toSeq.map { line =>
+      val row = try Json.mapper.readTree(line) catch { case _: JsonProcessingException => null }
+      if (row == null || !row.isObject)
+        throw new IllegalStateException(s"state file $f: not a JSON object: $line")
+      row
+    }
 
   private def nameSeq(name: String): Long =
     name.stripPrefix("commit-").takeWhile(_.isDigit) match {
@@ -154,8 +159,7 @@ class StateStore(root: String) {
     kept.sortBy(_.getFileName.toString)
   }
 
-  private def readLines(kind: String): Seq[String] =
-    effectiveFiles(kind).flatMap(f => Files.readAllLines(f).asScala)
+  private def readRows(kind: String): Seq[JsonNode] = effectiveFiles(kind).flatMap(fileRows)
 
   private val kinds = Seq("checkpoints", "lineage", "metrics", "logs")
 
@@ -188,16 +192,16 @@ class StateStore(root: String) {
     }
     if (effective.size < 2 &&
         !effective.exists(f => !f.getFileName.toString.contains("-compact-"))) return
-    val lines = effective.flatMap(f => Files.readAllLines(f).asScala)
-    if (lines.isEmpty) return
+    val all = effective.flatMap(fileRows)
+    if (all.isEmpty) return
     val retained = kind match {
       case "checkpoints" | "lineage" =>
         // latest-wins per (tier, partition) — the only read semantics
         // these kinds have; preserve seq order for determinism
-        lines.groupBy(l => (field(l, "tier"), field(l, "partition")))
-          .map { case (_, vs) => vs.maxBy(l => numField(l, "seq")) }
-          .toSeq.sortBy(l => numField(l, "seq"))
-      case _ => lines // metrics sum, logs are the human record: keep all
+        all.groupBy(r => (r.path("tier").asText, r.path("partition").asText))
+          .map { case (_, vs) => vs.maxBy(_.path("seq").asLong) }
+          .toSeq.sortBy(_.path("seq").asLong)
+      case _ => all // metrics sum, logs are the human record: keep all
     }
     val name =
       f"commit-${seqCounter.incrementAndGet()}%012d-compact-${java.util.UUID.randomUUID()}.jsonl"
@@ -208,32 +212,23 @@ class StateStore(root: String) {
     effective.foreach(Files.deleteIfExists(_))
   }
 
-  private def field(line: String, name: String): String =
-    s""""$name":"((?:[^"\\\\]|\\\\.)*)"""".r.findFirstMatchIn(line).map(_.group(1))
-      .getOrElse("")
-
-  private def numField(line: String, name: String): Long =
-    s""""$name":(-?\\d+)""".r.findFirstMatchIn(line).map(_.group(1).toLong).getOrElse(0L)
-
-  private def numFieldOr(line: String, name: String, default: Long): Long =
-    s""""$name":(-?\\d+)""".r.findFirstMatchIn(line)
-      .map(_.group(1).toLong).getOrElse(default)
-
   // --- checkpoints ----------------------------------------------------
 
   def commitCheckpoints(cps: Seq[Checkpoint]): Unit =
-    writeLines("checkpoints", cps.map(c =>
-      s"""{"tier":"${esc(c.tier)}","partition":"${esc(c.partition)}","watermarkUs":${c.watermarkUs},"status":"${esc(c.status)}","jobId":"${esc(c.jobId)}","seq":${c.seq},"rawCount":${c.rawCount}}"""))
+    writeRows("checkpoints", cps.map(c => Json.mapper.createObjectNode()
+      .put("tier", c.tier).put("partition", c.partition).put("watermarkUs", c.watermarkUs)
+      .put("status", c.status).put("jobId", c.jobId).put("seq", c.seq)
+      .put("rawCount", c.rawCount)))
 
   /** Latest checkpoint per (tier, partition), by seq. */
   def checkpoints: Map[(String, String), Checkpoint] =
-    readLines("checkpoints")
-      .map(l => Checkpoint(field(l, "tier"), field(l, "partition"),
-        numField(l, "watermarkUs"), field(l, "status"), field(l, "jobId"),
-        numField(l, "seq"),
+    readRows("checkpoints")
+      .map(r => Checkpoint(r.path("tier").asText, r.path("partition").asText,
+        r.path("watermarkUs").asLong, r.path("status").asText, r.path("jobId").asText,
+        r.path("seq").asLong,
         // pre-rawCount lines read as unknown, not as count 0 — an
         // upgraded store must not mark every old closed day dirty
-        numFieldOr(l, "rawCount", -1L)))
+        r.path("rawCount").asLong(-1L)))
       .groupBy(c => (c.tier, c.partition))
       .map { case (k, vs) => k -> vs.maxBy(_.seq) }
 
@@ -271,14 +266,16 @@ class StateStore(root: String) {
   // --- lineage ----------------------------------------------------------
 
   def commitLineage(rows: Seq[LineageRow]): Unit =
-    writeLines("lineage", rows.map(r =>
-      s"""{"tier":"${esc(r.tier)}","partition":"${esc(r.partition)}","status":"${esc(r.status)}","error":"${esc(r.error)}","retryCount":${r.retryCount},"rows":${r.rows},"jobId":"${esc(r.jobId)}","seq":${r.seq}}"""))
+    writeRows("lineage", rows.map(r => Json.mapper.createObjectNode()
+      .put("tier", r.tier).put("partition", r.partition).put("status", r.status)
+      .put("error", r.error).put("retryCount", r.retryCount).put("rows", r.rows)
+      .put("jobId", r.jobId).put("seq", r.seq)))
 
   def lineage: Seq[LineageRow] =
-    readLines("lineage").map(l => LineageRow(
-      field(l, "tier"), field(l, "partition"), field(l, "status"),
-      field(l, "error"), numField(l, "retryCount").toInt, numField(l, "rows"),
-      field(l, "jobId"), numField(l, "seq")))
+    readRows("lineage").map(r => LineageRow(
+      r.path("tier").asText, r.path("partition").asText, r.path("status").asText,
+      r.path("error").asText, r.path("retryCount").asInt, r.path("rows").asLong,
+      r.path("jobId").asText, r.path("seq").asLong))
 
   /** Latest lineage row per (tier, partition). */
   def latestLineage: Map[(String, String), LineageRow] =
@@ -288,13 +285,14 @@ class StateStore(root: String) {
   // --- metrics ----------------------------------------------------------
 
   def commitMetrics(rows: Seq[MetricsRow]): Unit =
-    writeLines("metrics", rows.map(r =>
-      s"""{"jobId":"${esc(r.jobId)}","tier":"${esc(r.tier)}","processed":${r.processed},"failed":${r.failed},"seq":${r.seq}}"""))
+    writeRows("metrics", rows.map(r => Json.mapper.createObjectNode()
+      .put("jobId", r.jobId).put("tier", r.tier).put("processed", r.processed)
+      .put("failed", r.failed).put("seq", r.seq)))
 
   def metrics: Seq[MetricsRow] =
-    readLines("metrics").map(l => MetricsRow(
-      field(l, "jobId"), field(l, "tier"), numField(l, "processed"),
-      numField(l, "failed"), numField(l, "seq")))
+    readRows("metrics").map(r => MetricsRow(
+      r.path("jobId").asText, r.path("tier").asText, r.path("processed").asLong,
+      r.path("failed").asLong, r.path("seq").asLong))
 
   // --- leveled migration log -------------------------------------------
 
@@ -317,13 +315,14 @@ class StateStore(root: String) {
   }
 
   def commitLogs(rows: Seq[LogRow]): Unit =
-    writeLines("logs", rows.map(r =>
-      s"""{"tsMs":${r.tsMs},"level":"${esc(r.level)}","tier":"${esc(r.tier)}","message":"${esc(r.message)}","jobId":"${esc(r.jobId)}","seq":${r.seq}}"""))
+    writeRows("logs", rows.map(r => Json.mapper.createObjectNode()
+      .put("tsMs", r.tsMs).put("level", r.level).put("tier", r.tier)
+      .put("message", r.message).put("jobId", r.jobId).put("seq", r.seq)))
 
   def logs: Seq[LogRow] =
-    readLines("logs").map(l => LogRow(
-      numField(l, "tsMs"), field(l, "level"), field(l, "tier"),
-      field(l, "message"), field(l, "jobId"), numField(l, "seq")))
+    readRows("logs").map(r => LogRow(
+      r.path("tsMs").asLong, r.path("level").asText, r.path("tier").asText,
+      r.path("message").asText, r.path("jobId").asText, r.path("seq").asLong))
 
   /** Cross-run retry state: partitions of `tier` whose LATEST lineage is
     * FAILED, with their accumulated failed-run count — the resume

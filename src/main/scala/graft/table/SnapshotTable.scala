@@ -1,5 +1,7 @@
 package graft.table
 
+import com.fasterxml.jackson.databind.JsonNode
+import graft.Json
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -71,67 +73,38 @@ final class SnapshotTable(val root: String) {
         */
       batchKeys: Seq[String] = Seq.empty)
 
-  // --- manifest (de)serialization: tiny hand-rolled JSON, no deps ----
+  // --- manifest (de)serialization ------------------------------------
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
-
-  private def manifestJson(m: Manifest): String = {
-    val files = m.files
-      .map(f => s"""{"path":"${esc(f.path)}","partition":"${esc(f.partition)}","bytes":${f.bytes},"minKey":"${esc(f.minKey)}","maxKey":"${esc(f.maxKey)}","rows":${f.rows}}""")
-      .mkString("[", ",", "]")
-    val keys = m.batchKeys.map(k => s""""${esc(k)}"""").mkString("[", ",", "]")
-    s"""{"version":${m.version},"partitionCol":"${esc(m.partitionCol)}","clusterKey":"${esc(m.clusterKey)}","parentVersion":${m.parentVersion},"batchKeys":$keys,"files":$files}"""
+  /** The manifest's on-disk JSON (compact; key order is the format). */
+  private[graft] def manifestJson(m: Manifest): String = {
+    val o = Json.mapper.createObjectNode()
+      .put("version", m.version).put("partitionCol", m.partitionCol)
+      .put("clusterKey", m.clusterKey).put("parentVersion", m.parentVersion)
+    val keys = o.putArray("batchKeys")
+    m.batchKeys.foreach(k => keys.add(k))
+    val files = o.putArray("files")
+    m.files.foreach(f => files.addObject()
+      .put("path", f.path).put("partition", f.partition).put("bytes", f.bytes)
+      .put("minKey", f.minKey).put("maxKey", f.maxKey).put("rows", f.rows))
+    Json.mapper.writeValueAsString(o)
   }
 
+  /** Absent optional fields (manifests written before they existed)
+    * read as their defaults; a missing required field fails, naming it.
+    */
   private def parseManifest(json: String): Manifest = {
-    // fields are engine-written with known shapes; a minimal parser is safe
-    def longField(name: String): Long =
-      s""""$name":(-?\\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
-        .getOrElse(throw new IllegalStateException(s"bad manifest: $name"))
-    def strField(src: String, name: String): String =
-      s""""$name":"((?:[^"\\\\]|\\\\.)*)"""".r.findFirstMatchIn(src).map(m => unesc(m.group(1)))
-        .getOrElse(throw new IllegalStateException(s"bad manifest: $name"))
-    val fileRe = ("""\{"path":"((?:[^"\\]|\\.)*)","partition":"((?:[^"\\]|\\.)*)","bytes":(\d+)""" +
-      """(?:,"minKey":"((?:[^"\\]|\\.)*)","maxKey":"((?:[^"\\]|\\.)*)")?""" +
-      """(?:,"rows":(-?\d+))?\}""").r
-    val files = fileRe.findAllMatchIn(json).map { m =>
-      FileEntry(unesc(m.group(1)), unesc(m.group(2)), m.group(3).toLong,
-        Option(m.group(4)).map(unesc).getOrElse(""),
-        Option(m.group(5)).map(unesc).getOrElse(""),
-        Option(m.group(6)).map(_.toLong).getOrElse(-1L))
-    }.toSeq
-    val clusterKey = // absent in pre-stats manifests
-      """"clusterKey":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(json)
-        .map(m => unesc(m.group(1))).getOrElse("")
-    val batchKeys = // absent in pre-streaming manifests
-      """"batchKeys":\[((?:[^\]"]|"(?:[^"\\]|\\.)*")*)\]""".r.findFirstMatchIn(json)
-        .map(m => """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(m.group(1))
-          .map(g => unesc(g.group(1))).toSeq)
-        .getOrElse(Seq.empty)
-    Manifest(longField("version"), strField(json, "partitionCol"), files,
-      longField("parentVersion"), clusterKey, batchKeys)
-  }
-
-  private def unesc(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => sb += '"'; i += 2
-          case '\\' => sb += '\\'; i += 2
-          case 'n' => sb += '\n'; i += 2
-          case 'u' => sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-          case other => sb += other; i += 2
-        }
-      } else { sb += c; i += 1 }
+    def req(o: JsonNode, name: String): JsonNode = {
+      val v = o.get(name)
+      if (v == null || v.isNull) throw new IllegalStateException(s"bad manifest: $name")
+      v
     }
-    sb.toString
+    val m = Json.mapper.readTree(json)
+    val files = m.path("files").asScala.map(f => FileEntry(
+      req(f, "path").asText, req(f, "partition").asText, req(f, "bytes").asLong,
+      f.path("minKey").asText(""), f.path("maxKey").asText(""), f.path("rows").asLong(-1L)))
+    Manifest(req(m, "version").asLong, req(m, "partitionCol").asText, files.toSeq,
+      req(m, "parentVersion").asLong, m.path("clusterKey").asText(""),
+      m.path("batchKeys").asScala.map(_.asText).toSeq)
   }
 
   // --- snapshot pointer ----------------------------------------------

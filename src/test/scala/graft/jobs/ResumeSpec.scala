@@ -188,54 +188,65 @@ class ResumeSpec extends SparkTestBase {
   }
 
   test("a partition poisoned across maxCrossRunRetries runs is excluded and surfaced") {
-    val wh = tmpDir("wh-poison")
     val input = freshInput()
-    // three runs that fail terminally at the 1m commit (no in-process
-    // retries) accumulate per-partition FAILED lineage with rising counts
-    for (i <- 1 to 3) {
-      val bad = new RollupJob(wh, maxRetries = 0, maxCrossRunRetries = 3)
-      bad.commitFault = (tier, _) =>
-        if (tier == "1m") throw new RuntimeException("poisoned input")
-      intercept[RuntimeException](bad.run(spark, input, s"bad-$i"))
+    // the cascade tiers and the block tier share one commit step, so a
+    // fault at either poisons, surfaces and resets the same way
+    for (faultTier <- Seq("1m", "blocks_1h")) {
+      val wh = tmpDir(s"wh-poison-$faultTier")
+      // three runs that fail terminally at the faulted commit (no
+      // in-process retries) accumulate per-partition FAILED lineage
+      // with rising counts
+      for (i <- 1 to 3) {
+        val bad = new RollupJob(wh, maxRetries = 0, maxCrossRunRetries = 3)
+        bad.commitFault = (tier, _) =>
+          if (tier == faultTier) throw new RuntimeException("poisoned input")
+        intercept[RuntimeException](bad.run(spark, input, s"bad-$i"))
+      }
+      val counts = new RollupJob(wh).state.failedRetryCounts(faultTier)
+      assert(counts.nonEmpty && counts.values.forall(_ == 3), s"$faultTier: got $counts")
+
+      // the next (healthy) run skips the poisoned partitions entirely...
+      val healthy = new RollupJob(wh, maxCrossRunRetries = 3)
+      val res = healthy.run(spark, input, "healthy")
+      assert(res.find(_.tier == faultTier).get.partitions.isEmpty)
+      if (faultTier == "1m") {
+        // ...and downstream tiers don't try to read never-written data
+        assert(res.find(_.tier == "1h").get.partitions.isEmpty)
+        // blocks_1h is computed from raw, independent of the poisoned tier
+        assert(res.find(_.tier == "blocks_1h").get.rows > 0)
+      } else {
+        // ...while the cascade tiers, which never read blocks, completed
+        assert(healthy.state.completedPartitions("1d").nonEmpty)
+      }
+      // surfaced: WARNING log naming the partitions + a failed-count metric
+      val warn = healthy.state.logs.find(l =>
+        l.level == "WARNING" && l.tier == faultTier && l.message.contains("poisoned"))
+      assert(warn.nonEmpty, s"logs: ${healthy.state.logs}")
+      assert(healthy.state.metrics.exists(m =>
+        m.jobId == "healthy" && m.tier == faultTier && m.failed == counts.size),
+        s"$faultTier metrics: ${healthy.state.metrics}")
+
+      // recovery path: a poisoned partition is EXCLUDED from planning, so
+      // no run can self-heal it — the explicit reset (the reference
+      // operator's manual row_processing status reset) clears the poison
+      // and the next run, at the SAME cap, processes it to COMPLETED
+      val reset = healthy.resetPoisoned(faultTier, "reset-job")
+      assert(reset.toSet == counts.keySet, s"reset $reset vs poisoned ${counts.keySet}")
+      assert(healthy.resetPoisoned(faultTier).isEmpty) // idempotent: nothing left
+
+      // a post-reset failure counts from 1 again (not 4): the partitions
+      // stay below the cap, so the subsequent healthy run — still at the
+      // SAME cap — plans and completes them
+      val again = new RollupJob(wh, maxRetries = 0, maxCrossRunRetries = 3)
+      again.commitFault = (tier, _) =>
+        if (tier == faultTier) throw new RuntimeException("fresh fault")
+      intercept[RuntimeException](again.run(spark, input, "again"))
+      assert(again.state.failedRetryCounts(faultTier).values.forall(_ == 1))
+      val retried = new RollupJob(wh, maxCrossRunRetries = 3)
+      val res2 = retried.run(spark, input, "retried")
+      assert(res2.find(_.tier == faultTier).get.rows > 0)
+      assert(retried.state.failedRetryCounts(faultTier).isEmpty)
     }
-    val counts = new RollupJob(wh).state.failedRetryCounts("1m")
-    assert(counts.nonEmpty && counts.values.forall(_ == 3), s"got $counts")
-
-    // the next (healthy) run skips the poisoned partitions entirely...
-    val healthy = new RollupJob(wh, maxCrossRunRetries = 3)
-    val res = healthy.run(spark, input, "healthy")
-    assert(res.find(_.tier == "1m").get.partitions.isEmpty)
-    // ...and downstream tiers don't try to read never-written data
-    assert(res.find(_.tier == "1h").get.partitions.isEmpty)
-    // blocks_1h is computed from raw, independent of the poisoned tier
-    assert(res.find(_.tier == "blocks_1h").get.rows > 0)
-    // surfaced: WARNING log naming the partitions + a failed-count metric
-    val warn = healthy.state.logs.find(l =>
-      l.level == "WARNING" && l.tier == "1m" && l.message.contains("poisoned"))
-    assert(warn.nonEmpty, s"logs: ${healthy.state.logs}")
-    assert(healthy.state.metrics.exists(m =>
-      m.jobId == "healthy" && m.tier == "1m" && m.failed == counts.size))
-
-    // recovery path: a poisoned partition is EXCLUDED from planning, so
-    // no run can self-heal it — the explicit reset (the reference
-    // operator's manual row_processing status reset) clears the poison
-    // and the next run, at the SAME cap, processes it to COMPLETED
-    val reset = healthy.resetPoisoned("1m", "reset-job")
-    assert(reset.toSet == counts.keySet, s"reset $reset vs poisoned ${counts.keySet}")
-    assert(healthy.resetPoisoned("1m").isEmpty) // idempotent: nothing left
-
-    // a post-reset failure counts from 1 again (not 4): the partitions
-    // stay below the cap, so the subsequent healthy run — still at the
-    // SAME cap — plans and completes them
-    val again = new RollupJob(wh, maxRetries = 0, maxCrossRunRetries = 3)
-    again.commitFault = (tier, _) =>
-      if (tier == "1m") throw new RuntimeException("fresh fault")
-    intercept[RuntimeException](again.run(spark, input, "again"))
-    assert(again.state.failedRetryCounts("1m").values.forall(_ == 1))
-    val retried = new RollupJob(wh, maxCrossRunRetries = 3)
-    val res2 = retried.run(spark, input, "retried")
-    assert(res2.find(_.tier == "1m").get.rows > 0)
-    assert(retried.state.failedRetryCounts("1m").isEmpty)
   }
 
   test("precision-loss warnings route into the log stream") {

@@ -120,5 +120,19 @@ class SettingsMainSpec extends SparkTestBase {
       assert(intercept[IllegalArgumentException](TranscriptSettings.parse(
         s"""{"settings": [{"paths": ["x.csv"], "delimiter": "$bad"}]}"""))
         .getMessage.contains("settings json"), bad)
+    // paths reach spark.read.csv verbatim, so glob brackets and braces
+    // (and a brace inside any other string) load as the exact strings
+    val globs = TranscriptSettings.parse(
+      """{"settings": [{"paths": ["/data/part-[0-9].csv", "/data/{a,b}.csv"],
+        |"tsFormat": "CUSTOM", "pattern": "yyyy-MM-dd'}'HH:mm"}]}""".stripMargin)
+    assert(globs.head.paths == Seq("/data/part-[0-9].csv", "/data/{a,b}.csv"))
+    assert(globs.head.tsFormat == graft.ingest.CsvSource.Custom("yyyy-MM-dd'}'HH:mm", "UTC"))
+    // a document that is not JSON, or a non-string where a string
+    // belongs, is a settings-json error too
+    for (bad <- Seq("""{"settings": [""", "settings", """{"settings": [{"paths": ["a.csv"]}""",
+        """{"settings": [{"paths": [1]}]}""",
+        """{"settings": [{"paths": ["a.csv"], "delimiter": null}]}"""))
+      assert(intercept[IllegalArgumentException](TranscriptSettings.parse(bad))
+        .getMessage.startsWith("settings json:"), bad)
   }
 }

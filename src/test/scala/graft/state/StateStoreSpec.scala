@@ -147,6 +147,25 @@ class StateStoreSpec extends AnyFunSuite {
     assert(snapshot(s) == before)
   }
 
+  test("lineage errors and log messages read back as the exact strings written") {
+    val root = tmp()
+    val s = new StateStore(root)
+    val texts = Seq("boom \"q\" back\\slash\nline2", "tab\there, \\n is not a newline",
+      "ctl \u0001 ünïcødé 🙂")
+    texts.zipWithIndex.foreach { case (t, i) =>
+      s.commitLineage(Seq(s.LineageRow("t", s"p$i", "FAILED", t, 1, 0L, "j", s.nextSeq())))
+      s.log("ERROR", "t", t, "j")
+    }
+    def check(st: StateStore, when: String): Unit = {
+      assert(texts.indices.map(i => st.latestLineage(("t", s"p$i")).error) == texts, when)
+      assert(st.logs.sortBy(_.seq).map(_.message) == texts, when)
+    }
+    check(s, "as committed")
+    s.compact()
+    check(s, "after compact")
+    check(new StateStore(root), "after reopen")
+  }
+
   test("compactIfNeeded is a no-op below the threshold and compacts above it") {
     val root = tmp()
     val s = new StateStore(root)
