@@ -22,14 +22,15 @@ import org.apache.spark.sql.functions.col
   * Rounds 1-3 timed `count()`, which lets Catalyst prune any column
   * the count doesn't need — for pure-projection queries that elides
   * the OPERATOR under test (q17's asof window, q12's sha2, q10's
-  * casts measured near-zero; same probe bug fixed in ScaleProbe r4).
+  * casts measured near-zero).
   * r4+ numbers are therefore full-evaluation and NOT comparable to
   * r1-r3 for map-heavy queries; BENCH/BASELINE.md records a same-
   * binary both-semantics anchor.
   */
 object Bench {
 
-  private def force(df: org.apache.spark.sql.DataFrame): Unit =
+  /** Full evaluation of `df`'s plan through the noop sink, writing nothing. */
+  private[graft] def force(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
   /** A JSON number with `digits` decimals, in `Locale.ROOT` — a
@@ -42,17 +43,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val benchTurns = sys.env.getOrElse("SPARK_GRAFT_BENCH_TURNS", "2000000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-bench", cpus)
 
     def timed[A](body: => A): Double = {
       val t0 = System.nanoTime()
@@ -130,5 +121,23 @@ object Bench {
         System.err.println(s"[bench] could not write $p: ${e.getMessage}") }
     }
     spark.stop()
+  }
+
+  /** The benchmark session: master `local[cpus]`, shuffle partitions =
+    * cpus, AQE with partition coalescing and skew joins, UTC, no UI.
+    */
+  private[graft] def session(appName: String, cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

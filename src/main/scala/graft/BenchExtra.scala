@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Focused benchmark runner — guide §1.4 noop-sink isolation for a
   * SUBSET of the declared queries, repeated. The driver contract lives
   * in [[Bench]] (frozen); this main exists so optimization work can
@@ -13,8 +11,10 @@ import org.apache.spark.sql.SparkSession
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
   *      SPARK_GRAFT_CPUS (default 32, master local[N]),
   *      SPARK_GRAFT_REPS (default 3).
-  * Methodology matches Bench: same session conf, one uncounted warmup
-  * of each query, then timed noop-sink reps with cache cleared between.
+  * Methodology matches Bench, whose session and noop-sink `force` it
+  * uses: one uncounted warmup of each query, then timed noop-sink reps
+  * with cache cleared between. Running it under SPARK_GRAFT_CPUS=N and
+  * =4N gives a per-query scaling pair.
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -22,20 +22,9 @@ object BenchExtra {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session("graft-bench-extra", cpus)
     def force(name: String): Unit = {
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      Bench.force(SparkEntry.queries(name)(spark, sfDir))
       spark.sharedState.cacheManager.clearCache()
     }
     val out = names.map { name =>

@@ -6,10 +6,9 @@ import scala.util.matching.Regex
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional third arg: a query-name regex (substring match), the
-    // ScaleProbe stage-filter convention — lets a dev loop re-check
-    // one family without dumping the whole suite. Driver calls use
-    // two args, so the driver path is unchanged (full dump).
+    // optional third arg: a query-name regex (substring match) — lets
+    // a dev loop re-check one family without dumping the whole suite;
+    // with two args every query is dumped.
     val (sfDir, outDir, nameFilter) = args match {
       case Array(sf, out)    => (sf, out, ".*")
       case Array(sf, out, f) => (sf, out, f)

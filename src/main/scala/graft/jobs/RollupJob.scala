@@ -83,8 +83,9 @@ final class RollupJob(
 
   /** The ONE write-stage layout for every tier commit: RANGE
     * partitioning on (day, conv_id) + within-partition sort (the
-    * WriteProbe-measured winner — balanced tasks under day skew,
-    * O(1) files per day, parquet encoding locality), with an optional
+    * measured winner, BENCH/BASELINE.md "Writer-cap A/B" — balanced
+    * tasks under day skew, O(1) files per day, pairwise disjoint
+    * conv_id ranges per day, parquet encoding locality), with an optional
     * WRITER-TASK cap `spark.graft.write.tasks`. The cap exists
     * because parquet write tasks are the one stage whose cost is NOT
     * CPU-bound on this class of host: each writer thread faults JVM

@@ -28,11 +28,7 @@ import org.apache.spark.sql.SparkSession
 object RollupMain {
 
   def main(args: Array[String]): Unit = {
-    val opts = parseArgs(args)
-    val warehouse = opts.getOrElse("warehouse",
-      sys.error("--warehouse is required"))
-    val source = opts.getOrElse("source", "synth:100:100:42")
-    val jobId = opts.getOrElse("job-id", s"rollup-${java.util.UUID.randomUUID()}")
+    val Args(warehouse, source, jobId, retentionWatermark) = parseArgs(args)
 
     val builder = SparkSession.builder().appName("graft-rollup")
       .config("spark.sql.session.timeZone", "UTC")
@@ -70,26 +66,6 @@ object RollupMain {
       case other => sys.error(s"unknown --source: $other")
     }
 
-    // --warmup true: run the identical pipeline once into a scratch
-    // warehouse first (deleted afterwards), then measure. A JVM's first
-    // heavy pass pays a 3-7x cold page-fault penalty on this host
-    // (BENCH/BASELINE.md variance section; WriteProbe round-1 vs
-    // round-2 evidence) that has nothing to do with engine scaling;
-    // real clusters run long-lived executors, which the warm run models.
-    if (opts.get("warmup").contains("true")) {
-      val scratch = s"$warehouse.warmup"
-      val tw = System.nanoTime()
-      // finally: a failed warmup must not leak the scratch tree; Hadoop
-      // FileSystem resolves URI/non-local warehouse paths correctly
-      try {
-        new RollupJob(scratch).run(spark, input, s"$jobId-warmup")
-        println(f"[rollup] warmup wall=${(System.nanoTime() - tw) / 1e9}%.2fs")
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(scratch)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      }
-    }
-
     val job = new RollupJob(warehouse)
     val t0 = System.nanoTime()
     val results = job.run(spark, input, jobId)
@@ -110,7 +86,7 @@ object RollupMain {
     jobLogs.filter(l => l.level == "WARNING" || l.level == "ERROR")
       .foreach(l => println(s"[rollup] ${l.level} ${l.tier}: ${l.message}"))
 
-    opts.get("retention-watermark").foreach { day =>
+    retentionWatermark.foreach { day =>
       val policy = Retention.Policy()
       for (t <- Tier.cascade) {
         val dropped = Retention.expire(job.tierTable(t), t.name, day, policy)
@@ -172,8 +148,41 @@ object RollupMain {
     }
   }
 
-  private def parseArgs(args: Array[String]): Map[String, String] =
-    args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
-    }.toMap
+  final case class Args(warehouse: String, source: String, jobId: String,
+      retentionWatermark: Option[String])
+
+  private val flags = Set("warehouse", "source", "job-id", "retention-watermark")
+
+  /** Every flag, parsed and validated before a session exists: an
+    * unknown or repeated flag, a flag without a value, a stray argument,
+    * a missing `--warehouse` or a watermark that is not an ISO day
+    * (yyyy-MM-dd) throws an IllegalArgumentException naming the flag —
+    * none of them is dropped silently, and a bad watermark fails before
+    * any tier commits rather than inside `Retention.expire` after all of
+    * them.
+    */
+  private[jobs] def parseArgs(args: Array[String]): Args = {
+    def bad(msg: String) = throw new IllegalArgumentException(msg)
+    val opts = args.grouped(2).foldLeft(Map.empty[String, String]) {
+      case (acc, Array(k, v)) if k.startsWith("--") && !v.startsWith("--") =>
+        val name = k.stripPrefix("--")
+        if (!flags.contains(name)) bad(s"unknown flag $k")
+        if (acc.contains(name)) bad(s"flag $k given twice")
+        acc + (name -> v)
+      case (_, Array(k, _*)) if k.startsWith("--") => bad(s"flag $k needs a value")
+      case (_, kv) => bad(s"unexpected argument '${kv.head}' (flags are --name value)")
+    }
+    val day = opts.get("retention-watermark")
+    day.foreach { d =>
+      try java.time.LocalDate.parse(d)
+      catch { case e: java.time.format.DateTimeParseException =>
+        throw new IllegalArgumentException(
+          s"--retention-watermark must be an ISO day (yyyy-MM-dd), got '$d'", e) }
+    }
+    Args(
+      opts.getOrElse("warehouse", bad("--warehouse is required")),
+      opts.getOrElse("source", "synth:100:100:42"),
+      opts.getOrElse("job-id", s"rollup-${java.util.UUID.randomUUID()}"),
+      day)
+  }
 }

@@ -4,9 +4,9 @@ import graft.ingest.Synth
 import org.apache.spark.sql.SparkSession
 
 /** Write a seeded synthetic transcripts table to parquet — the input
-  * for the N-vs-4N scaling runs (the scaling job must READ from
-  * storage, not generate inline, so both cluster sizes do identical
-  * I/O + compute work).
+  * for `RollupMain --source parquet:<path>`, e.g. an N-vs-4N scaling
+  * pair (the job must READ from storage, not generate inline, so both
+  * cluster sizes do identical I/O + compute work).
   *
   * Usage: spark-submit --class graft.jobs.SynthMain <jar> \
   *          <outPath> <nConvs> <avgTurns> <seed> [hotConvs hotFactor]

@@ -18,9 +18,9 @@ import org.apache.spark.sql.DataFrame
   * above a couple of scan splits already produce enough partitions,
   * so the gate makes this a no-op at scale — the corpus is never
   * round-robin-shuffled when it is genuinely large. When the gate
-  * fires, the exchange moves at most `spreadMaxBytes` (small by the
-  * gate's own definition) and buys `defaultParallelism`-way execution
-  * of the expensive map stage.
+  * fires, the exchange moves at most `defaultSpreadMaxBytes` (small by
+  * the gate's own definition) and buys `defaultParallelism`-way
+  * execution of the expensive map stage.
   */
 object ScanSpread {
 
@@ -28,24 +28,12 @@ object ScanSpread {
     * scan splits (2 × 128 MB `spark.sql.files.maxPartitionBytes`):
     * below it a scan yields ≲2 partitions, so the map stage would use
     * ≲2 cores; shuffling ≤256 MB to unlock full parallelism is always
-    * cheap relative to the hash work it parallelizes. Override with
-    * `spark.graft.spread.maxBytes` (0 disables).
+    * cheap relative to the hash work it parallelizes.
     */
   val defaultSpreadMaxBytes: Long = 256L * 1024 * 1024
 
-  private[operators] def spreadForCompute(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val maxBytes = spark.conf.getOption("spark.graft.spread.maxBytes")
-      .map(v => try v.toLong catch {
-        case e: NumberFormatException => throw new IllegalArgumentException(
-          s"spark.graft.spread.maxBytes must be a byte count, got '$v'", e)
-      }).getOrElse(defaultSpreadMaxBytes)
-    if (maxBytes <= 0) df
-    else {
-      val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (est <= maxBytes)
-        df.repartition(spark.sparkContext.defaultParallelism)
-      else df
-    }
-  }
+  private[operators] def spreadForCompute(df: DataFrame): DataFrame =
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= defaultSpreadMaxBytes)
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    else df
 }

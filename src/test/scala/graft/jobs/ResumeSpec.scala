@@ -45,6 +45,35 @@ class ResumeSpec extends SparkTestBase {
     }
   }
 
+  test("tier files of each committed day hold pairwise disjoint conv_id ranges") {
+    // the range layout's property: a point read (readForKey) opens at
+    // most one file per day. ~20 conversations a day (a synthetic one
+    // lasts under an hour) and 16 uncoalesced range partitions put
+    // every tier's days across several files of several conversations
+    val wh = tmpDir("wh-layout")
+    val input = Synth.transcripts(spark, nConvs = 600, avgTurns = 4, seed = 11L).toDF()
+    val confs = Map("spark.sql.shuffle.partitions" -> "16",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val saved = confs.keys.map(k => k -> spark.conf.get(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try new RollupJob(wh).run(spark, input, "layout")
+    finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    for (t <- Seq(Tier.M1, Tier.H1, Tier.D1)) {
+      val m = new graft.table.SnapshotTable(s"$wh/rollup_${t.name}").currentManifest.get
+      assert(m.clusterKey == "conv_id")
+      val perDay = m.files.groupBy(_.partition)
+      assert(perDay.values.exists(_.size > 1), s"tier ${t.name}: no day spans two files")
+      for ((day, files) <- perDay) {
+        assert(files.forall(f => f.minKey.nonEmpty && f.maxKey.nonEmpty))
+        val byMin = files.sortBy(_.minKey)
+        byMin.zip(byMin.tail).foreach { case (a, b) =>
+          assert(a.maxKey < b.minKey, s"tier ${t.name} day $day: " +
+            s"[${a.minKey}, ${a.maxKey}] overlaps [${b.minKey}, ${b.maxKey}]")
+        }
+      }
+    }
+  }
+
   test("kill after 1m tier → resume completes 1h/1d and recomputes only open partitions") {
     val wh = tmpDir("wh-resume")
     val input = freshInput()

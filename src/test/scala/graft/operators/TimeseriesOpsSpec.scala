@@ -1056,7 +1056,7 @@ class TimeseriesOpsSpec extends SparkTestBase {
       assert(e.getMessage.contains("session-timezone-dependent"), e.getMessage)
       // semantically-UTC aliases must PASS: Spark's default session zone
       // is the JVM zone, which reports 'Etc/UTC' on UTC hosts — a bare
-      // string equality crashed the XL ScaleProbe on exactly that
+      // string equality crashed a UTC-host run on exactly that
       // (measured); any zero-fixed-offset zone has identical rules
       for (alias <- Seq("Etc/UTC", "GMT", "Z", "+00:00")) {
         spark.conf.set("spark.sql.session.timeZone", alias)
