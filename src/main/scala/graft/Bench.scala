@@ -1,5 +1,7 @@
 package graft
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{DecimalNode, ObjectNode}
 import graft.ingest.Synth
 import graft.model.Tier
 import graft.rollup.Rollup
@@ -33,11 +35,30 @@ object Bench {
   private[graft] def force(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** A JSON number with `digits` decimals, in `Locale.ROOT` — a
-    * comma-decimal default locale would emit invalid JSON (`1,234`).
+  /** A JSON number with `digits` decimals, formatted in `Locale.ROOT` —
+    * a comma-decimal default locale would not parse (`1,234`).
     */
-  private[graft] def num(v: Double, digits: Int = 3): String =
-    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+  private[graft] def num(v: Double, digits: Int = 3): JsonNode =
+    DecimalNode.valueOf(new java.math.BigDecimal(
+      String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))))
+
+  /** The run's JSON line: per-query seconds, their sum, and the
+    * rollup-cascade probe's timings and turns/sec. */
+  private[graft] def jsonLine(queries: Seq[(String, Double)], sfDir: String,
+      nTurns: Long, tM1: Double, tH1: Double, tD1: Double, tBlocks: Double,
+      cpus: String): String = {
+    val o = Json.mapper.createObjectNode()
+      .put("metric", "total").put("value", queries.map(_._2).sum).put("unit", "sec")
+    val qs = o.putObject("queries")
+    queries.foreach { case (k, v) => qs.set[ObjectNode](k, num(v)) }
+    o.put("sf", sfDir).put("bench_turns", nTurns)
+      .set[ObjectNode]("rollup_1m_sec", num(tM1))
+      .set[ObjectNode]("cascade_1h_sec", num(tH1))
+      .set[ObjectNode]("cascade_1d_sec", num(tD1))
+      .set[ObjectNode]("blocks_1h_sec", num(tBlocks))
+      .set[ObjectNode]("rollup_throughput_turns_per_sec", num(nTurns / tM1, 0))
+    Json.mapper.writeValueAsString(o.put("cpus", cpus.toInt))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -93,16 +114,8 @@ object Bench {
     val tBlocks = timed(force(graft.rollup.BlockRollup.encode(
       raw.filter(col("ts").isNotNull), Tier.H1)))
     raw.unpersist(); m1.unpersist()
-    val rollupTps = nTurns / tM1
 
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + num(v) }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"""" +
-      s""","bench_turns":$nTurns,"rollup_1m_sec":${num(tM1)},"cascade_1h_sec":${num(tH1)}""" +
-      s""","cascade_1d_sec":${num(tD1)},"blocks_1h_sec":${num(tBlocks)}""" +
-      s""","rollup_throughput_turns_per_sec":${num(rollupTps, 0)},"cpus":$cpus}"""
+    val line = jsonLine(results, sfDir, nTurns, tM1, tH1, tD1, tBlocks, cpus)
     println(line)
     // the driver captures only a stdout tail, which has truncated the
     // full per-query vector in past rounds — persist the identical

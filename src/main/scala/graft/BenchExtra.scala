@@ -1,5 +1,7 @@
 package graft
 
+import com.fasterxml.jackson.databind.node.ObjectNode
+
 /** Focused benchmark runner — guide §1.4 noop-sink isolation for a
   * SUBSET of the declared queries, repeated. The driver contract lives
   * in [[Bench]] (frozen); this main exists so optimization work can
@@ -17,6 +19,19 @@ package graft
   * =4N gives a per-query scaling pair.
   */
 object BenchExtra {
+
+  /** The run's JSON line: per query, the min and median rep seconds. */
+  private[graft] def jsonLine(reps: Int, queries: Seq[(String, (Double, Double))],
+      sfDir: String, cpus: String): String = {
+    val o = Json.mapper.createObjectNode().put("metric", "focus").put("reps", reps)
+    val qs = o.putObject("queries")
+    queries.foreach { case (k, (mn, md)) =>
+      qs.putObject(k).set[ObjectNode]("min", Bench.num(mn))
+        .set[ObjectNode]("med", Bench.num(md))
+    }
+    Json.mapper.writeValueAsString(o.put("sf", sfDir).put("cpus", cpus.toInt))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -44,10 +59,7 @@ object BenchExtra {
       System.err.println(f"[bench-extra] $name min=${ts.head}%.3f med=$med%.3f")
       name -> (ts.head, med)
     }
-    val qs = out.map { case (k, (mn, md)) =>
-      "\"" + k + "\":{\"min\":" + Bench.num(mn) + ",\"med\":" + Bench.num(md) + "}"
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"focus","reps":$reps,"queries":$qs,"sf":"$sfDir","cpus":$cpus}""")
+    println(jsonLine(reps, out, sfDir, cpus))
     spark.stop()
   }
 }

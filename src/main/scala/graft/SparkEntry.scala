@@ -542,8 +542,7 @@ object SparkEntry {
     // daily lexical diversity: type-token ratio + hapax share
     "q103_type_token_ratio" -> ((s, dir) =>
       graft.operators.SeriesOps.typeTokenRatio(transcripts(s, dir))),
-    // daily digit-bucket length histogram (the drift monitor's census;
-    // streaming sibling pinned batch≡stream in StreamingRollupSpec)
+    // daily digit-bucket length histogram (the drift monitor's census)
     "q104_daily_len_histogram" -> ((s, dir) =>
       graft.operators.SeriesOps.lengthHistogramDaily(transcripts(s, dir))),
     // daily shingle novelty: first-seen 3-gram share (corpus freshness)
@@ -806,7 +805,7 @@ object SparkEntry {
       graft.operators.Curation.corpusChecksum(transcripts(s, dir))),
     // per-day checksum slice (day rows ADD up to q136's scalar; null-ts
     // rows keep a NULL day group so dirty rows stay in the parity
-    // domain); streaming sibling pinned batch≡stream
+    // domain)
     "q137_daily_checksum" -> ((s, dir) =>
       graft.operators.Curation.corpusChecksumDaily(transcripts(s, dir))),
     // classical OLS fit per conversation (slope/intercept/R²) — the

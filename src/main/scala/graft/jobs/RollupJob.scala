@@ -85,33 +85,12 @@ final class RollupJob(
     * partitioning on (day, conv_id) + within-partition sort (the
     * measured winner, BENCH/BASELINE.md "Writer-cap A/B" — balanced
     * tasks under day skew, O(1) files per day, pairwise disjoint
-    * conv_id ranges per day, parquet encoding locality), with an optional
-    * WRITER-TASK cap `spark.graft.write.tasks`. The cap exists
-    * because parquet write tasks are the one stage whose cost is NOT
-    * CPU-bound on this class of host: each writer thread faults JVM
-    * buffer pages through write(2), and those faults serialize on the
-    * process mmap_lock under Firecracker demand-paging (measured
-    * 58-63% system time at 32 writer threads — BENCH/BASELINE.md
-    * variance section). Capping the post-shuffle partition count
-    * bounds CONCURRENT WRITERS without touching upstream parallelism:
-    * the aggregation before the exchange still runs on every core,
-    * only the final write stage narrows. On a real cluster each
-    * executor owns its write path at single-digit thread counts, so
-    * the knob models exactly the regime clusters already run in;
-    * unset (default) keeps one task per shuffle partition.
+    * conv_id ranges per day, parquet encoding locality), one writer
+    * task per shuffle partition.
     */
-  private def writeClustered(spark: SparkSession,
-      withDay: DataFrame): DataFrame = {
-    val capped = spark.conf.getOption("spark.graft.write.tasks")
-      .map(v => try v.toInt catch {
-        case e: NumberFormatException => throw new IllegalArgumentException(
-          s"spark.graft.write.tasks must be a positive integer, got '$v'", e)
-      }).filter(_ > 0) match {
-      case Some(n) => withDay.repartitionByRange(n, col("p"), col("conv_id"))
-      case None => withDay.repartitionByRange(col("p"), col("conv_id"))
-    }
-    capped.sortWithinPartitions(col("conv_id"), col("window_start"))
-  }
+  private def writeClustered(withDay: DataFrame): DataFrame =
+    withDay.repartitionByRange(col("p"), col("conv_id"))
+      .sortWithinPartitions(col("conv_id"), col("window_start"))
 
   /** Run the full pipeline over a transcripts frame. `killAfterTier`
     * simulates a crash between tier commits (resume tests).
@@ -217,7 +196,7 @@ final class RollupJob(
         // Sorted for parquet encoding locality; the row count
         // afterwards comes from the committed files' parquet FOOTERS
         // (metadata-only) — never recompute the aggregation.
-        val withP = writeClustered(spark,
+        val withP = writeClustered(
           frame(target).withColumn("p", dayOf(col("window_start"))))
         phase(s"tier $name: computing + staging write")
         val rows = commitWithRetry(name, jobId, target) {

@@ -259,9 +259,8 @@ object Curation {
     */
   /** The ONE row-checksum derivation (canonical length-prefixed
     * string, epoch-µs ts → 60-bit md5 prefix as DECIMAL) shared by
-    * [[corpusChecksum]], [[corpusChecksumDaily]], and the streaming
-    * sibling [[graft.streaming.StreamingRollup.dailyChecksum]] — the
-    * single-definition doctrine: the three parity surfaces can never
+    * [[corpusChecksum]] and [[corpusChecksumDaily]] — the
+    * single-definition doctrine: the two parity surfaces can never
     * drift from each other or from the oracle's mirror.
     *
     * The encoding is INJECTIVE: each field renders as
@@ -276,7 +275,7 @@ object Curation {
     * .numChars` here, `length()` in DuckDB) — the same cross-engine
     * pin the q27 gram indexing relies on.
     */
-  private[graft] def rowChecksumCol: org.apache.spark.sql.Column = {
+  private def rowChecksumCol: org.apache.spark.sql.Column = {
     def lp(f: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       when(f.isNull, lit("N"))
         .otherwise(concat(length(f).cast("string"), lit(":"), f))

@@ -80,21 +80,14 @@ object SeriesOps {
         col("turn_idx"),
         length(col("text")).cast("long").as("char_len"))
       .groupBy(col("conv_id"), col("window_start"))
-      .agg(ohlcAggs.head, ohlcAggs.tail: _*)
-      .withColumn("hl_range", hlRange)
+      .agg(
+        count(lit(1)).as("n_samples"),
+        min_by(col("char_len"), col("turn_idx")).as("open_len"),
+        max(col("char_len")).as("high_len"),
+        min(col("char_len")).as("low_len"),
+        max_by(col("char_len"), col("turn_idx")).as("close_len"))
+      .withColumn("hl_range", col("high_len") - col("low_len"))
   }
-
-  /** The candle aggregates over `char_len` ordered by the unique
-    * `turn_idx` — shared by [[ohlcCandles]] and its streaming sibling
-    * [[graft.streaming.StreamingRollup.ohlc]], with [[hlRange]]. */
-  private[graft] def ohlcAggs: Seq[Column] = Seq(
-    count(lit(1)).as("n_samples"),
-    min_by(col("char_len"), col("turn_idx")).as("open_len"),
-    max(col("char_len")).as("high_len"),
-    min(col("char_len")).as("low_len"),
-    max_by(col("char_len"), col("turn_idx")).as("close_len"))
-
-  private[graft] def hlRange: Column = col("high_len") - col("low_len")
 
   /** Day-over-day turn-count deltas per conversation: the daily
     * activity series with its previous-day value, absolute change, and
@@ -1282,13 +1275,11 @@ object SeriesOps {
 
   /** Digit-count length bucket of `text` (exact integer text algebra,
     * no log2 float boundary) — the single definition of the histogram
-    * bucket rule shared by [[lengthHistogramDaily]], [[distDrift]],
-    * and the streaming sibling
-    * [[graft.streaming.StreamingRollup.lengthHistogram]]; the DuckDB
-    * mirror is `LENGTH(CAST(LENGTH(text) AS VARCHAR))` — change them
-    * in lockstep (the [[dayNumCol]] doctrine).
+    * bucket rule shared by [[lengthHistogramDaily]] and [[distDrift]];
+    * the DuckDB mirror is `LENGTH(CAST(LENGTH(text) AS VARCHAR))` —
+    * change them in lockstep (the [[dayNumCol]] doctrine).
     */
-  private[graft] def lenBucketCol: org.apache.spark.sql.Column =
+  private def lenBucketCol: org.apache.spark.sql.Column =
     length(length(col("text")).cast("string")).cast("long")
 
   /** Shared (day_num, term, count) census of [[termChurnDaily]] and
@@ -2087,12 +2078,10 @@ object SeriesOps {
   /** Daily turn-length histogram over [[distDrift]]'s digit-count
     * buckets — the raw (day, bucket, n) census the drift monitor
     * consumes, exposed as its own readout ("what does today's length
-    * mix look like?") and as the batch twin of the streaming sibling
-    * [[graft.streaming.StreamingRollup.lengthHistogram]]: per-bucket
-    * counts are plain sums, so the histogram MERGES across triggers /
-    * partitions where the drift statistic itself (a two-day
-    * comparison) does not stream. Exact longs only. Null ts / text
-    * drop.
+    * mix look like?"): per-bucket counts are plain sums, so the
+    * histogram MERGES across partitions where the drift statistic
+    * itself (a two-day comparison) does not. Exact longs only. Null
+    * ts / text drop.
     *
     * Scale: ONE raw scan, ONE exchange — the census
     * partial-aggregates map-side to ≤ 19 rows per (task, day).

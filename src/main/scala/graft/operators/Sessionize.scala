@@ -4,11 +4,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Gap-based sessionization — the BATCH sibling of the streaming
-  * [[graft.streaming.SessionTracker]]: a conversation's turns split
-  * into sessions wherever the inter-turn gap exceeds `gapSeconds`
-  * (session window semantics, computed declaratively instead of with
-  * state timeouts).
+/** Gap-based sessionization: a conversation's turns split into
+  * sessions wherever the inter-turn gap exceeds `gapSeconds` (session
+  * window semantics, computed declaratively instead of with state
+  * timeouts).
   *
   * Shape: one shuffle on conv_id; the lag/new-session flag and the
   * running session counter share the same (conv_id | ts, turn_idx)

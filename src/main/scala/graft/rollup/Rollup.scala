@@ -38,7 +38,7 @@ object Rollup {
 
   /** Mean turn length from the carried sums — recomputed at every tier
     * and in every stitch, never averaged-of-averages. */
-  private[graft] def charLenAvg: Column =
+  private def charLenAvg: Column =
     col("char_len_sum") * lit(1.0) / col("turn_count")
 
   /** Carried tier metrics → the [[columns]] tier schema: adds the
@@ -173,17 +173,12 @@ object Rollup {
       .groupBy(
         col("conv_id"),
         window(col("ts"), windowExpr, slideExpr).getField("start").as("window_start"))
-      .agg(slidingAggs.head, slidingAggs.tail: _*)
+      .agg(
+        count(lit(1)).as("turn_count"),
+        count_if(col("role") === "user").as("user_turns"),
+        count(col("tool")).as("tool_calls"),
+        sum(col("char_len")).as("char_len_sum"))
       .withColumn("char_len_avg", charLenAvg)
-
-  /** The aggregates [[sliding]] carries over a frame with a `char_len`
-    * column — shared with its streaming sibling
-    * [[graft.streaming.StreamingRollup.sliding]]. */
-  private[graft] def slidingAggs: Seq[Column] = Seq(
-    count(lit(1)).as("turn_count"),
-    count_if(col("role") === "user").as("user_turns"),
-    count(col("tool")).as("tool_calls"),
-    sum(col("char_len")).as("char_len_sum"))
 
   /** Fixed-width histogram of turn length per GLOBAL time window — the
     * distribution tier dashboards heat-map (who sends long messages,

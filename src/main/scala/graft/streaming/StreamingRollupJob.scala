@@ -58,9 +58,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (`MigrateTask.java:79-111`) is closed here by the atomic manifest.
   *
   * Late-data division of labor: events later than `watermarkDelay` are
-  * dropped by Structured Streaming's state eviction (measured, not
-  * guessed, via [[LateMonitor]]). They are NOT lost to the warehouse —
-  * the batch pipeline's census-based backfill
+  * dropped by Structured Streaming's state eviction. They are NOT lost
+  * to the warehouse — the batch pipeline's census-based backfill
   * ([[graft.jobs.RollupJob]] step 4: a CLOSED day whose raw census
   * moved recomputes at every tier) repairs the affected days on the
   * next batch pass over the full input. Streaming gives bounded-state
@@ -73,42 +72,28 @@ object StreamingRollupJob {
   /** Start the durable streaming rollup. The caller owns the returned
     * query (awaitTermination / stop); `checkpointDir` must be stable
     * across restarts — it is both the streaming state checkpoint AND
-    * the namespace of the sink's idempotence keys.
+    * the namespace of the sink's idempotence keys. Each micro-batch
+    * commits idempotently via [[commitBatch]]; every `compactEvery`
+    * committed batches the table and the state store are compacted.
     */
   def start(spark: SparkSession, inputDir: String, warehouse: String,
       checkpointDir: String, tier: Tier = Tier.M1,
       watermarkDelay: String = "10 minutes", jobId: String = "stream",
-      compactEvery: Int = 100, compactMaxFiles: Int = 4): StreamingQuery =
-    startSink(
-      StreamingRollup.rollup(
-        StreamingRollup.readStream(spark, inputDir), tier, watermarkDelay),
-      new StateStore(s"$warehouse/_state"),
-      new SnapshotTable(tablePath(warehouse, tier)),
-      checkpointDir, tier.name, jobId, compactEvery, compactMaxFiles,
-      dayCol = "window_start")
-
-  /** The shared exactly-once sink harness (used by this job and
-    * [[StreamingSessionJob]] — ONE implementation of the commit/
-    * compaction protocol, so a protocol fix can never apply to one
-    * streaming sink and silently miss the other): per-batch idempotent
-    * commit via [[commitBatch]], then periodic table + state-store
-    * compaction every `compactEvery` committed batches.
-    */
-  private[streaming] def startSink(stream: DataFrame, state: StateStore,
-      table: SnapshotTable, checkpointDir: String, tierName: String,
-      jobId: String, compactEvery: Int, compactMaxFiles: Int,
-      dayCol: String): StreamingQuery = {
+      compactEvery: Int = 100, compactMaxFiles: Int = 4): StreamingQuery = {
+    val state = new StateStore(s"$warehouse/_state")
+    val table = new SnapshotTable(tablePath(warehouse, tier))
     val scope = batchScope(checkpointDir)
     // read once per query start; commitBatch maintains it in memory
-    val committed = loadCommitted(state, table, tierName)
+    val committed = loadCommitted(state, table, tier.name)
     val sinceCompact = new java.util.concurrent.atomic.AtomicInteger(0)
-    stream
+    StreamingRollup.rollup(
+      StreamingRollup.readStream(spark, inputDir), tier, watermarkDelay)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val appended = commitBatch(state, table, tierName, committed, scope,
-          batch, id, jobId, dayCol)
+        val appended = commitBatch(state, table, tier.name, committed, scope,
+          batch, id, jobId)
         if (appended > 0 && compactEvery > 0 &&
             sinceCompact.incrementAndGet() >= compactEvery) {
           sinceCompact.set(0)
@@ -117,7 +102,7 @@ object StreamingRollupJob {
           // store too, or a month-long stream accretes ~10^5 tiny files
           // re-scanned at every restart and batch-job planning pass
           state.compactIfNeeded()
-          state.log("INFO", tierName, "compacted streaming table partitions", jobId)
+          state.log("INFO", tier.name, "compacted streaming table partitions", jobId)
         }
         ()
       }
@@ -176,8 +161,7 @@ object StreamingRollupJob {
     */
   private[streaming] def commitBatch(state: StateStore, table: SnapshotTable,
       tierName: String, committed: scala.collection.mutable.Set[String],
-      scope: String, batch: DataFrame, batchId: Long, jobId: String,
-      dayCol: String = "window_start"): Long = {
+      scope: String, batch: DataFrame, batchId: Long, jobId: String): Long = {
     val partition = s"$scope-batch-$batchId"
     if (committed.contains(partition)) {
       state.log("WARNING", tierName,
@@ -190,7 +174,7 @@ object StreamingRollupJob {
       // batch staged (append concatenates prev ++ staged) — no count()
       // job over the data
       val prevCount = table.currentManifest.map(_.files.size).getOrElse(0)
-      val withDay = batch.withColumn("p", date_format(col(dayCol), "yyyy-MM-dd"))
+      val withDay = batch.withColumn("p", date_format(col("window_start"), "yyyy-MM-dd"))
       val manifest = table.append(withDay, "p", batchKey = Some(partition))
       committed += partition // durable from here: the manifest holds the key
       val appended = table.rowCount(batch.sparkSession, manifest.files.drop(prevCount))

@@ -12,7 +12,7 @@ import scala.util.Using
   */
 class KnobCensusSpec extends AnyFunSuite {
 
-  private val configKeys = Set("spark.graft.write.tasks")
+  private val configKeys = Set.empty[String]
   private val envVars = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
     "SPARK_GRAFT_BENCH_TURNS", "SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_REPS")
 

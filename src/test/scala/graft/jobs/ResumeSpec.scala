@@ -24,27 +24,6 @@ class ResumeSpec extends SparkTestBase {
     assert((m1 - lastDay).values.forall(_ == "COMPLETED"))
   }
 
-  test("spark.graft.write.tasks caps writer tasks without changing any committed row") {
-    val whA = tmpDir("wh-cap-off")
-    val whB = tmpDir("wh-cap-on")
-    val input = freshInput()
-    new RollupJob(whA).run(spark, input, "cap-off")
-    spark.conf.set("spark.graft.write.tasks", "2")
-    try new RollupJob(whB).run(spark, input, "cap-on")
-    finally spark.conf.unset("spark.graft.write.tasks")
-    for (t <- Seq(Tier.M1, Tier.H1, Tier.D1)) {
-      val a = new graft.table.SnapshotTable(s"$whA/rollup_${t.name}")
-      val b = new graft.table.SnapshotTable(s"$whB/rollup_${t.name}")
-      assertSameRows(a.read(spark), b.read(spark))
-      // the cap bounds CONCURRENT WRITERS: at most 2 files per
-      // committed day partition (one per writer task that received
-      // rows of that day)
-      val perDay = b.currentManifest.get.files.groupBy(_.partition)
-      assert(perDay.values.forall(_.size <= 2),
-        s"tier ${t.name}: ${perDay.view.mapValues(_.size).toMap}")
-    }
-  }
-
   test("tier files of each committed day hold pairwise disjoint conv_id ranges") {
     // the range layout's property: a point read (readForKey) opens at
     // most one file per day. ~20 conversations a day (a synthetic one

@@ -200,4 +200,70 @@ class StreamingRollupJobSpec extends SparkTestBase {
     assert(!committed.contains("2024-03-01"),
       "batch-planner day partitions must not enter the streaming committed set")
   }
+
+  test("every compactEvery committed batches the day partition is compacted without changing a row") {
+    import spark.implicits._
+    val in = tmpDir("sj-compact-in")
+    val wh = tmpDir("sj-compact-wh")
+    val ckpt = tmpDir("sj-compact-ckpt")
+    import scala.jdk.CollectionConverters._
+    def drop(df: org.apache.spark.sql.DataFrame, tag: String): Unit = {
+      val tmp = tmpDir(s"sj-compact-stage-$tag")
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
+        .iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).next()
+      java.nio.file.Files.move(part, java.nio.file.Paths.get(in, s"$tag.parquet"))
+    }
+    def turns(rows: Seq[(String, Int, String, String, String, java.sql.Timestamp)]) =
+      rows.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val t0 = java.sql.Timestamp.valueOf("2024-03-01 10:00:00").getTime
+    // three drops into ONE day, each 20 minutes of two conversations,
+    // in event-time order: each closes windows, so each commits a batch
+    val drops = (0 until 3).map { d =>
+      turns(for (c <- Seq("c1", "c2"); j <- 0 until 10) yield {
+        val idx = d * 10 + j
+        (c, idx, if (j % 2 == 0) "user" else "assistant", s"$c turn $idx " * (1 + j % 3),
+          if (j % 4 == 3) "search" else null,
+          new java.sql.Timestamp(t0 + (d * 30 + j * 2) * 60000L))
+      })
+    }
+    // a next-day turn moves the watermark past the whole day; its own
+    // window stays open, so every stored row belongs to the one day
+    val pusher = turns(Seq(("cz", 0, "user", "late night", null,
+      java.sql.Timestamp.valueOf("2024-03-02 00:30:00"))))
+
+    val q = StreamingRollupJob.start(spark, in, wh, ckpt, Tier.M1,
+      compactEvery = 2, compactMaxFiles = 1)
+    try {
+      drops.zipWithIndex.foreach { case (df, i) => drop(df, s"d$i"); q.processAllAvailable() }
+      drop(pusher, "p"); q.processAllAvailable()
+    } finally q.stop()
+
+    val table = new SnapshotTable(StreamingRollupJob.tablePath(wh, Tier.M1))
+    val versions = (0L to table.currentVersion.get).map(table.readManifest)
+    // a compaction commit carries its parent's batch keys unchanged;
+    // every append adds its own key
+    val compactions = versions.zip(versions.tail).filter { case (prev, m) =>
+      m.batchKeys == prev.batchKeys }
+    assert(compactions.nonEmpty, s"no compaction among ${versions.size} versions")
+    for ((prev, m) <- compactions) {
+      assert(prev.files.count(_.partition == "2024-03-01") > 1)
+      assert(m.files.count(_.partition == "2024-03-01") <= 1,
+        s"v${m.version}: ${m.files.map(_.partition)}")
+      assert(m.batchKeys.nonEmpty)
+      val before = table.readFiles(spark, prev.files)
+      val after = table.readFiles(spark, m.files)
+      assert(before.exceptAll(after).isEmpty && after.exceptAll(before).isEmpty,
+        s"v${m.version}: compaction changed stored rows")
+    }
+    // the day's windows are all closed and stored exactly once
+    val stored = table.read(spark).drop("p")
+    val batch = Rollup.fromRaw(drops.reduce(_ union _), Tier.M1)
+    assert(stored.count() > 0)
+    assert(stored.exceptAll(batch).isEmpty && batch.exceptAll(stored).isEmpty,
+      "stored windows must equal the batch rollup of the closed day")
+    val state = new StateStore(s"$wh/_state")
+    assert(state.logs.exists(l => l.level == "INFO" && l.tier == "1m" &&
+      l.message == "compacted streaming table partitions"))
+  }
 }
