@@ -22,7 +22,10 @@ import org.apache.spark.sql.functions._
   *   2. compute the tier ONLY for target partitions — tier k reads the
   *      tier k-1 TABLE with manifest-level partition pruning, never raw;
   *   3. [[SnapshotTable.overwritePartitions]] — idempotent MERGE of the
-  *      recomputed partitions (rerun ⇒ same bytes, no duplicates);
+  *      recomputed partitions (rerun ⇒ same rows, no duplicates; not
+  *      always the same file bytes: the range exchange samples its
+  *      bounds with a seed taken from the RDD id, so file boundaries
+  *      move with the session's history);
   *   4. checkpoint rows: a partition is COMPLETED once it is closed
   *      (its day ends at or before the input watermark — no more data
   *      can arrive under monotone event time), else IN_PROGRESS and
@@ -72,7 +75,8 @@ final class RollupJob(
   @volatile var commitFault: (String, Int) => Unit = (_, _) => ()
   private val commitAttempts = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  final case class TierResult(tier: String, partitions: Seq[String], rows: Long)
+  /** One tier's outcome of a run (see [[RollupJob.TierResult]]). */
+  type TierResult = RollupJob.TierResult
 
   private val t0 = System.nanoTime()
   private def phase(msg: String): Unit =
@@ -186,7 +190,7 @@ final class RollupJob(
               dirty.toSeq.sorted.mkString(","), jobId)
         val target = (allParts -- done -- poisoned ++ dirty).toSeq.sorted
         phase(s"tier $name: ${target.size} target partitions planned")
-        if (target.isEmpty) return (TierResult(name, Seq.empty, 0L), poisoned)
+        if (target.isEmpty) return (RollupJob.TierResult(name, Seq.empty, 0L), poisoned)
         // cluster the write by day via RANGE partitioning on
         // (p, conv_id): sampling balances task row counts even when
         // day sizes are skewed or the day count is below / barely
@@ -218,7 +222,7 @@ final class RollupJob(
           name, p, "COMPLETED", "", 0, rows, jobId, state.nextSeq())))
         state.commitMetrics(Seq(state.MetricsRow(
           jobId, name, rows, 0, state.nextSeq())))
-        (TierResult(name, target, rows), poisoned)
+        (RollupJob.TierResult(name, target, rows), poisoned)
       }
 
       val results = scala.collection.mutable.ArrayBuffer[TierResult]()
@@ -309,6 +313,14 @@ final class RollupJob(
     }
     throw new IllegalStateException("unreachable")
   }
+}
+
+object RollupJob {
+  /** What one tier committed in a run: its recomputed partitions and
+    * rows. Top-level (not a member of the job instance), so a pattern
+    * match on it needs no outer-reference check.
+    */
+  final case class TierResult(tier: String, partitions: Seq[String], rows: Long)
 }
 
 final class SimulatedKill(msg: String) extends RuntimeException(msg)

@@ -230,33 +230,6 @@ object Curation {
       .select(col("conv_id"), col("turns"), col("char_sum"), col("digest"))
   }
 
-  /** Order-independent corpus checksum: ONE scalar row `(n_rows,
-    * checksum)` over the whole transcripts table — the corpus-parity
-    * audit at its coarsest granularity, complementing
-    * [[convFingerprint]] (one digest per conversation) with a single
-    * comparable number per warehouse/snapshot.
-    *
-    * Each row canonicalizes to a `U+0001`-joined string of all six
-    * columns (length-prefixed, null → `N` marker — see
-    * [[rowChecksumCol]]; timestamps as epoch micros), is
-    * hashed to the cross-engine 60-bit md5 prefix, and the hashes SUM
-    * as DECIMAL — addition is commutative/associative, so the checksum
-    * is independent of partitioning, row order, and engine, and shard
-    * checksums MERGE by plain addition (the [[graft.operators.Dedup.bloomBits]]
-    * artifact doctrine: per-shard audits add up to the corpus audit
-    * without a re-scan). The hashes widen to DECIMAL(28,0) before the
-    * sum so the accumulator is the full DECIMAL(38,0) — safe past
-    * 10¹⁹ rows; no overflow, no modulus needed.
-    *
-    * Detects any changed/added/dropped/duplicated row ANYWHERE with
-    * hash-collision probability ≈ n²/2⁶¹; it cannot say WHERE — that
-    * is [[convFingerprint]]'s job (drill down only when the scalars
-    * disagree).
-    *
-    * Plan: map-side hash + partial sums into a single-row final
-    * aggregate — one scan, the cheapest possible exchange (one partial
-    * row per task).
-    */
   /** The ONE row-checksum derivation (canonical length-prefixed
     * string, epoch-µs ts → 60-bit md5 prefix as DECIMAL) shared by
     * [[corpusChecksum]] and [[corpusChecksumDaily]] — the
@@ -289,6 +262,33 @@ object Curation {
     conv(substring(md5(canon), 1, 15), 16, 10).cast("decimal(20,0)")
   }
 
+  /** Order-independent corpus checksum: ONE scalar row `(n_rows,
+    * checksum)` over the whole transcripts table — the corpus-parity
+    * audit at its coarsest granularity, complementing
+    * [[convFingerprint]] (one digest per conversation) with a single
+    * comparable number per warehouse/snapshot.
+    *
+    * Each row canonicalizes to a `U+0001`-joined string of all six
+    * columns (length-prefixed, null → `N` marker — see
+    * [[rowChecksumCol]]; timestamps as epoch micros), is
+    * hashed to the cross-engine 60-bit md5 prefix, and the hashes SUM
+    * as DECIMAL — addition is commutative/associative, so the checksum
+    * is independent of partitioning, row order, and engine, and shard
+    * checksums MERGE by plain addition (the [[graft.operators.Dedup.bloomBits]]
+    * artifact doctrine: per-shard audits add up to the corpus audit
+    * without a re-scan). The hashes widen to DECIMAL(28,0) before the
+    * sum so the accumulator is the full DECIMAL(38,0) — safe past
+    * 10¹⁹ rows; no overflow, no modulus needed.
+    *
+    * Detects any changed/added/dropped/duplicated row ANYWHERE with
+    * hash-collision probability ≈ n²/2⁶¹; it cannot say WHERE — that
+    * is [[convFingerprint]]'s job (drill down only when the scalars
+    * disagree).
+    *
+    * Plan: map-side hash + partial sums into a single-row final
+    * aggregate — one scan, the cheapest possible exchange (one partial
+    * row per task).
+    */
   def corpusChecksum(transcripts: DataFrame): DataFrame = {
     TimeArith.requireUtcForNtz(transcripts, "ts")
     transcripts

@@ -18,12 +18,16 @@ object ParquetFooters {
     */
   val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
-  /** Open one file's footer, apply `f`, close. */
+  /** Open one file's footer, apply `f`, close. The reader takes its
+    * options from `conf`: `ParquetFileReader.open(in)` would build and
+    * parse a fresh Hadoop `Configuration` on every open.
+    */
   private[table] def withFooter[A](path: String, conf: org.apache.hadoop.conf.Configuration)(
       f: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(path), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      in, org.apache.parquet.HadoopReadOptions.builder(conf).build())
     try f(r) finally r.close()
   }
 

@@ -282,6 +282,11 @@ final class SnapshotTable(val root: String) {
     // commits into one file (0 = let split sizing decide)
     val writer = df.withColumn("_p", col(partitionCol).cast("string"))
       .write.partitionBy("_p")
+      // Spark copies writer options into the write job's Hadoop conf: the
+      // staged files go through the fork-free local FS, and the cache flag
+      // makes Hadoop honour the class over the session's cached file:// FS
+      .option("fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
     (if (maxRecordsPerFile > 0)
       writer.option("maxRecordsPerFile", maxRecordsPerFile)
     else writer).parquet(stage.toString)

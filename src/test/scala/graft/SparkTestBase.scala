@@ -54,6 +54,26 @@ trait SparkTestBase extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** `body`'s result and the command line of every child process the
+    * JVM started meanwhile, from an in-process JFR recording of
+    * `jdk.ProcessStart` events.
+    */
+  def processStarts[A](body: => A): (A, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val out = try body finally rec.stop()
+      val dump = java.nio.file.Files.createTempFile("process-starts", ".jfr")
+      try {
+        rec.dump(dump)
+        (out, jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+          .map(_.getString("command")).toSeq)
+      } finally java.nio.file.Files.deleteIfExists(dump)
+    } finally rec.close()
+  }
+
   /** Frames equal as multisets of rows (string-rendered for NaN safety). */
   def assertSameRows(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
     val ca = a.columns.sorted

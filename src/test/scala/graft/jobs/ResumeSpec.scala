@@ -195,6 +195,25 @@ class ResumeSpec extends SparkTestBase {
     assert(warns.exists(_.message.contains("rejected")), s"got: ${job.state.logs}")
   }
 
+  test("a multi-day run with rejects starts no child process on its warehouse") {
+    // without libhadoop, Hadoop's local FS chmods each created file and
+    // directory through a `chmod` child process; staged writes must not
+    val wh = tmpDir("wh-nofork")
+    val input = Synth.transcripts(spark, nConvs = 12, avgTurns = 40, seed = 11L,
+      nullTsEvery = 7).toDF()
+    val job = new RollupJob(wh)
+    val (res, commands) = processStarts {
+      val r = job.run(spark, input, "job-nofork")
+      // control: the recording sees a child process that names wh
+      new ProcessBuilder("test", "-d", wh).start().waitFor()
+      r
+    }
+    assert(res.find(_.tier == "1m").get.partitions.size > 1)
+    assert(job.rejectsTable.read(spark).count() > 0)
+    val onWarehouse = commands.filter(_.contains(wh))
+    assert(onWarehouse == Seq(s"test -d $wh"), s"child processes on the warehouse: $onWarehouse")
+  }
+
   test("a partition poisoned across maxCrossRunRetries runs is excluded and surfaced") {
     val input = freshInput()
     // the cascade tiers and the block tier share one commit step, so a

@@ -337,4 +337,73 @@ class SnapshotTableSpec extends SparkTestBase {
     t.compact(spark, maxFiles = 0)
     assert(t.currentManifest.get.batchKeys.size == 2, "compact must keep batchKeys")
   }
+
+  test("staged files keep Hadoop's modes and checksums") {
+    import java.nio.file.{Files, Path}
+    import java.nio.file.attribute.PosixFilePermissions
+    import scala.jdk.CollectionConverters._
+    val t = new SnapshotTable(tmpDir("snap-modes"))
+    t.overwritePartitions(df("a" -> 1, "b" -> 2), "p")
+    def mode(p: Path) = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    val stage = java.nio.file.Paths.get(t.currentManifest.get.files.head.path).getParent.getParent
+    val all = scala.util.Using.resource(Files.walk(stage))(_.iterator().asScala.toList)
+    val (dirs, files) = all.partition(p => Files.isDirectory(p))
+    val names = files.map(_.getFileName.toString)
+    val parquet = names.filter(_.endsWith(".parquet"))
+    assert(parquet.size == 2, names)
+    assert(names.toSet == (parquet ++ parquet.map(n => s".$n.crc") ++
+      Seq("_SUCCESS", "._SUCCESS.crc")).toSet, names)
+    // what Hadoop's own `chmod` child process produced under umask 022
+    files.foreach(f => assert(mode(f) == "rw-r--r--", f))
+    assert(dirs.size == 3)
+    dirs.foreach(d => assert(mode(d) == "rwxr-xr-x", d))
+    // the manifest is the JVM's own file write, as before
+    val manifest = java.nio.file.Paths.get(t.root, "snapshots", s"v${t.currentVersion.get}.json")
+    val probe = Files.write(java.nio.file.Paths.get(t.root, "probe"), Array.emptyByteArray)
+    assert(mode(manifest) == mode(probe))
+    // the checksummed file system reads every staged file and its .crc
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    files.filter(_.getFileName.toString.endsWith(".parquet")).foreach { f =>
+      val in = local.open(new org.apache.hadoop.fs.Path(f.toUri))
+      try in.readFully(0L, new Array[Byte](Files.size(f).toInt)) finally in.close()
+    }
+  }
+
+  test("the staging file system chmods in-process, and the sticky bit through Hadoop") {
+    import java.nio.file.Files
+    import org.apache.hadoop.fs.permission.FsPermission
+    val fs = new ForkFreeLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    val dir = java.nio.file.Paths.get(tmpDir("snap-chmod"))
+    val f = Files.createFile(dir.resolve("f"))
+    val d = Files.createDirectory(dir.resolve("d"))
+    def octal(s: String) = new FsPermission(Integer.parseInt(s, 8).toShort)
+    def mode(p: java.nio.file.Path) = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+    val (_, plain) = processStarts {
+      fs.setPermission(new org.apache.hadoop.fs.Path(f.toUri), octal("640"))
+      fs.setPermission(new org.apache.hadoop.fs.Path(d.toUri), octal("750"))
+    }
+    assert(plain.isEmpty, plain)
+    assert(mode(f) == Integer.parseInt("640", 8))
+    assert(mode(d) == Integer.parseInt("750", 8))
+    val (_, sticky) = processStarts(
+      fs.setPermission(new org.apache.hadoop.fs.Path(d.toUri), octal("1755")))
+    assert(mode(d) == Integer.parseInt("1755", 8))
+    // Hadoop's own path: a `chmod` child process unless libhadoop is loaded
+    if (!org.apache.hadoop.io.nativeio.NativeIO.isAvailable)
+      assert(sticky.size == 1 && sticky.head.contains(d.toString), sticky)
+  }
+
+  test("footer opens take the reader's options from the caller's conf") {
+    val t = new SnapshotTable(tmpDir("snap-footer-conf"))
+    t.overwritePartitions(df("a" -> 1), "p")
+    val path = t.currentManifest.get.files.head.path
+    val looked = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration) {
+      override def get(name: String): String = { looked.add(name); super.get(name) }
+    }
+    assert(ParquetFooters.fileRowCount(path, conf) == 1L)
+    assert(looked.toArray.exists(_.toString.startsWith("parquet.")),
+      s"no parquet.* lookup on the caller's conf: $looked")
+  }
 }
