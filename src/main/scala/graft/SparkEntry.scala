@@ -10,7 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Every oracle-checked query runs over the driver's parquet tables; the
   * canonical `transcripts` input (BASELINE.json `input_hint`) is derived
   * deterministically from `events.parquet` in BOTH engines (Spark:
-  * [[Transcripts.fromEvents]]; DuckDB: [[Transcripts.oracleCte]]), so
+  * [[graft.ingest.Transcripts.fromEvents]]; DuckDB:
+  * [[graft.ingest.Transcripts.oracleCte]]), so
   * rolled-up points are verified value-for-value at every tier.
   */
 object SparkEntry {
@@ -191,139 +192,6 @@ object SparkEntry {
       graft.operators.RangeJoin.intervalJoin(
         t, sess, "conv_id", "ts", "session_start", "session_end")
     }),
-    // training-data pipeline operators (documents / embeddings tables)
-    "q20_dedup_exact" -> ((s, dir) =>
-      graft.operators.Dedup.exact(s.read.parquet(s"$dir/documents.parquet"))),
-    "q21_text_stats" -> ((s, dir) =>
-      graft.operators.TextAnalysis.stats(s.read.parquet(s"$dir/documents.parquet"))),
-    "q22_langid" -> ((s, dir) =>
-      graft.operators.TextAnalysis.langId(s.read.parquet(s"$dir/documents.parquet"))),
-    "q23_minhash_lsh" -> ((s, dir) =>
-      graft.operators.Dedup.minhashLsh(
-        s.read.parquet(s"$dir/documents.parquet"), k = 16, bands = 4, threshold = 0.7)),
-    "q24_simhash" -> ((s, dir) =>
-      graft.operators.Dedup.simhash(s.read.parquet(s"$dir/documents.parquet"))),
-    "q25_simhash_pairs" -> ((s, dir) =>
-      graft.operators.Dedup.simhashPairs(
-        graft.operators.Dedup.simhash(s.read.parquet(s"$dir/documents.parquet")))),
-    "q26_knn_bruteforce" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.operators.Similarity.bruteForceTopK(
-        emb, emb.filter(org.apache.spark.sql.functions.col("vec_id") < 10), k = 5)
-    }),
-    // every tunable pinned EXPLICITLY — the oracle entry repeats the
-    // same four literals, so the coupling is visible at both sites
-    // instead of riding on defaults defined in a third file
-    "q27_fingerprint_pairs" -> ((s, dir) =>
-      graft.operators.TextAnalysis.fingerprintPairs(
-        s.read.parquet(s"$dir/documents.parquet"),
-        minShared = 2, maxDf = 20, k = 8, w = 4)),
-    // embedding-cosine near-dup: all pairs above threshold (brute-force
-    // baseline; the LSH-bucketed scale path is q29)
-    "q28_cosine_pairs" -> ((s, dir) =>
-      graft.operators.Similarity.cosinePairsAbove(
-        s.read.parquet(s"$dir/embeddings.parquet"), threshold = 0.35)),
-    // LSH-bucketed ANN (recall < 1 by construction → rows-only check;
-    // recall vs q26's exact top-k is bounded in SimilaritySpec)
-    "q29_knn_lsh" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.operators.Similarity.lshTopK(
-        emb, emb.filter(org.apache.spark.sql.functions.col("vec_id") < 10), k = 5)
-    }),
-    // multimodal: batched per-partition feature extraction over binary
-    // media columns (decode step is a documented deterministic stub —
-    // no image/audio codecs in this container; plumbing is real). The
-    // driver row projects the EXACT-ARITHMETIC companions (byte count,
-    // polynomial digest over the integer bucket sums, first feature's
-    // single-rounded float) — the DuckDB oracle reconstructs the media
-    // table and recomputes all three, making q30 hash-exact; the raw
-    // array<float> column stays out (arrays are unsortable in the
-    // harness) and feature_norm/feature_md5 are float-packing digests
-    // no SQL engine mirrors (spec-covered instead).
-    "q30_media_features" -> ((s, _) =>
-      graft.operators.Multimodal.extractFeatures(
-        graft.operators.Multimodal.synthMedia(s, n = 2000), dims = 32)
-        .select(
-          org.apache.spark.sql.functions.col("asset_id"),
-          org.apache.spark.sql.functions.col("byte_len"),
-          org.apache.spark.sql.functions.col("feature_digest"),
-          org.apache.spark.sql.functions.col("feature").getItem(0).as("feature_f0"))),
-    // multimodal: video frame sampling via pure binary column algebra.
-    // Frames ride as lowercase hex strings in the driver row (byte-
-    // collision-free image of frame_bytes): the oracle slices the same
-    // hex payload at 2x offsets, so q31 is hash-exact too.
-    "q31_frame_sample" -> ((s, _) =>
-      graft.operators.Multimodal.sampleFrames(
-        graft.operators.Multimodal.synthMedia(s, n = 2000), stride = 2)
-        .select(
-          org.apache.spark.sql.functions.col("asset_id"),
-          org.apache.spark.sql.functions.col("frame_idx"),
-          org.apache.spark.sql.functions.lower(
-            org.apache.spark.sql.functions.hex(
-              org.apache.spark.sql.functions.col("frame_bytes"))).as("frame_hex"))),
-    // IVF ANN (k-means coarse quantizer + nprobe lists; recall<1 →
-    // rows-only check, recall bounded vs q26 in SimilaritySpec)
-    "q32_knn_ivf" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.operators.Similarity.ivfTopK(
-        emb, emb.filter(org.apache.spark.sql.functions.col("vec_id") < 10),
-        k = 5, nlist = 16, nprobe = 4,
-        // footer-metadata row count — the training-sample sizer runs no
-        // count() job (ParquetFooters; driver-side, no Spark job)
-        corpusRows = Some(
-          graft.table.ParquetFooters.rowCount(s, s"$dir/embeddings.parquet")))
-    }),
-    // broadcast-free LSH near-dup pairs — the scale path for q28
-    // (recall<1 → rows-only; recall vs q28 bounded in SimilaritySpec,
-    // no-broadcast plan shape pinned in PlanShapeSpec)
-    // bits=4: tuned to the low 0.35 threshold (see lshPairsAbove doc)
-    "q33_cosine_pairs_lsh" -> ((s, dir) =>
-      graft.operators.Similarity.lshPairsAbove(
-        s.read.parquet(s"$dir/embeddings.parquet"), threshold = 0.35, bits = 4)),
-    // near-dup CLUSTERS: connected components (min-label fixpoint) over
-    // the verified minhash-LSH pair graph — oracle mirrors it with a
-    // recursive reachability CTE, so transitive grouping is hash-exact
-    "q34_dedup_clusters" -> ((s, dir) =>
-      graft.operators.Dedup.components(
-        graft.operators.Dedup.minhashLsh(
-          s.read.parquet(s"$dir/documents.parquet"), k = 16, bands = 4, threshold = 0.7))),
-    // the dedup pipeline's terminal operator: corpus minus non-keepers
-    "q35_dedup_corpus" -> ((s, dir) => {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      graft.operators.Dedup.dedupByPairs(docs,
-        graft.operators.Dedup.minhashLsh(docs, k = 16, bands = 4, threshold = 0.7))
-        .select(
-          org.apache.spark.sql.functions.col("doc_id"),
-          org.apache.spark.sql.functions.md5(
-            org.apache.spark.sql.functions.col("text")).as("text_hash"))
-    }),
-    // the ANN machinery at its EXHAUSTIVE settings — probing every IVF
-    // list / a single all-pass LSH bucket makes the candidate set the
-    // whole corpus, so assignment/probe/rerank must reproduce q26's
-    // brute force EXACTLY (same oracle); only bucketing recall (spec-
-    // bounded) stays outside the hash-exact check
-    "q38_knn_ivf_exhaustive" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.operators.Similarity.ivfTopK(
-        emb, emb.filter(org.apache.spark.sql.functions.col("vec_id") < 10),
-        k = 5, nlist = 16, nprobe = 16,
-        corpusRows = Some(
-          graft.table.ParquetFooters.rowCount(s, s"$dir/embeddings.parquet")))
-    }),
-    "q39_knn_lsh_exhaustive" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      graft.operators.Similarity.lshTopK(
-        emb, emb.filter(org.apache.spark.sql.functions.col("vec_id") < 10),
-        k = 5, bits = 0, tables = 1)
-    }),
-    // the banded-pairing KERNEL at its exhaustive setting: one all-pass
-    // bucket, cap above the corpus size — pairsFromBuckets must emit
-    // exactly the a<b all-pairs set, so the q28 oracle pins the
-    // collect/slice-pair/dedup machinery the whole dedup family rides
-    "q40_cosine_pairs_exhaustive" -> ((s, dir) =>
-      graft.operators.Similarity.lshPairsAbove(
-        s.read.parquet(s"$dir/embeddings.parquet"), threshold = 0.35,
-        bits = 0, tables = 1, maxBucket = Int.MaxValue)),
     // counter rate with reset recovery — the timeseries derivative
     // (PromQL rate() analogue) over the events value column
     "q41_counter_rate" -> ((s, dir) =>
@@ -575,7 +443,7 @@ object SparkEntry {
     "q110_ooo_skew" -> ((s, dir) =>
       graft.operators.SeriesOps.outOfOrderSkew(transcripts(s, dir))),
     // the LATE-path oracle check the ordered driver data cannot give
-    // q110 (the q38/q39 exhaustive-ANN trick): negating turn_idx
+    // q110: negating turn_idx
     // reverses arrival order, so every non-newest event trails its
     // conversation's high-water mark — late shares and skew quantiles
     // become dense and hash-checkable
@@ -649,29 +517,6 @@ object SparkEntry {
     // ordered tool-journey census (sequence discovery; q112 sibling)
     "q116_tool_paths" -> ((s, dir) =>
       graft.operators.Curation.toolPaths(transcripts(s, dir), k = 4)),
-    // test-set decontamination: corpus×benchmark banded minhash with
-    // the benchmark side broadcast (corpus never shuffles); the
-    // benchmark is carved deterministically from the documents table
-    // (doc_id % 5 == 0 — the residue chosen so the injected near-dup
-    // population straddles the split: 14 true cross-split pairs at
-    // sf0.01, dense enough that the hash check pins band recall AND
-    // verify) so the oracle mirrors the split exactly
-    "q117_decontaminate" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      graft.operators.Dedup.decontaminate(
-        docs.filter(col("doc_id") % 5 =!= 0),
-        docs.filter(col("doc_id") % 5 === 0),
-        k = 16, bands = 4, threshold = 0.5)
-    }),
-    // embedding label-outlier flags vs the label's min-id reference
-    // vector (deterministic, so oracle-exact — a centroid would not
-    // be); threshold calibrated to the driver corpus (diffuse labels:
-    // sims to the reference center on 0, so -0.1 flags the ~18% tail
-    // and the boolean actually discriminates)
-    "q118_label_outliers" -> ((s, dir) =>
-      graft.operators.Similarity.labelOutliers(
-        s.read.parquet(s"$dir/embeddings.parquet"), threshold = -0.1)),
     // one-scan multi-granularity rollup (conv-level + corpus-level per
     // window via grouping sets)
     "q119_rollup_grouping_sets" -> ((s, dir) =>
@@ -704,8 +549,8 @@ object SparkEntry {
         graft.rollup.Rollup.charLenHistogram(transcripts(s, dir),
           Tier.M1, bucketWidth = 50), Tier.H1)),
     // Misra-Gries heavy hitters at exhaustive capacity (no trim fires,
-    // counts exact) vs the q75 exact-top-k oracle — the ANN-family
-    // exhaustive-settings verification pattern for the sketch machinery
+    // counts exact) vs the q75 exact-top-k oracle — the sketch
+    // machinery verified at settings where it must equal the exact answer
     "q124_term_topk_sketch" -> ((s, dir) =>
       graft.operators.SeriesOps.termTopKSketch(transcripts(s, dir),
         k = 50, capacity = 65536)),
@@ -714,27 +559,6 @@ object SparkEntry {
     "q125_topk_per_key_agg" -> ((s, dir) =>
       graft.operators.RefOps.topKPerKeyAgg(
         s.read.parquet(s"$dir/events.parquet"), k = 3)),
-    // Gopher-style within-doc repetition quality gate: fixed 2-token
-    // chunk "lines" (the corpus is single-line; W=2 is where chunk
-    // repeats actually occur — 181/500 docs nonzero at sf0.01) plus
-    // bigram/trigram repetition shares; zero-shuffle map pass
-    "q126_doc_repetition" -> ((s, dir) =>
-      graft.operators.TextAnalysis.repetition(
-        s.read.parquet(s"$dir/documents.parquet"), lineTokens = 2)),
-    // bloom-prescreen decontamination — EXACT recall (the bloom has no
-    // false negatives, so unlike q117's banded form the oracle is the
-    // full all-pairs jaccard): the benchmark's shingle bitset is a
-    // mergeable broadcast artifact and the corpus is touched once,
-    // map-side; same doc_id % 5 split as q117 so the two operators'
-    // outputs are directly comparable (bloom ⊇ banded)
-    "q127_decontaminate_bloom" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-      graft.operators.Dedup.decontaminateBloom(
-        docs.filter(col("doc_id") % 5 =!= 0),
-        docs.filter(col("doc_id") % 5 === 0),
-        threshold = 0.5, numBits = 1 << 18, numHashes = 3)
-    }),
     // snapshot diff between two 1d-rollup builds: 'old' sees only rows
     // before a MID-DAY cutoff (2024-01-20 12:00), 'new' sees all — so
     // the boundary day exercises 'changed' (same key, moved measures)
@@ -776,28 +600,6 @@ object SparkEntry {
     "q132_rolling_active_sketch" -> ((s, dir) =>
       graft.operators.SeriesOps.rollingActiveSketchDaily(
         transcripts(s, dir), w = 7, lgK = 12)),
-    // minhash calibration audit: signature-estimated vs exact jaccard
-    // per banded candidate pair — the (k, bands, threshold) tuning
-    // report, oracle-exact including the estimator itself
-    "q133_minhash_calibration" -> ((s, dir) =>
-      graft.operators.Dedup.minhashCalibration(
-        s.read.parquet(s"$dir/documents.parquet"), k = 16, bands = 4)),
-    // Gopher-style composite quality gate: per-doc keep/drop verdict
-    // with boolean reason flags — the curation filter a training
-    // pipeline runs before dedup ever shuffles; one scan, zero
-    // shuffles. minTokens/maxDupLineChar set at the driver corpus's
-    // p5/p95+ so three flags actually discriminate here (too_short,
-    // low_stopword, repetitive); punct/meantok flags are pinned by
-    // crafted docs in TextAnalysisSpec (this corpus has no punctuation)
-    "q134_quality_gate" -> ((s, dir) =>
-      graft.operators.TextAnalysis.qualityGate(
-        s.read.parquet(s"$dir/documents.parquet"),
-        minTokens = 16L, maxDupLineChar = 0.1)),
-    // per-dimension embedding audit — float sums made order-independent
-    // (and so oracle-exact) by integer quantization
-    "q135_embedding_audit" -> ((s, dir) =>
-      graft.operators.Similarity.embeddingAudit(
-        s.read.parquet(s"$dir/embeddings.parquet"))),
     // order-independent whole-corpus checksum — one mergeable scalar
     // for cross-warehouse parity (q115's fingerprints drill down when
     // the scalars disagree)
@@ -1055,32 +857,6 @@ object SparkEntry {
         |FROM transcripts t JOIN sess s
         |  ON t.conv_id = s.conv_id
         | AND s.session_start <= t.ts AND t.ts <= s.session_end""".stripMargin),
-    "q20_dedup_exact" ->
-      """SELECT md5(text) AS text_hash, MIN(doc_id) AS keeper_doc_id,
-        |       COUNT(*) AS dup_count
-        |FROM documents GROUP BY 1""".stripMargin,
-    "q21_text_stats" -> OracleSqlGen.textStats,
-    // q22_langid: heuristic model not SQL-expressible → rows-only check
-    "q23_minhash_lsh" -> OracleSqlGen.minhashLsh(k = 16, bands = 4, threshold = 0.7),
-    "q24_simhash" -> OracleSqlGen.simhash(bits = 60),
-    "q25_simhash_pairs" -> OracleSqlGen.simhashPairs(bits = 60, maxDist = 3),
-    "q26_knn_bruteforce" -> OracleSqlGen.knnBruteForce(maxQueryId = 10, k = 5),
-    // winnowing became oracle-checkable in r4: the gram hash is the
-    // 28-bit md5 prefix (the h28 the shingle pipeline already mirrors),
-    // so the whole fingerprint-pairs pipeline has a DuckDB twin
-    "q27_fingerprint_pairs" ->
-      OracleSqlGen.fingerprintPairs(k = 8, w = 4, minShared = 2, maxDf = 20),
-    "q28_cosine_pairs" -> OracleSqlGen.cosinePairs(threshold = 0.35),
-    // q29_knn_lsh: recall<1 ANN → rows-only
-    "q30_media_features" -> OracleSqlGen.mediaFeatures(n = 2000, seed = 42L, dims = 32),
-    "q31_frame_sample" -> OracleSqlGen.frameSample(n = 2000, seed = 42L, stride = 2),
-    "q34_dedup_clusters" -> OracleSqlGen.dedupClusters(k = 16, bands = 4, threshold = 0.7),
-    "q35_dedup_corpus" -> OracleSqlGen.dedupCorpus(k = 16, bands = 4, threshold = 0.7),
-    // exhaustive ANN ≡ brute force — the q26 oracle pins both paths
-    "q38_knn_ivf_exhaustive" -> OracleSqlGen.knnBruteForce(maxQueryId = 10, k = 5),
-    "q39_knn_lsh_exhaustive" -> OracleSqlGen.knnBruteForce(maxQueryId = 10, k = 5),
-    // exhaustive banded pairing ≡ brute-force pairs — the q28 oracle
-    "q40_cosine_pairs_exhaustive" -> OracleSqlGen.cosinePairs(threshold = 0.35),
     "q41_counter_rate" ->
       """SELECT event_id, user_id, ts, value,
         |  CASE WHEN prev_ts IS NULL THEN NULL
@@ -2121,7 +1897,7 @@ object SparkEntry {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
         |    AS cum_convs
         |FROM ad""".stripMargin),
-    // md5 identity mirrored term-for-term (the q20 dedup doctrine);
+    // md5 identity mirrored term-for-term (both engines' md5 agrees);
     // null text drops from duplication accounting
     "q93_daily_dup_rate" -> Transcripts.oracle(
       """, c AS (
@@ -2429,8 +2205,7 @@ object SparkEntry {
         |FROM transcripts WHERE ts IS NOT NULL AND text IS NOT NULL
         |GROUP BY 1, 2""".stripMargin),
     // the canonical shingle unit: 3-word grams, short texts collapse
-    // to one whole-text shingle, 28-bit md5-prefix hash — the same
-    // mirror the minhash/winnowing oracles use term-for-term
+    // to one whole-text shingle, 28-bit md5-prefix hash
     "q105_shingle_novelty" -> Transcripts.oracle(
       """, sg AS (
         |  SELECT (EPOCH_US(ts) - ((EPOCH_US(ts) % 86400000000)
@@ -2783,7 +2558,7 @@ object SparkEntry {
         |   FROM q3 WHERE p = 0.95)
         |FROM c""".stripMargin),
     // the md5 permutation is the same deterministic draw in both
-    // engines (the q20 dedup md5-parity doctrine), so the SELECTED
+    // engines (md5 parity), so the SELECTED
     // ROWS hash-match, pinning the whole sample
     "q113_sample_per_conv" -> Transcripts.oracle(
       """SELECT conv_id, turn_idx, role, text, tool, ts
@@ -2842,9 +2617,6 @@ object SparkEntry {
         |  ROUND(CAST(COUNT(*) AS DOUBLE) /
         |    CAST(SUM(COUNT(*)) OVER () AS DOUBLE), 6) AS share
         |FROM p GROUP BY 1""".stripMargin),
-    "q117_decontaminate" ->
-      OracleSqlGen.decontaminate(k = 16, bands = 4, threshold = 0.5, modulus = 5),
-    "q118_label_outliers" -> OracleSqlGen.labelOutliers(threshold = -0.1),
     "q119_rollup_grouping_sets" -> Transcripts.oracle(
       """SELECT CAST(GROUPING(conv_id) AS INT) AS scope, conv_id,
         |  DATE_TRUNC('hour', ts) AS window_start,
@@ -2961,52 +2733,6 @@ object SparkEntry {
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts DESC, event_id DESC)
         |QUALIFY rank <= 3""".stripMargin,
-    // term-for-term mirror of TextAnalysis.repetition: 2-token chunk
-    // lines via inclusive list slices (Spark slice(arr, i*2+1, 2) ==
-    // DuckDB arr[i*2+1 : i*2+2]), the same count×length product for
-    // the top-bigram maximum (tie-free), and exact-integer doubles on
-    // both sides of every division
-    "q126_doc_repetition" ->
-      """WITH b AS (
-        |  SELECT doc_id, text, STRING_SPLIT(text, ' ') AS toks
-        |  FROM documents
-        |  WHERE text IS NOT NULL AND len(STRING_SPLIT(text, ' ')) >= 3),
-        |l AS (
-        |  SELECT doc_id, text, toks,
-        |    [array_to_string(toks[(i*2+1):(i*2+2)], ' ')
-        |     for i in generate_series(0, (len(toks)-1)//2)] AS lines,
-        |    [concat(toks[i], ' ', toks[i+1])
-        |     for i in generate_series(1, len(toks)-1)] AS bg,
-        |    [concat(toks[i], ' ', toks[i+1], ' ', toks[i+2])
-        |     for i in generate_series(1, len(toks)-2)] AS tg
-        |  FROM b)
-        |SELECT doc_id,
-        |  CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  CAST(len(lines) AS BIGINT) AS n_lines,
-        |  ROUND(CAST(len(lines) - len(list_distinct(lines)) AS DOUBLE)
-        |    / CAST(len(lines) AS DOUBLE), 6) AS dup_line_frac,
-        |  -- zero line-char mass pins dup_line_char_frac to 0.0 (the
-        |  -- 0/0 division is NULL in DuckDB; the native expression
-        |  -- makes the same decision explicitly)
-        |  ROUND(COALESCE(CAST(list_sum([length(x) for x in lines])
-        |      - list_sum([length(x) for x in list_distinct(lines)]) AS DOUBLE)
-        |    / CAST(list_sum([length(x) for x in lines]) AS DOUBLE), 0.0), 6)
-        |    AS dup_line_char_frac,
-        |  ROUND(CAST(list_max([len(list_filter(bg, y -> y = x)) * length(x)
-        |      for x in list_distinct(bg)]) AS DOUBLE)
-        |    / CAST(LENGTH(text) AS DOUBLE), 6) AS top_bigram_char_frac,
-        |  ROUND(CAST(len(list_filter(bg,
-        |      x -> len(list_filter(bg, y -> y = x)) > 1)) AS DOUBLE)
-        |    / CAST(len(bg) AS DOUBLE), 6) AS dup_bigram_frac,
-        |  ROUND(CAST(len(list_filter(tg,
-        |      x -> len(list_filter(tg, y -> y = x)) > 1)) AS DOUBLE)
-        |    / CAST(len(tg) AS DOUBLE), 6) AS dup_trigram_frac
-        |FROM l""".stripMargin,
-    // EXACT all-pairs oracle (no band curve): bloom prescreen is
-    // provably lossless, so oracle-exactness here verifies the whole
-    // prescreen+verify machinery, not a mirrored approximation
-    "q127_decontaminate_bloom" ->
-      OracleSqlGen.decontaminateExact(threshold = 0.5, modulus = 5),
     // both CTEs re-derive the 1d rollup (the q02/q04 shape) over full
     // vs pre-cutoff input; FULL JOIN with null-safe key equality
     // (IS NOT DISTINCT FROM ≡ Spark <=>) and null-safe measure drift
@@ -3137,39 +2863,6 @@ object SparkEntry {
         |SELECT MAKE_TIMESTAMP(dau.d * 86400000000) AS day,
         |  dau.active_convs, wau.rolling_active
         |FROM dau JOIN wau ON dau.d = wau.d""".stripMargin),
-    "q133_minhash_calibration" ->
-      OracleSqlGen.minhashCalibration(k = 16, bands = 4),
-    // mirrors TextAnalysis.qualityGate: q21's ratio shapes, q126's
-    // chunk/bigram shapes (guarded NULL below 3 tokens, COALESCE
-    // false), keep = NOT(any flag) over the same subexpressions
-    "q134_quality_gate" -> OracleSqlGen.qualityGate(
-      minTokens = 16, maxTokens = 100000,
-      minMeanTokChars = 2.0, maxMeanTokChars = 12.0,
-      maxPunct = 0.3, minStopword = 0.01,
-      maxDupLineChar = 0.1, maxDupBigram = 0.5),
-    // zipped parallel UNNESTs give (value, 0-based dim); the quantized
-    // floor(x·1e6) BIGINT sum mirrors the order-independent Spark sum
-    "q135_embedding_audit" ->
-      """WITH e AS (
-        |  SELECT UNNEST(embedding) AS x,
-        |    UNNEST(generate_series(0, len(embedding) - 1)) AS dim
-        |  FROM embeddings),
-        |q AS (
-        |  SELECT dim, CAST(x AS DOUBLE) AS xd,
-        |    CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT) AS qv
-        |  FROM e),
-        |a AS (
-        |  SELECT dim, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(qv) AS BIGINT) AS sum_q6,
-        |    MIN(xd) AS min_v, MAX(xd) AS max_v,
-        |    CAST(COUNT(*) FILTER (WHERE xd = 0.0) AS BIGINT) AS zero_n
-        |  FROM q GROUP BY 1)
-        |SELECT dim, n, sum_q6,
-        |  ROUND((CAST(sum_q6 AS DOUBLE) / 1000000.0)
-        |    / CAST(n AS DOUBLE), 6) AS mean_q,
-        |  min_v, max_v, zero_n,
-        |  min_v = max_v AS is_constant
-        |FROM a""".stripMargin,
     // canonical INJECTIVE row string (chr(1) joins, each field
     // length-prefixed `<charlen>:<value>`, NULL -> bare 'N', epoch
     // micros for ts), 60-bit md5 prefix, HUGEINT-exact sum rendered

@@ -31,11 +31,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally
-        // a query's internal persist (e.g. q23's candidate-pair pin) is
-        // scoped to that query: release it instead of letting 30
-        // queries' caches stack up in one session
-        spark.sharedState.cacheManager.clearCache()
+      }
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(re))
     spark.stop()

@@ -23,9 +23,9 @@ import org.apache.spark.sql.expressions.Aggregator
   * Semantics contract (what the driver query pins): with
   * `capacity ≥ distinct items` no trim ever fires, every counter is
   * exact, and the sketch output is bit-identical to the exact
-  * aggregation — the same exhaustive-settings verification pattern as
-  * the ANN family (q38/q39). Below capacity the VALUES are
-  * merge-order-dependent (any MG implementation's counters are), but
+  * aggregation (an exhaustive-settings verification: the sketch at
+  * settings where it must equal the exact answer). Below capacity the
+  * VALUES are merge-order-dependent (any MG implementation's counters are), but
   * the error bound above holds for every order; the spec asserts the
   * bound, not the values.
   *

@@ -4,8 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -15,101 +13,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TextOps {
 
-  /** Winnowing document fingerprint (Schleimer/Wilkerson/Aiken,
-    * "Winnowing: Local Algorithms for Document Fingerprinting",
-    * SIGMOD 2003): hashes of k-char grams, keep the minimum in each
-    * window of w consecutive hashes, distinct + sorted. Two documents
-    * sharing any fingerprint share a k-gram run — a scalable
-    * containment/plagiarism signal.
-    *
-    * The gram hash is the 28-bit md5 prefix (same [[h28]] the shingle
-    * pipeline uses) rather than a rolling Rabin-Karp: Java's wrapping
-    * 64-bit arithmetic has no cross-engine SQL mirror (DuckDB BIGINT
-    * errors on overflow), while the md5 prefix is exactly
-    * `CAST('0x' || substr(md5(gram), 1, 7) AS BIGINT)` — making the
-    * whole fingerprint-pairs pipeline (q27) DuckDB-oracle-checkable,
-    * like q23/q30 before it. ~len md5 calls per doc vs the rolling
-    * hash's O(len) multiplies — fingerprinting is candidate-generation
-    * (run once per doc, map-side), where verifiability buys more than
-    * the constant factor costs.
-    *
-    * Grams are k CODE POINTS, not k UTF-16 code units: SQL `substr`/
-    * `length` count codepoints, so unit-indexed grams would fingerprint
-    * astral-plane text differently per engine (and split surrogate
-    * pairs into U+FFFD bytes under UTF-8).
-    */
-  def winnow(text: UTF8String, k: Int, w: Int): ArrayData = {
-    val s = text.toString
-    val cps = s.codePoints().toArray
-    if (cps.length < k) return new GenericArrayData(Array.empty[Long])
-    val n = cps.length - k + 1
-    val md = md5Local.get()
-    val hashes = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      hashes(i) = h28(md, new String(cps, i, k))
-      i += 1
-    }
-    val out = scala.collection.mutable.SortedSet[Long]()
-    if (n <= w) out += hashes.min
-    else {
-      var j = 0
-      while (j + w <= n) {
-        var m = Long.MaxValue
-        var x = j
-        while (x < j + w) { if (hashes(x) < m) m = hashes(x); x += 1 }
-        out += m
-        j += 1
-      }
-    }
-    new GenericArrayData(out.toArray)
-  }
-
-  /** All k minhash values in ONE pass over the base-hash array (vs k
-    * higher-order `transform` calls, which stay outside whole-stage
-    * codegen and materialize k intermediate arrays — measured as the
-    * bulk of the LSH pipeline's time). Same arithmetic as
-    * [[TextFunctions.minhashUniversal]]: (a_i·h + b_i) mod P, products
-    * < 2^57 so the DuckDB oracle mirrors bit-exactly.
-    */
-  def minhashSigs(hashes: ArrayData, k: Int): ArrayData = {
-    val n = hashes.numElements()
-    // empty in → NULL out, matching the composable built-in form
-    // (array_min over transform of an empty array) and the oracle's
-    // list_min — unreachable via shingleHash3 (≥1 hash always), but the
-    // expression is exposed directly as SQL minhash_sigs, where an
-    // empty user array must not band-fold into a valid-looking bucket
-    if (n == 0) return null
-    val (as, bs) = minhashCoeffArrays(k)
-    val mins = Array.fill(k)(Long.MaxValue)
-    var j = 0
-    while (j < n) {
-      val h = hashes.getLong(j)
-      var i = 0
-      while (i < k) {
-        val v = (h * as(i) + bs(i)) % TextFunctions.minhashP
-        if (v < mins(i)) mins(i) = v
-        i += 1
-      }
-      j += 1
-    }
-    new GenericArrayData(mins)
-  }
-
-  private val coeffCache =
-    new java.util.concurrent.ConcurrentHashMap[Int, (Array[Long], Array[Long])]()
-  def minhashCoeffArrays(k: Int): (Array[Long], Array[Long]) = {
-    // same clear-on-cap bound as VectorOps.planeCache (tiny arrays, but
-    // a long-lived executor should never accrete unbounded state);
-    // checked before the lookup — CHM forbids mutation inside the
-    // mapping function
-    if (coeffCache.size >= 64 && !coeffCache.containsKey(k)) coeffCache.clear()
-    coeffCache.computeIfAbsent(k, k2 => {
-      val cs = (0 until k2).map(TextFunctions.minhashCoeffs)
-      (cs.map(_._1).toArray, cs.map(_._2).toArray)
-    })
-  }
-
   private val md5Local = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
@@ -117,7 +20,7 @@ object TextOps {
 
   /** First 28 bits of md5 as a Long — the cross-engine hash primitive
     * (`CAST('0x' || substr(md5(s), 1, 7) AS BIGINT)` in the DuckDB
-    * oracles), shared by the shingle and winnowing pipelines.
+    * oracles).
     */
   private def h28(md: java.security.MessageDigest, str: String): Long = {
     md.reset()
@@ -129,7 +32,8 @@ object TextOps {
   /** 28-bit base hashes of the 3-word shingles of `text`, in one native
     * pass (split → shingle → md5 prefix), with NO intermediate Catalyst
     * string arrays. Bit-identical to the composable built-in form
-    * `shingleHashes(shingles3(text))` — i.e. to the oracle's
+    * (`split(text, ' ')`, 3-word windows joined by a space, then
+    * `conv(substr(md5(shingle), 1, 7), 16, 10)`) — i.e. to the oracle's
     * `CAST('0x' || substr(md5(shingle), 1, 7) AS BIGINT)` — which a
     * spec asserts: the value is the first 7 hex nibbles of
     * md5(word_i + ' ' + word_i+1 + ' ' + word_i+2); texts under 3
@@ -152,218 +56,10 @@ object TextOps {
     new GenericArrayData(out)
   }
 
-  /** 60-bit SimHash of a text in ONE map pass — bit-identical to the
-    * declarative form in [[graft.operators.Dedup.simhash]]'s oracle
-    * (explode tokens → groupBy(doc, tok) count → md5-prefix hash → bit
-    * sums), but with the per-token counting done in a local hashmap so
-    * NO shuffle of token rows ever happens. h = first 15 hex nibbles of
-    * md5(token) (the cross-engine `conv(substr(md5,1,15),16,10)`
-    * trick); bit j of the signature is set iff Σ count·(2·bit_j(h)−1)
-    * is positive.
-    */
-  def simhashText(text: UTF8String, bits: Int): Long = {
-    val md = md5Local.get()
-    val words = text.toString.split(" ", -1)
-    val counts = new java.util.HashMap[String, Int]()
-    var i = 0
-    while (i < words.length) { counts.merge(words(i), 1, Integer.sum _); i += 1 }
-    val sums = new Array[Long](bits)
-    counts.forEach { (tok, cnt) =>
-      md.reset()
-      val d = md.digest(tok.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // first 15 hex nibbles = 60 bits: 7 full bytes + the high nibble
-      val h = ((d(0) & 0xffL) << 52) | ((d(1) & 0xffL) << 44) |
-        ((d(2) & 0xffL) << 36) | ((d(3) & 0xffL) << 28) |
-        ((d(4) & 0xffL) << 20) | ((d(5) & 0xffL) << 12) |
-        ((d(6) & 0xffL) << 4) | ((d(7) & 0xffL) >>> 4)
-      var j = 0
-      while (j < bits) {
-        sums(j) += cnt.toLong * (((h >>> j) & 1L) * 2 - 1)
-        j += 1
-      }
-    }
-    var sig = 0L
-    var j = 0
-    while (j < bits) { if (sums(j) > 0) sig |= 1L << j; j += 1 }
-    sig
-  }
-
-  /** Bloom prescreen hit count: how many of a row's shingle hashes have
-    * ALL `numHashes` probe bits set in the dense `bloom` word array.
-    * The probe math MUST stay identical to `Dedup.bloomProbes` (the
-    * Column form the BITSET BUILD uses): h1/h2 are Catalyst XxHash64
-    * (seed 42, then the salt folded as a second hashed value), folded
-    * into [0, 2^31) before the Kirsch-Mitzenmacher combination, h2
-    * forced odd. A drift between the two would create bloom FALSE
-    * NEGATIVES — caught by DedupSpec's brute-equality test, but fix it
-    * HERE, in lockstep with bloomProbes.
-    */
-  val bloomSalt: Long = 0x9E3779B97F4A7C15L
-  def bloomHits(hashes: ArrayData, bloom: Array[Long], numBits: Long,
-      numHashes: Int): Int = {
-    val two31 = 1L << 31
-    var hits = 0
-    var i = 0
-    val n = hashes.numElements()
-    while (i < n) {
-      val h = hashes.getLong(i)
-      val x1 = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(h, 42L)
-      val h1 = ((x1 % two31) + two31) % two31
-      val x2 = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashLong(bloomSalt, x1)
-      val h2 = (((x2 % two31) + two31) % two31) | 1L
-      var k = 0
-      var ok = true
-      while (ok && k < numHashes) {
-        val bit = (((h1 + k * h2) % numBits) + numBits) % numBits
-        if ((bloom((bit >>> 6).toInt) & (1L << (bit & 63L).toInt)) == 0L)
-          ok = false
-        k += 1
-      }
-      if (ok) hits += 1
-      i += 1
-    }
-    hits
-  }
-
-  /** Within-document repetition metrics in ONE compiled pass — the
-    * native form of the q126 higher-order-function pipeline (filter/
-    * transform/aggregate are CodegenFallback, so the HOF form ran
-    * INTERPRETED per n-gram: measured 5.7-6.4 s for q126 at sf0.1,
-    * the whole suite's slowest query). Semantics are a term-for-term
-    * mirror of the HOF expressions ([[TextAnalysis]] shared strings):
-    * single-space split keeping empties, `lineTokens`-chunk "lines"
-    * joined with a space, first-occurrence-distinct, code-point
-    * lengths (UTF8String/DuckDB LENGTH semantics, NOT UTF-16 units),
-    * and UNROUNDED double ratios computed with the identical IEEE
-    * operand order — callers apply `round(_, 6)` on top exactly where
-    * the HOF form did. Documents under 3 tokens return null (the
-    * upstream filter's contract). Degenerate zero-divisor input
-    * (a doc whose every "line" is empty — all empty tokens — so
-    * lineSum=0) is PINNED to `dup_line_char_frac = 0.0` by decision:
-    * zero line-character mass has zero duplicate mass. The earlier
-    * IEEE 0/0 = NaN here was a silent behavior change from the HOF
-    * form this expression replaced (Spark's Divide yields NULL for a
-    * zero divisor, and DuckDB's oracle likewise) AND mis-flagged such
-    * docs as repetitive in [[graft.operators.TextAnalysis.qualityGate]]
-    * (Spark orders NaN above every threshold). 0.0 keeps the field
-    * non-nullable, matches the oracle's COALESCE(x/0 → NULL, 0) guard
-    * term for term, and leaves junk-doc detection to the gates that
-    * actually measure it. The q126 oracle and the
-    * naive-Scala-reference property test are the drift nets.
-    */
-  def repetitionStats(text: UTF8String, w: Int): InternalRow = {
-    val s = text.toString
-    val toks = s.split(" ", -1)
-    val n = toks.length
-    if (n < 3) return null
-    def cp(x: String): Long = x.codePointCount(0, x.length).toLong
-    // lines: ceil(n / w) chunks, 1-based slice semantics
-    val nLines = (n - 1) / w + 1
-    var lineSum = 0L
-    var distinctLineSum = 0L
-    val seenLines = new java.util.HashSet[String]()
-    var distinctLines = 0
-    var i = 0
-    val sb = new java.lang.StringBuilder
-    while (i < nLines) {
-      sb.setLength(0)
-      val from = i * w
-      val until = math.min(from + w, n)
-      var j = from
-      while (j < until) {
-        if (j > from) sb.append(' ')
-        sb.append(toks(j))
-        j += 1
-      }
-      val line = sb.toString
-      val len = cp(line)
-      lineSum += len
-      if (seenLines.add(line)) { distinctLines += 1; distinctLineSum += len }
-      i += 1
-    }
-    // positional bigrams/trigrams with occurrence counts
-    val bgCount = new java.util.HashMap[String, Integer]()
-    val bgs = new Array[String](n - 1)
-    i = 0
-    while (i < n - 1) {
-      val g = toks(i) + " " + toks(i + 1)
-      bgs(i) = g
-      bgCount.merge(g, 1, (a, b) => a + b)
-      i += 1
-    }
-    val tgCount = new java.util.HashMap[String, Integer]()
-    val tgs = new Array[String](n - 2)
-    i = 0
-    while (i < n - 2) {
-      val g = toks(i) + " " + toks(i + 1) + " " + toks(i + 2)
-      tgs(i) = g
-      tgCount.merge(g, 1, (a, b) => a + b)
-      i += 1
-    }
-    var topBg = 0L
-    val it = bgCount.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val mass = e.getValue.toLong * cp(e.getKey)
-      if (mass > topBg) topBg = mass
-    }
-    var dupBg = 0
-    i = 0
-    while (i < bgs.length) { if (bgCount.get(bgs(i)) > 1) dupBg += 1; i += 1 }
-    var dupTg = 0
-    i = 0
-    while (i < tgs.length) { if (tgCount.get(tgs(i)) > 1) dupTg += 1; i += 1 }
-    new GenericInternalRow(Array[Any](
-      n.toLong,
-      nLines.toLong,
-      (nLines - distinctLines).toDouble / nLines.toDouble,
-      if (lineSum == 0) 0.0
-      else (lineSum - distinctLineSum).toDouble / lineSum.toDouble,
-      topBg.toDouble / cp(s).toDouble,
-      dupBg.toDouble / bgs.length.toDouble,
-      dupTg.toDouble / tgs.length.toDouble))
-  }
-
   import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
-
-  def repetitionStatsCol(text: Column, w: Int): Column =
-    column(RepetitionStats(expression(text), w))
-
-  def bloomHitsCount(hashes: Column, bloom: Array[Long], numBits: Int,
-      numHashes: Int): Column =
-    column(BloomHits(expression(hashes), bloom, numBits, numHashes))
-
-  def fingerprint(text: Column, k: Int = 8, w: Int = 4): Column =
-    column(Winnow(expression(text), k, w))
-
-  def minhash(hashes: Column, k: Int): Column =
-    column(MinhashSigs(expression(hashes), k))
 
   def shingleHashes3(text: Column): Column =
     column(ShingleHash3(expression(text)))
-
-  def simhash(text: Column, bits: Int): Column =
-    column(SimhashText(expression(text), bits))
-}
-
-/** Native expression: 60-bit-capable SimHash of a string, one map pass,
-  * no token shuffle.
-  */
-case class SimhashText(child: Expression, bits: Int) extends UnaryExpression {
-  require(bits > 0 && bits < 64, s"bits must be in [1,63], got $bits")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash expects string, got $other")
-  }
-  override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    TextOps.simhashText(v.asInstanceOf[UTF8String], bits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.functions.TextOps.simhashText($s, $bits)")
-  override protected def withNewChildInternal(newChild: Expression): SimhashText =
-    copy(child = newChild)
 }
 
 /** Native expression: 28-bit md5-prefix hashes of a text's 3-word
@@ -381,191 +77,5 @@ case class ShingleHash3(child: Expression) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, s => s"graft.functions.TextOps.shingleHash3($s)")
   override protected def withNewChildInternal(newChild: Expression): ShingleHash3 =
-    copy(child = newChild)
-}
-
-/** Native expression: bloom prescreen hit count over a shingle-hash
-  * array, with the dense bitset as a codegen reference object (the
-  * [[CentroidSims]] pattern) — stays inside whole-stage codegen where
-  * the higher-order-function formulation (filter+forall, both
-  * CodegenFallback) ran interpreted per element: measured 8.9 s → see
-  * BENCH round-4 session-4 notes.
-  */
-case class BloomHits(child: Expression, bloom: Array[Long], numBits: Int,
-    numHashes: Int) extends UnaryExpression {
-  require(bloom.length.toLong * 64 == numBits.toLong,
-    s"bloom array must hold exactly numBits/64 words: ${bloom.length} vs $numBits")
-  require(numHashes >= 1 && numHashes <= 16,
-    s"numHashes must be in [1,16], got $numHashes")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bloom_hits expects array<bigint>, got $other")
-  }
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(v: Any): Any =
-    TextOps.bloomHits(v.asInstanceOf[ArrayData], bloom, numBits.toLong, numHashes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloom", bloom, "long[]")
-    defineCodeGen(ctx, ev,
-      v => s"graft.functions.TextOps.bloomHits($v, $ref, ${numBits}L, $numHashes)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BloomHits =
-    copy(child = newChild)
-}
-
-/** Native expression: the q126 repetition metrics as a struct of
-  * UNROUNDED doubles, one compiled pass per document (see
-  * [[TextOps.repetitionStats]]). Null text or < 3 tokens → null row.
-  */
-case class RepetitionStats(child: Expression, lineTokens: Int)
-    extends UnaryExpression {
-  // lower bound only: the HOF form this replaces accepted any positive
-  // chunk width (w beyond the doc length = one whole-doc line)
-  require(lineTokens >= 1, s"lineTokens must be >= 1, got $lineTokens")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"repetition_stats expects string, got $other")
-  }
-  override def nullable: Boolean = true
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_lines", LongType, nullable = false),
-    StructField("dup_line_frac", DoubleType, nullable = false),
-    StructField("dup_line_char_frac", DoubleType, nullable = false),
-    StructField("top_bigram_char_frac", DoubleType, nullable = false),
-    StructField("dup_bigram_frac", DoubleType, nullable = false),
-    StructField("dup_trigram_frac", DoubleType, nullable = false)))
-  override def nullSafeEval(v: Any): Any =
-    TextOps.repetitionStats(v.asInstanceOf[UTF8String], lineTokens)
-  // NOT defineCodeGen: the helper returns null for < 3 tokens, and
-  // defineCodeGen would leave isNull=false with a null value slot
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => s"""
-      ${ev.value} = graft.functions.TextOps.repetitionStats($s, $lineTokens);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-  override protected def withNewChildInternal(newChild: Expression): RepetitionStats =
-    copy(child = newChild)
-}
-
-/** Native expression: k universal-hash minhash values of a pre-hashed
-  * shingle array, computed in a single pass.
-  */
-case class MinhashSigs(child: Expression, k: Int) extends UnaryExpression {
-  require(k > 0, s"k must be positive, got $k")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sigs expects array<bigint>, got $other")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  // null in → null out (UnaryExpression default) AND empty in → null
-  // out (the static kernel returns null; see TextOps.minhashSigs)
-  override def nullable: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    TextOps.minhashSigs(v.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => s"""
-      ${ev.value} = graft.functions.TextOps.minhashSigs($s, $k);
-      if (${ev.value} == null) { ${ev.isNull} = true; }""")
-  override protected def withNewChildInternal(newChild: Expression): MinhashSigs =
-    copy(child = newChild)
-}
-
-/** Native expression: winnowing fingerprint set of a string. */
-case class Winnow(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"winnow expects string, got $other")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    TextOps.winnow(v.asInstanceOf[UTF8String], k, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.functions.TextOps.winnow($s, $k, $w)")
-  override protected def withNewChildInternal(newChild: Expression): Winnow =
-    copy(child = newChild)
-}
-
-/** Character-n-gram language identification — a self-contained
-  * heuristic (no external model): per-language profiles of frequent
-  * trigrams/diacritics; CJK scripts short-circuit on Unicode ranges.
-  * Not a linguistics claim — a deterministic, testable lang-ID feature
-  * for pipeline routing, like the reference's config-declared typing
-  * (everything decidable from the value itself).
-  */
-object LangId {
-
-  private val profiles: Map[String, Seq[String]] = Map(
-    "en" -> Seq(" th", "the", "he ", " an", "and", "nd ", " of", "of ", "ing", "ng ", " to", "to "),
-    "fr" -> Seq(" de", "de ", " le", "le ", "es ", " la", "la ", "ent", " et", "et ", "que", " qu"),
-    "es" -> Seq(" de", "de ", " la", "la ", "os ", " el", "el ", " en", "en ", "ción", " qu", "ue "),
-    "de" -> Seq(" de", "der", "er ", "ie ", " di", "die", "und", " un", "nd ", "ch ", "ein", "sch"))
-
-  private val diacritics: Map[String, Seq[Char]] = Map(
-    "fr" -> Seq('é', 'è', 'ê', 'à', 'ç', 'ù', 'â', 'î', 'ô'),
-    "es" -> Seq('ñ', 'á', 'í', 'ó', 'ú', '¿', '¡'),
-    "de" -> Seq('ä', 'ö', 'ü', 'ß'))
-
-  /** UTF8String bridge for generated code — [[LangIdText]] calls this
-    * statically, so lang-ID runs inside whole-stage codegen with no UDF
-    * ser/de (the last hot-path-adjacent UDF in the engine before this).
-    */
-  def detectUtf8(text: UTF8String): UTF8String =
-    UTF8String.fromString(detect(text.toString))
-
-  def detect(text: String): String = {
-    if (text == null || text.isEmpty) return "und"
-    val cjk = text.codePoints().filter(cp =>
-      (cp >= 0x4E00 && cp <= 0x9FFF) || (cp >= 0x3040 && cp <= 0x30FF)).count()
-    if (cjk * 4 >= text.length) return "zh"
-    val lower = " " + text.toLowerCase + " "
-    val scores = profiles.map { case (lang, grams) =>
-      var s = 0.0
-      grams.foreach { g =>
-        var idx = lower.indexOf(g)
-        while (idx >= 0) { s += 1.0; idx = lower.indexOf(g, idx + 1) }
-      }
-      diacritics.getOrElse(lang, Seq.empty).foreach { d =>
-        s += 3.0 * lower.count(_ == d)
-      }
-      lang -> s / math.max(lower.length / 100.0, 1.0)
-    }
-    val (best, bestScore) = scores.maxBy { case (l, s) => (s, l) }
-    if (bestScore <= 0.0) "und" else best
-  }
-
-  /** Column form over the native expression (codegen'd). */
-  def col(text: Column): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
-    column(LangIdText(expression(text)))
-  }
-
-  /** Legacy UDF form — kept as the parity reference for [[LangIdText]]
-    * (a Scala closure boxes/unboxes every row; the expression form
-    * stays inside whole-stage codegen).
-    */
-  lazy val udf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf((s: String) => detect(s))
-}
-
-/** Native expression: character-n-gram language ID ([[LangId.detect]])
-  * as a single static call from generated code.
-  */
-case class LangIdText(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"lang_id expects string, got $other")
-  }
-  override def dataType: DataType = StringType
-  override def nullSafeEval(v: Any): Any =
-    LangId.detectUtf8(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.functions.LangId.detectUtf8($s)")
-  override protected def withNewChildInternal(newChild: Expression): LangIdText =
     copy(child = newChild)
 }

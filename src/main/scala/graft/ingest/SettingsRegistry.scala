@@ -24,8 +24,13 @@ final class SettingsRegistry(
 
   ConfigValidator.validate(config, checkFiles)
 
-  final case class SettingResult(
-      index: Int, validRows: Long, rejectRows: Long, status: String)
+  /** One setting's read outcome
+    * ([[graft.ingest.SettingsRegistry.SettingResult]], declared in the
+    * companion object so a pattern match on it needs no outer-reference
+    * check).
+    */
+  type SettingResult = SettingsRegistry.SettingResult
+  val SettingResult = SettingsRegistry.SettingResult
 
   def size: Int = config.csvSettings.size
 
@@ -62,4 +67,9 @@ final class SettingsRegistry(
       }
       result
     }
+}
+
+object SettingsRegistry {
+  final case class SettingResult(
+      index: Int, validRows: Long, rejectRows: Long, status: String)
 }

@@ -112,8 +112,8 @@ object RollupMain {
     * `overwritePartitions` is a per-day REPLACE: two settings sharing
     * a day would clobber each other's rollups in a shared table (the
     * reference keeps per-setting sink paths for the same reason).
-    * A top-level orchestration StateStore (`<wh>/_settings_state`)
-    * records one COMPLETED/FAILED lineage row + a metrics row
+    * A top-level orchestration [[graft.state.StateStore]]
+    * (`<wh>/_settings_state`) records one COMPLETED/FAILED lineage row + a metrics row
     * (valid/reject counts) per setting — the `Main.java:51-60` status
     * loop — while each sub-warehouse keeps its full per-tier lineage
     * under its per-setting jobId, so lineage stays disjoint by
@@ -158,8 +158,8 @@ object RollupMain {
     * a missing `--warehouse` or a watermark that is not an ISO day
     * (yyyy-MM-dd) throws an IllegalArgumentException naming the flag —
     * none of them is dropped silently, and a bad watermark fails before
-    * any tier commits rather than inside `Retention.expire` after all of
-    * them.
+    * any tier commits rather than inside
+    * [[graft.retention.Retention.expire]] after all of them.
     */
   private[jobs] def parseArgs(args: Array[String]): Args = {
     def bad(msg: String) = throw new IllegalArgumentException(msg)

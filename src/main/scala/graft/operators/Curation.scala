@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * conversation-level content fingerprints.
   *
   * The family's common trick is the cross-engine md5 permutation
-  * already pinned by the dedup pipeline ([[Dedup]], q20/q93): Spark's
+  * already pinned by the daily dup-rate query (q93): Spark's
   * `md5(string)` and DuckDB's `md5(string)` produce the same lowercase
   * hex, so ordering or bucketing by an md5-derived key is a
   * deterministic pseudo-random draw that BOTH engines reproduce
@@ -119,9 +119,8 @@ object Curation {
     *
     * Every conversation lands in exactly one split — the split is a
     * pure function of `conv_id` (bucket = 28-bit md5 prefix mod 1000,
-    * the [[Dedup.simhash]] `conv(substr(md5,1,N),16,10)` cross-engine
-    * trick), so turns of one conversation NEVER straddle splits, new
-    * data joins a split without reshuffling old assignments, and two
+    * the `conv(substr(md5,1,N),16,10)` cross-engine trick), so turns
+    * of one conversation NEVER straddle splits, new data joins a split without reshuffling old assignments, and two
     * jobs (or two engines) agree without coordination. Thresholds are
     * per-mille: bucket < `trainPerMille` → train, < `trainPerMille +
     * valPerMille` → val, else test.
@@ -183,7 +182,7 @@ object Curation {
     * turns full-corpus parity checks into a digest anti-join instead
     * of a text-by-text compare; the digest is also the key for exact
     * conversation-level dedup (the conv-granularity sibling of
-    * [[Dedup.exact]]'s doc-granularity md5).
+    * [[SeriesOps.dailyDupRate]]'s per-turn md5).
     *
     * Encoding: each turn's text renders length-prefixed as
     * `<charlen>:<text>` (null text → bare `N`), turns joined by
@@ -245,8 +244,8 @@ object Curation {
     * identically only by genuine md5 collision, never by encoding
     * ambiguity (the earlier joiner/marker scheme had both holes).
     * Char length counts CODE POINTS in both engines (`UTF8String
-    * .numChars` here, `length()` in DuckDB) — the same cross-engine
-    * pin the q27 gram indexing relies on.
+    * .numChars` here, `length()` in DuckDB), so astral-plane text
+    * prefixes the same length in both.
     */
   private def rowChecksumCol: org.apache.spark.sql.Column = {
     def lp(f: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -274,10 +273,9 @@ object Curation {
     * hashed to the cross-engine 60-bit md5 prefix, and the hashes SUM
     * as DECIMAL — addition is commutative/associative, so the checksum
     * is independent of partitioning, row order, and engine, and shard
-    * checksums MERGE by plain addition (the [[graft.operators.Dedup.bloomBits]]
-    * artifact doctrine: per-shard audits add up to the corpus audit
-    * without a re-scan). The hashes widen to DECIMAL(28,0) before the
-    * sum so the accumulator is the full DECIMAL(38,0) — safe past
+    * checksums MERGE by plain addition (per-shard audits add up to the
+    * corpus audit without a re-scan). The hashes widen to DECIMAL(28,0)
+    * before the sum so the accumulator is the full DECIMAL(38,0) — safe past
     * 10¹⁹ rows; no overflow, no modulus needed.
     *
     * Detects any changed/added/dropped/duplicated row ANYWHERE with

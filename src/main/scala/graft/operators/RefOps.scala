@@ -1087,7 +1087,7 @@ object RefOps {
     * conversations.
     * Conversations with zero tool calls yield no row (no toolbox, no
     * diversity — NULL columns would poison downstream averages);
-    * null tool is the no-call marker ([[Rollup]]'s `count(tool)`
+    * null tool is the no-call marker ([[graft.rollup.Rollup]]'s `count(tool)`
     * semantics), not a tool name.
     * Scale: the per-(conv, tool) count exchanges with MAP-SIDE partial
     * aggregation — at 10¹² turns the shuffle moves pre-collapsed

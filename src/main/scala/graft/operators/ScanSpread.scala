@@ -7,14 +7,12 @@ import org.apache.spark.sql.DataFrame
   * few) scan partitions (single parquet file / row group, small table,
   * unsplittable container) serializes every downstream map pass on one
   * core, however many the cluster has, because nothing upstream of the
-  * first exchange redistributes it. The hash-heavy document operators
-  * (shingle-md5 + minhash, simhash, winnowing fingerprints, bloom
-  * prescreen) are exactly such passes: all their cost is BEFORE the
-  * first shuffle.
+  * first exchange redistributes it. A per-row parse pass with no
+  * downstream exchange ([[RefOps.typedCast]]'s regexp extraction) is
+  * exactly such a pass: all its cost is BEFORE any shuffle.
   *
   * The spread is gated on the PLANNED input size (pure planning-time
-  * estimate — no job, so plan-constructor contracts like
-  * decontaminateBloomWith's zero-jobs pin hold): inputs estimated
+  * estimate — no job, so building the plan still starts none): inputs estimated
   * above a couple of scan splits already produce enough partitions,
   * so the gate makes this a no-op at scale — the corpus is never
   * round-robin-shuffled when it is genuinely large. When the gate

@@ -234,8 +234,8 @@ object SeriesOps {
     * inherently O(n²) per key: `tailK = 32` bounds it at 496 slopes
     * per conversation — the recency-weighted reading a trend monitor
     * wants anyway — and the cap makes the quadratic structurally
-    * harmless at 10¹² turns (the [[Dedup]] hot-bucket-guard doctrine:
-    * blow-ups are prevented by construction, not by hoping).
+    * harmless at 10¹² turns (blow-ups are prevented by construction,
+    * not by hoping).
     *
     * "Median" is the LOWER-median convention — the element at 1-based
     * position `(m+1) div 2` of the sorted slope list: an EXACT sample
@@ -651,8 +651,7 @@ object SeriesOps {
     * vocabulary size, with the estimate for every term within
     * `N / (capacity+1)` of truth.
     *
-    * Verification contract (the ANN-family exhaustive-settings
-    * pattern): with `capacity ≥ distinct terms` no trim fires, counts
+    * Verification contract (exhaustive settings): with `capacity ≥ distinct terms` no trim fires, counts
     * are EXACT, and the output is bit-identical to [[termTopK]] — the
     * driver query runs there (hash-exact vs the q75 oracle). Below
     * capacity the spec asserts the error bound and that every true
@@ -1686,13 +1685,11 @@ object SeriesOps {
   /** Daily duplication monitor — per UTC day: turns carrying text, the
     * number of DISTINCT texts, the duplicated-turn count (turns minus
     * distinct), the largest single clone family, and the duplication
-    * rate. The timeseries face of the exact-dedup family
-    * ([[Dedup.exact]]): a contamination spike ("yesterday 40% of turns
-    * were copies") reads directly off this series, where the corpus-
-    * grain dedup only says the corpus total.
+    * rate. A contamination spike ("yesterday 40% of turns were
+    * copies") reads directly off this series, where a corpus-grain
+    * dedup only says the corpus total.
     *
-    * Texts are keyed by md5 (the [[Dedup.exact]] identity doctrine —
-    * the shuffle moves 32-hex-char keys, not document bodies; the
+    * Texts are keyed by md5 (whole-text identity — the shuffle moves 32-hex-char keys, not document bodies; the
     * oracle mirrors md5 term-for-term so collisions, were one ever to
     * occur, would affect both engines identically). Null text carries
     * no content and drops from duplication accounting; null ts drops
@@ -2277,16 +2274,16 @@ object SeriesOps {
     * corpus-freshness KPI a training-data pipeline reads daily ("is
     * the crawl still finding new text, or re-ingesting the same
     * phrases?") — the SHINGLE-grain lens between [[dailyDupRate]]
-    * (whole-text identity), [[termVocabGrowth]] (single tokens ever),
-    * and the dedup family (pairwise near-dup): boilerplate creep
-    * shows here first, before whole texts collide.
+    * (whole-text identity) and [[termVocabGrowth]] (single tokens
+    * ever): boilerplate creep shows here first, before whole texts
+    * collide.
     *
     * Shingles are the engine's ONE canonical text-identity unit: the
     * native [[graft.functions.TextOps.shingleHashes3]] expression
     * (3-word grams, short texts collapse to a whole-text shingle, the
-    * 28-bit md5-prefix hash) — the exact unit the minhash/winnowing
-    * pipelines and their DuckDB mirrors already share, so the oracle
-    * reconstructs it term-for-term. First-seen is min day per hash
+    * 28-bit md5-prefix hash) — built from `md5`, `substr` and `split`,
+    * which both engines share, so the oracle reconstructs it
+    * term-for-term. First-seen is min day per hash
     * over the collapsed census ([[termVocabGrowth]] first-flag
     * machinery). Counts exact longs; the two novelty rates are the
     * rounded divisions, denominators ≥ 1 by row existence. Null ts /
@@ -2395,8 +2392,7 @@ object SeriesOps {
     * retained as the PARITY REFERENCE for the compiled kernel that
     * replaced it on the hot path ([[graft.functions.VectorOps.dtwLong]];
     * the nested `aggregate` HOFs are CodegenFallback, one interpreted
-    * lambda per DP cell — the RepetitionStats doctrine applied to the
-    * k²·maxDays² pair workload). Row layout: list position p holds
+    * lambda per DP cell, too slow for the k²·maxDays² pair workload). Row layout: list position p holds
     * dp[·][p−1], so position 1 is the j=0 sentinel column; the init
     * row is [0, ∞, …] (dp[0][0]=0). The DuckDB oracle runs the
     * IDENTICAL fold via struct-seeded 2-arg `list_reduce`, and

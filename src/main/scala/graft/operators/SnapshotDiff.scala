@@ -34,19 +34,12 @@ import org.apache.spark.sql.functions._
   */
 object SnapshotDiff {
 
-  /** Diff `newSnap` against `oldSnap` on `keys`, reporting per-measure
-    * old/new values for every added / removed / changed key.
-    *
-    * Output: `keys…, status ('added'|'removed'|'changed'),
-    * old_<m>, new_<m>` for each measure, one row per drifted key.
-    */
   /** Referential-integrity census between two keyed tables — the
     * cross-table sibling of [[diff]]: ONE summary row counting matched
     * keys, left-only orphans, right-only orphans, and the ROUND-6
     * coverage shares. The pipeline health check for any id-linked
-    * pair (documents ↔ embeddings: docs the encoder missed / vectors
-    * whose source was culled; transcripts ↔ rollup: conversations a
-    * tier lost). Keys are de-duplicated per side (multiplicity is
+    * pair (transcripts ↔ a rollup tier: conversations the tier lost /
+    * rollup rows whose source conversation is gone). Keys are de-duplicated per side (multiplicity is
     * [[diff]]'s job) and null keys drop (unkeyable — the samplePerConv
     * doctrine).
     *
@@ -83,6 +76,12 @@ object SnapshotDiff {
           .as("right_coverage"))
   }
 
+  /** Diff `newSnap` against `oldSnap` on `keys`, reporting per-measure
+    * old/new values for every added / removed / changed key.
+    *
+    * Output: `keys…, status ('added'|'removed'|'changed'),
+    * old_<m>, new_<m>` for each measure, one row per drifted key.
+    */
   def diff(oldSnap: DataFrame, newSnap: DataFrame, keys: Seq[String],
       measures: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "diff needs at least one key column")

@@ -10,12 +10,16 @@ import scala.jdk.CollectionConverters._
 /** Checkpoint / lineage / metrics state, mirroring the reference's H2
   * state machine (`H2DatabaseManager.java:43-86`):
   *
-  *  - [[Checkpoint]] ≈ `csv_settings` + `jobs` — per (tier, partition)
-  *    watermark + status instead of per-file status;
-  *  - [[LineageRow]] ≈ `row_processing` — per (tier, partition) work
-  *    unit with status ∈ PENDING/PROCESSING/COMPLETED/FAILED/RETRY
+  *  - [[graft.state.StateStore.Checkpoint]] ≈ `csv_settings` + `jobs` —
+  *    per (tier, partition) watermark + status instead of per-file status;
+  *  - [[graft.state.StateStore.LineageRow]] ≈ `row_processing` — per
+  *    (tier, partition) work unit with status ∈
+  *    PENDING/PROCESSING/COMPLETED/FAILED/RETRY
   *    (`DAO/RowProcessingStatus.java:5-10`) and `retry_count`;
-  *  - [[MetricsRow]] ≈ `jobs.processed_rows/failed_rows` counters.
+  *  - [[graft.state.StateStore.MetricsRow]] ≈
+  *    `jobs.processed_rows/failed_rows` counters;
+  *  - [[graft.state.StateStore.LogRow]] ≈ `migration_logs`, the leveled
+  *    job log.
   *
   * Storage: JSON-lines files, one per commit, under `<root>/<kind>/`,
   * each written temp-then-ATOMIC_MOVE so a kill mid-commit never leaves
@@ -57,23 +61,17 @@ import scala.jdk.CollectionConverters._
   */
 class StateStore(root: String) {
 
-  /** `rawCount` records how many RAW input rows the partition's day had
-    * when the checkpoint was written — the late-arrival detector: a
-    * COMPLETED day whose current input census disagrees gets recomputed
-    * (idempotent overwrite) instead of silently keeping stale rollups.
-    * -1 = unknown (checkpoints written before the field existed, or
-    * callers without a census); unknown never reads as dirty.
-    */
-  final case class Checkpoint(
-      tier: String, partition: String, watermarkUs: Long, status: String,
-      jobId: String, seq: Long, rawCount: Long = -1L)
-
-  final case class LineageRow(
-      tier: String, partition: String, status: String, error: String,
-      retryCount: Int, rows: Long, jobId: String, seq: Long)
-
-  final case class MetricsRow(
-      jobId: String, tier: String, processed: Long, failed: Long, seq: Long)
+  // the row types live in the companion object, so a pattern match on
+  // them needs no outer-reference check; the aliases keep
+  // `store.Checkpoint(...)` call sites working
+  type Checkpoint = StateStore.Checkpoint
+  val Checkpoint = StateStore.Checkpoint
+  type LineageRow = StateStore.LineageRow
+  val LineageRow = StateStore.LineageRow
+  type MetricsRow = StateStore.MetricsRow
+  val MetricsRow = StateStore.MetricsRow
+  type LogRow = StateStore.LogRow
+  val LogRow = StateStore.LogRow
 
   private def dir(kind: String) = Paths.get(root, kind)
 
@@ -296,16 +294,6 @@ class StateStore(root: String) {
 
   // --- leveled migration log -------------------------------------------
 
-  /** Append-only leveled job log — the reference's `migration_logs`
-    * stream (`H2DatabaseManager.java:55-62`: ts, level
-    * INFO/WARNING/ERROR, message per job). Lineage rows carry errors;
-    * this is the human-facing channel for non-fatal signals (precision
-    * loss, rejects, retries) that the reference logs at WARNING.
-    */
-  final case class LogRow(
-      tsMs: Long, level: String, tier: String, message: String,
-      jobId: String, seq: Long)
-
   private val logLevels = Set("INFO", "WARNING", "ERROR")
 
   def log(level: String, tier: String, message: String, jobId: String): Unit = {
@@ -334,4 +322,35 @@ class StateStore(root: String) {
       case ((t, p), r) if t == tier && r.status == "FAILED" && p != "*" =>
         p -> r.retryCount
     }
+}
+
+object StateStore {
+
+  /** `rawCount` records how many RAW input rows the partition's day had
+    * when the checkpoint was written — the late-arrival detector: a
+    * COMPLETED day whose current input census disagrees gets recomputed
+    * (idempotent overwrite) instead of silently keeping stale rollups.
+    * -1 = unknown (checkpoints written before the field existed, or
+    * callers without a census); unknown never reads as dirty.
+    */
+  final case class Checkpoint(
+      tier: String, partition: String, watermarkUs: Long, status: String,
+      jobId: String, seq: Long, rawCount: Long = -1L)
+
+  final case class LineageRow(
+      tier: String, partition: String, status: String, error: String,
+      retryCount: Int, rows: Long, jobId: String, seq: Long)
+
+  final case class MetricsRow(
+      jobId: String, tier: String, processed: Long, failed: Long, seq: Long)
+
+  /** Append-only leveled job log — the reference's `migration_logs`
+    * stream (`H2DatabaseManager.java:55-62`: ts, level
+    * INFO/WARNING/ERROR, message per job). Lineage rows carry errors;
+    * this is the human-facing channel for non-fatal signals (precision
+    * loss, rejects, retries) that the reference logs at WARNING.
+    */
+  final case class LogRow(
+      tsMs: Long, level: String, tier: String, message: String,
+      jobId: String, seq: Long)
 }

@@ -7,9 +7,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * `count()` or a schema-inferring `spark.read.parquet` costs a full
   * job-schedule round trip, and on a shared cluster a queue wait). Used
   * by [[SnapshotTable]] for manifest-listed files (row counts, the read
-  * schema) and by callers that need a row-count hint for a plain
-  * parquet path (e.g. sizing the IVF training sample —
-  * `Similarity.trainingSample`'s `totalHint`).
+  * schema); [[rowCount]] gives the same count for a plain parquet path.
   */
 object ParquetFooters {
 

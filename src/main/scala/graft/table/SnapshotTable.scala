@@ -43,35 +43,14 @@ final class SnapshotTable(val root: String) {
   private val snapshotsDir = Paths.get(root, "snapshots")
   private val currentPtr = Paths.get(root, "CURRENT")
 
-  /** One data file in a snapshot. `minKey`/`maxKey` are the file's
-    * clustering-key bounds (conv_id — tier writes are range-partitioned
-    * and sorted on it), the Iceberg manifest column-stats analogue:
-    * per-conversation reads prune to the files whose key range covers
-    * the conversation, without opening any footer. Empty string = bounds
-    * unknown (file never pruned by key). `rows` is the file's record
-    * count, read from the same footer at staging (-1 = unknown: a
-    * manifest written before counts were recorded), so [[rowCount]]
-    * opens no footer for files committed with it.
-    */
-  final case class FileEntry(path: String, partition: String, bytes: Long,
-      minKey: String = "", maxKey: String = "", rows: Long = -1L)
-  final case class Manifest(
-      version: Long,
-      partitionCol: String,
-      files: Seq[FileEntry],
-      parentVersion: Long,
-      /** Clustering-key column whose per-file bounds are tracked ("" = none). */
-      clusterKey: String = "",
-      /** Idempotence keys of recently committed streaming micro-batches
-        * (most recent last, bounded to [[SnapshotTable.maxBatchKeys]]).
-        * Carried INSIDE the atomic manifest commit so "did batch N
-        * land?" and "are batch N's files visible?" are one fact — the
-        * streaming sink's exactly-once marker (see
-        * [[graft.streaming.StreamingRollupJob]]). The bound is safe
-        * because a replay is always the LAST uncommitted batch of a
-        * checkpoint, never hundreds back.
-        */
-      batchKeys: Seq[String] = Seq.empty)
+  // the manifest types live in the companion object, so a pattern
+  // match on them needs no outer-reference check
+  /** One data file of a snapshot (see [[graft.table.SnapshotTable.FileEntry]]). */
+  type FileEntry = SnapshotTable.FileEntry
+  val FileEntry = SnapshotTable.FileEntry
+  /** One snapshot's file list (see [[graft.table.SnapshotTable.Manifest]]). */
+  type Manifest = SnapshotTable.Manifest
+  val Manifest = SnapshotTable.Manifest
 
   // --- manifest (de)serialization ------------------------------------
 
@@ -553,6 +532,36 @@ final class SnapshotTable(val root: String) {
 }
 
 object SnapshotTable {
+  /** One data file in a snapshot. `minKey`/`maxKey` are the file's
+    * clustering-key bounds (conv_id — tier writes are range-partitioned
+    * and sorted on it), the Iceberg manifest column-stats analogue:
+    * per-conversation reads prune to the files whose key range covers
+    * the conversation, without opening any footer. Empty string = bounds
+    * unknown (file never pruned by key). `rows` is the file's record
+    * count, read from the same footer at staging (-1 = unknown: a
+    * manifest written before counts were recorded), so the table's
+    * `rowCount` opens no footer for files committed with it.
+    */
+  final case class FileEntry(path: String, partition: String, bytes: Long,
+      minKey: String = "", maxKey: String = "", rows: Long = -1L)
+  final case class Manifest(
+      version: Long,
+      partitionCol: String,
+      files: Seq[FileEntry],
+      parentVersion: Long,
+      /** Clustering-key column whose per-file bounds are tracked ("" = none). */
+      clusterKey: String = "",
+      /** Idempotence keys of recently committed streaming micro-batches
+        * (most recent last, bounded to [[SnapshotTable.maxBatchKeys]]).
+        * Carried INSIDE the atomic manifest commit so "did batch N
+        * land?" and "are batch N's files visible?" are one fact — the
+        * streaming sink's exactly-once marker (see
+        * [[graft.streaming.StreamingRollupJob]]). The bound is safe
+        * because a replay is always the LAST uncommitted batch of a
+        * checkpoint, never hundreds back.
+        */
+      batchKeys: Seq[String] = Seq.empty)
+
   /** Streaming idempotence keys retained per manifest (see
     * [[SnapshotTable.Manifest.batchKeys]]).
     */

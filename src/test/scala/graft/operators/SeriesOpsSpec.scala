@@ -1722,6 +1722,27 @@ class SeriesOpsSpec extends SparkTestBase {
     }
   }
 
+  test("native shingle hashes == the built-in md5-prefix form (q105 oracle parity)") {
+    // the DuckDB oracle of shingleNoveltyDaily mirrors the BUILT-IN form
+    // (single-space split, 3-word windows, md5 7-hex prefix); the fused
+    // expression must be bit-equal to it, edge strings included
+    import spark.implicits._
+    val texts = turns.select("text")
+      .union(Seq("", "one", "two words", "a  b   c", "   ", " leading and trailing ",
+        null).toDF("text"))
+    val toks = split(col("text"), " ")
+    val builtIn = transform(
+      when(size(toks) < 3, array(col("text"))).otherwise(
+        transform(sequence(lit(1), size(toks) - 2),
+          i => concat_ws(" ", slice(toks, i, lit(3))))),
+      s => conv(substring(md5(s), 1, 7), 16, 10).cast("long"))
+    val both = texts.select(col("text"),
+      graft.functions.TextOps.shingleHashes3(col("text")).as("nat"), builtIn.as("ref"))
+    assert(both.filter(col("nat").isNotNull).count() > 100)
+    val bad = both.filter(!(col("nat") <=> col("ref")))
+    assert(bad.count() == 0, s"native/built-in shingle hash divergence:\n${bad.head(3).mkString("\n")}")
+  }
+
   test("dtwPairs golden: elastic alignment, top-k cut, canonical pairs") {
     // A = [2,4] over d1/d2, B = [2,5] over d1/d3 (different days — DTW
     // doesn't care), C = [1] misses the k=2 cut (totals B=7 > A=6 > C)

@@ -156,6 +156,20 @@ class StitchSpec extends SparkTestBase {
       assertSameRows(storedStitch(a, b), direct(a, b))
   }
 
+  test("stitchRangeServing over a fully built warehouse gives the stored answer") {
+    // the horizon lies past the range, so serving mode degenerates to
+    // the stored mode: both equal the recompute over raw
+    val (a, b) = ("2024-01-04 05:06:07", "2024-01-20 10:11:12")
+    val served = Rollup.stitchRangeServing(spark,
+      new graft.table.SnapshotTable(s"$storedWh/rollup_1m"),
+      new graft.table.SnapshotTable(s"$storedWh/rollup_1h"),
+      new graft.table.SnapshotTable(s"$storedWh/rollup_1d"),
+      new graft.state.StateStore(s"$storedWh/_state"),
+      turns, a, b)
+    assertSameRows(served, storedStitch(a, b))
+    assertSameRows(served, Rollup.stitchRange(turns, a, b))
+  }
+
   test("stitchRangeStored plan: aligned range reads ONLY pruned 1d files, zero raw") {
     // whole-day-aligned range → a single 1d slice; the raw input (an
     // in-memory frame here) must not appear in the plan at all, and

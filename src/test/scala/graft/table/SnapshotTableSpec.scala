@@ -242,8 +242,7 @@ class SnapshotTableSpec extends SparkTestBase {
     val t = new SnapshotTable(tmpDir("snap-footers"))
     t.overwritePartitions(df("a" -> 3, "b" -> 2), "p")
     assert(ParquetFooters.rowCount(spark, t.root) == t.read(spark).count())
-    // the driver testdata shape (a parquet table path) — the q32/q38
-    // training-sample hint path runs NO Spark job
+    // a plain parquet table path, the shape the query suite reads
     val emb = "/root/testdata/sf0.001/embeddings.parquet"
     assert(ParquetFooters.rowCount(spark, emb) == spark.read.parquet(emb).count())
   }
