@@ -68,4 +68,36 @@ object Synth {
       Turn(s"conv$convId", i, role, text, tool, t)
     }
   }
+
+  /** Seeded synthetic embeddings with KNOWN injected near-duplicates:
+    * `id % 10 == 9` → doc id-2's gaussian vector plus a small
+    * perturbation (cosine ≈ 0.995); everything else an independent
+    * gaussian (pairwise cosine concentrates at 0 ± 1/√dims, so at any
+    * sane threshold the ONLY true pairs are the injected ones).
+    * Ground truth: near pairs (id-2, id) for id%10==9.
+    */
+  def embeddings(spark: org.apache.spark.sql.SparkSession, n: Long,
+      dims: Int = 64, seed: Long = 42L): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.{Row => SqlRow}
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType, nullable = false),
+      StructField("embedding", ArrayType(FloatType, containsNull = false), nullable = false)))
+    def baseVec(baseId: Long): Array[Float] = {
+      val rng = new java.util.Random(seed ^ (baseId * 0xc2b2ae3d27d4eb4fL))
+      Array.fill(dims)(rng.nextGaussian().toFloat)
+    }
+    val rdd = spark.range(0L, n).rdd.map { id =>
+      val v =
+        if (id % 10 == 9) {
+          val w = baseVec(id - 2)
+          val rng = new java.util.Random(seed ^ (id * 0x9e3779b97f4a7c15L))
+          var i = 0
+          while (i < dims) { w(i) += (rng.nextGaussian() * 0.1).toFloat; i += 1 }
+          w
+        } else baseVec(id)
+      SqlRow(id, v.toSeq)
+    }
+    spark.createDataFrame(rdd, schema)
+  }
 }

@@ -29,11 +29,9 @@ object Multimodal {
   /** Deterministic synthetic media, generated distributedly (one task
     * per id range, never driver-side). Every attribute and payload byte
     * derives from md5 hex of `"seed:id:field"` strings — deterministic
-    * AND expressible in ANSI SQL, so the DuckDB oracle reconstructs the
-    * IDENTICAL table and q30/q31 become hash-exact checks instead of
-    * rows-only (the previous `java.util.Random` derivation had no SQL
-    * mirror). Derivation, shared verbatim with
-    * [[graft.OracleSqlGen.mediaCte]]:
+    * AND expressible in ANSI SQL, so a SQL engine can reconstruct the
+    * IDENTICAL table (a `java.util.Random` derivation has no SQL
+    * mirror). Derivation:
     *
     *  - `mh = md5("seed:id:meta")`; `hx(o,l)` = hex digits [o, o+l)
     *  - kind = [image, audio, video][hx(0,2) mod 3]
@@ -110,12 +108,11 @@ object Multimodal {
   }
 
   /** Polynomial digest constants for [[extractFeatures]]'s
-    * `feature_digest` — shared with the band-key fold
-    * ([[Dedup.bandFoldM]]/[[Dedup.bandFoldP]]) and with
-    * [[graft.OracleSqlGen]], which inlines the precomputed powers.
+    * `feature_digest`: products stay < 2^52, wrap-free on 64-bit
+    * engines (DuckDB errors on overflow).
     */
-  val digestM: Long = graft.operators.Dedup.bandFoldM
-  val digestP: Long = graft.operators.Dedup.bandFoldP
+  val digestM: Long = 1000003L
+  val digestP: Long = 2147483647L
 
   /** Batched feature extraction over partitions: the Scala analogue of
     * `mapInPandas` — each partition is processed as one streaming batch
@@ -129,7 +126,7 @@ object Multimodal {
     *    columns for harnesses that cannot order an array column;
     *  - `feature_digest` = `Σ sums(j)·M^j mod P` over the INTEGER
     *    bucket sums and `byte_len` — exact-arithmetic columns a SQL
-    *    oracle reproduces bit-for-bit (the q30 check), collision-
+    *    engine reproduces bit-for-bit, collision-
     *    covering every byte of the decode input.
     */
   def extractFeatures(media: DataFrame, dims: Int = 32): DataFrame = {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorOps
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -58,8 +58,7 @@ object Similarity {
     *
     * `bits = 0, tables = 1` is the EXHAUSTIVE setting: one all-pass
     * bucket, so the candidate set is the whole corpus and the result
-    * must equal [[bruteForceTopK]] — the oracle-verifiable mode (q39)
-    * that pins the probe/rerank machinery, leaving only bucketing
+    * must equal [[bruteForceTopK]] — the exact mode that pins the probe/rerank machinery, leaving only bucketing
     * recall as the approximate part.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
@@ -291,7 +290,7 @@ object Similarity {
     * hunting at corpus scale wants bits 16-20 (p≈0.86 at sim 0.9 keeps
     * recall while buckets shrink to corpus/2^bits). Hot buckets
     * (boilerplate/zero vectors) fall back to star pairing against the
-    * bucket's min id via [[Dedup.pairsFromBuckets]] — linear, keeps
+    * bucket's min id via [[pairsFromBuckets]] — linear, keeps
     * dedup connectivity.
     */
   def lshPairsAbove(corpus: DataFrame, threshold: Double, bits: Int = 8,
@@ -313,13 +312,133 @@ object Similarity {
     // candidate pair is flop-identical to the fused kernel anyway —
     // the split only pays off where one row scores MANY pairs
     // (bruteForce/cosinePairsAbove), not in bucketed candidate scoring.
-    Dedup.pairsFromBuckets(banded, maxBucket, extra = Seq("embedding"),
+    pairsFromBuckets(banded, maxBucket, extra = Seq("embedding"),
         distinctOutput = false)
       .withColumn("sim",
         round(VectorOps.cosineSim(col("embedding_a"), col("embedding_b")), 6))
       .filter(col("sim") >= threshold)
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"), col("sim"))
       .distinct()
+  }
+
+  /** Above this cap, [[pairsFromBuckets]] switches to the segmented
+    * parallel expansion (an exhaustive-mode bucket can hold the whole
+    * corpus — expanding it as one array would serialize the quadratic
+    * stage on one task); at or below it, buckets are small and many,
+    * and the zero-exchange single-array expansion wins.
+    */
+  private val parallelExpandThreshold = 1024
+
+  /** Segment size of the parallel expansion: each work unit expands at
+    * most segSize² pairs, so units spread evenly over task slots.
+    */
+  private val expandSegSize = 128
+
+  /** Shared banded-pairing kernel, built around ONE shuffle of
+    * (bk, doc_id, extra…) that every branch reuses — the candidate step
+    * of [[lshPairsAbove]]:
+    *
+    *  - a window over `bk` computes each row's bucket size `n` and the
+    *    bucket representative (min doc_id + its `extra` values);
+    *  - buckets of size in (1, maxBucket]: `collect_list` per bucket —
+    *    now PROVABLY bounded by the cap, so the array-explode pairwise
+    *    expansion is safe (an uncapped version could
+    *    materialize a whole degenerate bucket on one reducer) — and the
+    *    group-by runs on the window's existing bk partitioning, adding
+    *    no exchange;
+    *  - buckets beyond the cap: star pairs (rep, member) by pure
+    *    filter+project — linear, no join, no array.
+    *
+    * Both branches hang off the same Exchange(bk), which Spark's
+    * exchange-reuse dedupes — the (expensive) signature computation
+    * below it runs once, not once per branch. `extra` columns (e.g.
+    * signatures/embeddings) ride along into the output as `<c>_a/<c>_b`.
+    */
+  private[operators] def pairsFromBuckets(banded: DataFrame, maxBucket: Int,
+      extra: Seq[String] = Seq.empty,
+      /** false → caller dedupes cross-band repeats itself; use when the
+        * `extra` columns are wide (e.g. embeddings) and a distinct over
+        * them would shuffle the payload — score first, dedupe scalars.
+        */
+      distinctOutput: Boolean = true): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("bk"))
+    val stat = extra.foldLeft(
+      banded
+        .withColumn("n", count(lit(1)).over(w))
+        .withColumn("rep", min(col("doc_id")).over(w))
+        .filter(col("n") > 1)) { (df, c) =>
+      df.withColumn(s"rep_$c", min_by(col(c), col("doc_id")).over(w))
+    }
+    val bucketArrs = stat.filter(col("n") <= maxBucket)
+      .groupBy(col("bk"))
+      .agg(sort_array(collect_list(struct(col("doc_id") +: extra.map(col): _*)))
+        .as("ids"))
+    val pairProj: Seq[Column] =
+      col("p.a.doc_id").as("doc_a") +: col("p.b.doc_id").as("doc_b") +:
+        extra.flatMap(c => Seq(col(s"p.a.$c").as(s"${c}_a"), col(s"p.b.$c").as(s"${c}_b")))
+    val pairsSmall =
+      if (maxBucket <= parallelExpandThreshold)
+        // capped path (every production caller): buckets are provably
+        // ≤ maxBucket members, the pairwise expansion is bounded and
+        // runs on the window's existing bk partitioning — no extra
+        // exchange, parallel across the many buckets
+        bucketArrs
+          .select(explode(expr(
+            "flatten(transform(ids, (a, i) -> transform(slice(ids, i + 2, size(ids)), b -> struct(a, b))))"))
+            .as("p"))
+          .select(pairProj: _*)
+      else {
+        // UNCAPPED path (the exhaustive setting, e.g. lshPairsAbove's
+        // bits=0 single all-pass bucket): one bucket holds the whole
+        // corpus, so the single-array expansion above would build and
+        // score all C(n,2) pairs IN ONE TASK — the quadratic stage
+        // serializes on one core however many the cluster has. Split
+        // each bucket's sorted array into fixed segments and emit one
+        // WORK UNIT per segment pair (g1 ≤ g2, each carrying only its
+        // two slices), exchange the units across the cluster (explicit
+        // partition count: AQE would coalesce these few small-byte
+        // rows back to one partition, defeating the point), then
+        // expand per unit: positional i<j pairs within a segment, full
+        // A×B across segments — exactly the global i<j pair set of the
+        // sorted array, in ≤ segSize² chunks. Unit payload totals
+        // O(n·nseg) bytes vs the O(n²) pair output — the exchange is
+        // asymptotically free next to the expansion it parallelizes.
+        val s = expandSegSize
+        val nseg = s"cast(ceil(size(ids) / $s.0) as int)"
+        val units = bucketArrs
+          .select(col("bk"), explode(expr(
+            s"""flatten(transform(sequence(0, $nseg - 1), g1 ->
+               |  transform(sequence(g1, $nseg - 1), g2 -> struct(
+               |    g1 as g1, g2 as g2,
+               |    slice(ids, g1 * $s + 1, $s) as sa,
+               |    slice(ids, g2 * $s + 1, $s) as sb))))""".stripMargin))
+            .as("u"))
+          .repartition(banded.sparkSession.sparkContext.defaultParallelism,
+            col("bk"), col("u.g1"), col("u.g2"))
+        units
+          .select(explode(when(col("u.g1") === col("u.g2"),
+            expr("flatten(transform(u.sa, (a, i) -> transform(slice(u.sa, i + 2, size(u.sa)), b -> struct(a, b))))"))
+            .otherwise(
+              expr("flatten(transform(u.sa, a -> transform(u.sb, b -> struct(a, b))))")))
+            .as("p"))
+          .select(pairProj: _*)
+      }
+    val pairsBig = stat.filter(col("n") > maxBucket && col("doc_id") =!= col("rep"))
+      .select(col("rep").as("doc_a") +: col("doc_id").as("doc_b") +:
+        extra.flatMap(c => Seq(col(s"rep_$c").as(s"${c}_a"), col(c).as(s"${c}_b"))): _*)
+    val outCols = Seq("doc_a", "doc_b") ++ extra.flatMap(c => Seq(s"${c}_a", s"${c}_b"))
+    // doc_a =!= doc_b: a numeric-fold key collision between two bands
+    // of the SAME doc (P ≈ C(bands,2)/2³¹ per doc — expected hits at
+    // 10¹⁰ docs) puts that doc_id in one bucket twice, and the
+    // slice-pairing would emit a (x, x) self-pair that `distinct` does
+    // NOT remove and an `a.doc_id < b.doc_id` self-join never
+    // produces. Struct-keyed callers (per-table LSH buckets) cannot
+    // collide this way; the guard is here so every
+    // caller is safe by construction.
+    val unioned = pairsSmall.select(outCols.map(col): _*)
+      .union(pairsBig.select(outCols.map(col): _*))
+      .filter(col("doc_a") =!= col("doc_b"))
+    if (distinctOutput) unioned.distinct() else unioned
   }
 
   /** Embedding-space label-outlier flagging: per-vector cosine to its
@@ -333,8 +452,8 @@ object Similarity {
     * is a cross-row float SUM whose accumulation order differs between
     * engines (and between runs at different parallelism), so a
     * centroid-based flag is not reproducible — the min-id reference
-    * keeps every similarity a pure two-vector function (the q28 ROUND-6
-    * cosine doctrine) and the whole output oracle-exact. A reference
+    * keeps every similarity a pure two-vector function (ROUND-6
+    * cosine) and the whole output oracle-exact. A reference
     * row scores 1.0 against itself and stays in the output.
     *
     * Plan: the per-label min-id census partial-aggregates map-side

@@ -1,30 +1,32 @@
 package graft.operators
 
-import graft.functions.{LangId, TextFunctions, TextOps}
-import org.apache.spark.sql.DataFrame
+import graft.functions.TextOps
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Text analysis over the `documents` table: token counting, quality
-  * scoring, language ID, winnowing fingerprints. Everything except
-  * lang-ID is pure codegen'd column arithmetic.
+/** Within-document text quality metrics over a `(doc_id, text)` frame:
+  * Gopher-style repetition fractions and the composite keep/drop gate
+  * built on them. Pure codegen'd column arithmetic plus one native
+  * expression ([[graft.functions.RepetitionStats]]).
   */
 object TextAnalysis {
 
-  def stats(docs: DataFrame): DataFrame =
-    ScanSpread.spreadForCompute(docs).select(
-      col("doc_id"),
-      length(col("text")).cast("long").as("n_chars"),
-      TextFunctions.tokenCountWs(col("text")).as("tokens_ws"),
-      TextFunctions.tokenCountBpe(col("text")).as("tokens_bpe"),
-      TextFunctions.punctRatio(col("text")).as("punct_ratio"),
-      TextFunctions.stopwordRatio(col("text")).as("stopword_ratio"),
-      TextFunctions.qualityScorePpm(col("text")).as("quality_ppm"))
+  /** Punctuation ratio: punctuation chars / total chars. */
+  private def punctRatio(text: Column): Column =
+    when(length(text) === 0, 0.0).otherwise(
+      length(regexp_replace(text, "[^.,;:!?'\"()\\[\\]{}-]", "")).cast("double") /
+        length(text).cast("double"))
 
-  def langId(docs: DataFrame): DataFrame =
-    ScanSpread.spreadForCompute(docs).select(
-      col("doc_id"),
-      LangId.col(col("text")).as("lang_pred"),
-      col("lang").as("lang_label"))
+  /** Stopword ratio over whitespace tokens (tiny English list — a
+    * quality feature, not a linguistic claim).
+    */
+  private val stopwords = Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
+  private def stopwordRatio(text: Column): Column = {
+    val toks = split(text, " ")
+    when(size(toks) === 0, 0.0).otherwise(
+      size(filter(toks, t => t.isin(stopwords.map(x => x: Any): _*))).cast("double") /
+        size(toks).cast("double"))
+  }
 
   /** Gopher-style within-document repetition metrics (Rae et al. 2021,
     * table A1) — the canonical LLM training-data quality gate the stats
@@ -51,7 +53,7 @@ object TextAnalysis {
     * shuffles either way, the 100 TB cost is one scan); per-doc
     * n-gram counting is O(n) hash-map work bounded by the tokenizer,
     * never by the corpus. Documents with fewer than 3 tokens (trigram
-    * undefined) are dropped, mirroring the oracle; ROUND-6 applies
+    * undefined) are dropped; ROUND-6 applies
     * here, on the expression's unrounded IEEE-identical ratios.
     */
   def repetition(docs: DataFrame, lineTokens: Int = 2): DataFrame =
@@ -72,7 +74,8 @@ object TextAnalysis {
 
   /** Gopher-style composite quality GATE — the keep/drop decision a
     * training pipeline actually runs, assembled from the exact metrics
-    * this family already computes ([[stats]] ratios, [[repetition]]
+    * this family already computes (punctuation and stopword ratios,
+    * [[repetition]]
     * chunk/bigram fractions) as per-document boolean reason flags plus
     * the final `keep` verdict. Filtering with reasons (not just a
     * score) is the curation norm: reason counts per shard are the
@@ -88,8 +91,7 @@ object TextAnalysis {
     * repetitive there (such docs already fail the token band).
     *
     * ONE scan, zero shuffles: every metric is per-row array/regexp
-    * arithmetic inlined into a single projection (the q126 expression
-    * set, guarded), codegen'd end to end — at 100 TB the gate costs a
+    * arithmetic inlined into a single projection, codegen'd end to end — at 100 TB the gate costs a
     * map pass over text, and it runs BEFORE dedup ever shuffles.
     */
   def qualityGate(docs: DataFrame,
@@ -119,54 +121,13 @@ object TextAnalysis {
       (n > maxTokens).as("too_long"),
       (meanTok < minMeanTokChars || meanTok > maxMeanTokChars)
         .as("bad_word_len"),
-      (TextFunctions.punctRatio(col("text")) > maxPunct).as("high_punct"),
-      (TextFunctions.stopwordRatio(col("text")) < minStopword)
+      (punctRatio(col("text")) > maxPunct).as("high_punct"),
+      (stopwordRatio(col("text")) < minStopword)
         .as("low_stopword"),
       coalesce(dupLineChar > maxDupLineChar || dupBigram > maxDupBigram,
         lit(false)).as("repetitive"))
     flagged.withColumn("keep",
       !(col("too_short") || col("too_long") || col("bad_word_len") ||
         col("high_punct") || col("low_stopword") || col("repetitive")))
-  }
-
-  def fingerprints(docs: DataFrame, k: Int = 8, w: Int = 4): DataFrame =
-    // winnowing hashes every k-gram — the whole cost is in this map
-    // pass, upstream of any exchange, so an under-partitioned corpus
-    // must be spread first (ScanSpread — no-op for large inputs)
-    ScanSpread.spreadForCompute(docs).select(
-      col("doc_id"),
-      TextOps.fingerprint(col("text"), k, w).as("fp"))
-
-  /** Containment candidates: docs sharing ≥ minShared winnowing
-    * fingerprints, built around ONE shuffle of (f, doc_id): a window
-    * over `f` computes each fingerprint's document frequency, the
-    * df-capped survivors collect into PROVABLY bounded per-fingerprint
-    * arrays (≤ maxDf — the window filter runs first) on the same
-    * partitioning (no second exchange), and pairs explode from the
-    * arrays. The previous self-join formulation shuffled three times
-    * and evaluated the winnowing expression twice.
-    *
-    * Skew guard (`maxDf`): fingerprints present in more than `maxDf`
-    * documents are dropped before pairing — a fingerprint of a
-    * ubiquitous k-gram ("the fast …") carries no dedup signal but makes
-    * pairing quadratic in its document frequency (measured: 5× the
-    * whole bench suite's time without the cap). Same idea as stop-word
-    * removal in LSH pipelines; at corpus scale the cap keeps the
-    * expansion linear.
-    */
-  def fingerprintPairs(docs: DataFrame, minShared: Int = 2, maxDf: Int = 20,
-      k: Int = 8, w: Int = 4): DataFrame = {
-    val fp = fingerprints(docs, k, w).select(col("doc_id"), explode(col("fp")).as("f"))
-    val byF = org.apache.spark.sql.expressions.Window.partitionBy(col("f"))
-    fp.withColumn("df", count(lit(1)).over(byF))
-      .filter(col("df") > 1 && col("df") <= maxDf)
-      .groupBy(col("f"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .select(explode(expr(
-        "flatten(transform(ids, (a, i) -> transform(slice(ids, i + 2, size(ids)), b -> struct(a, b))))"))
-        .as("p"))
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared)
   }
 }

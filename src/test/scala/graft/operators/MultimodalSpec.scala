@@ -13,7 +13,7 @@ class MultimodalSpec extends SparkTestBase {
     val a = media.select(col("asset_id"), md5(col("media"))).collect().map(_.toString).sorted
     val b = again.select(col("asset_id"), md5(col("media"))).collect().map(_.toString).sorted
     assert(a.sameElements(b))
-    // derivation pin (the contract OracleSqlGen.mediaCte mirrors):
+    // derivation pin (the contract synthMedia documents):
     // payload bytes are the md5 digests of "seed:id:block" in order
     val first = media.filter(col("asset_id") === 0L).head()
     val bytes = first.getAs[Array[Byte]]("media")
@@ -40,7 +40,7 @@ class MultimodalSpec extends SparkTestBase {
       assert(r.getString(3).matches("[0-9a-f]{32}"))
     }
     // the exact-arithmetic companions match a local recomputation from
-    // the raw bytes (the derivation the SQL oracle also performs)
+    // the raw bytes (a derivation plain SQL can also perform)
     val byId = media.select("asset_id", "media").collect()
       .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
     rows.foreach { r =>

@@ -111,7 +111,7 @@ class SimilaritySpec extends SparkTestBase {
   test("exhaustive IVF (nprobe=nlist) and LSH (bits=0) reproduce brute force") {
     // probing every list / one all-pass bucket makes the candidate set
     // the whole corpus: the approximate machinery must degrade to EXACT
-    // brute force — the q38/q39 driver contract
+    // brute force
     val q = emb.filter(col("vec_id") < 10)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("q_id", "n_id", "sim", "rank")
@@ -120,7 +120,7 @@ class SimilaritySpec extends SparkTestBase {
     assert(rows(Similarity.ivfTopK(emb, q, 5, nlist = 16, nprobe = 16)) == brute)
     assert(rows(Similarity.lshTopK(emb, q, 5, bits = 0, tables = 1)) == brute)
     // the banded-pairing kernel, exhaustive: one all-pass bucket with
-    // an uncapped bucket must equal brute-force all-pairs (q40)
+    // an uncapped bucket must equal brute-force all-pairs
     def pairRows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
     assert(
