@@ -615,18 +615,6 @@ object SparkEntry {
     // pearsonFromMoments exactness discipline
     "q138_ols_trend" -> ((s, dir) =>
       graft.operators.RefOps.olsTrend(transcripts(s, dir))),
-    // cross-table referential integrity: documents ↔ embeddings key
-    // coverage. Driver tables align 1:1 by construction, so the vector
-    // side drops vec_id % 7 == 0 (the q120 holes-injection trick) to
-    // exercise the orphan paths; spec goldens pin both orphan classes
-    "q139_key_coverage" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      graft.operators.SnapshotDiff.keyCoverage(
-        s.read.parquet(s"$dir/documents.parquet"),
-        s.read.parquet(s"$dir/embeddings.parquet")
-          .filter(col("vec_id") % 7 =!= 0),
-        leftKey = "doc_id", rightKey = "vec_id")
-    }),
     // arbitrary-range continuous aggregate answered FROM the tier
     // cascade (whole days from 1d, edge hours/minutes from 1h/1m, raw
     // only sub-minute) — the ragged range exercises every ladder level;
@@ -2922,29 +2910,6 @@ object SparkEntry {
         |  CASE WHEN n >= 3 AND vx > 0 AND vy > 0 THEN
         |    ROUND((cov * cov) / (vx * vy), 6) END AS r2
         |FROM v""".stripMargin),
-    "q139_key_coverage" ->
-      """WITH l AS (
-        |  SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id IS NOT NULL),
-        |r AS (
-        |  SELECT DISTINCT vec_id AS id FROM embeddings
-        |  WHERE vec_id IS NOT NULL AND vec_id % 7 != 0),
-        |j AS (
-        |  SELECT l.id AS lid, r.id AS rid
-        |  FROM l FULL JOIN r ON l.id = r.id),
-        |c AS (
-        |  SELECT
-        |    CAST(COUNT(*) FILTER (WHERE lid IS NOT NULL AND rid IS NOT NULL)
-        |      AS BIGINT) AS matched,
-        |    CAST(COUNT(*) FILTER (WHERE rid IS NULL) AS BIGINT) AS left_only,
-        |    CAST(COUNT(*) FILTER (WHERE lid IS NULL) AS BIGINT) AS right_only
-        |  FROM j)
-        |SELECT matched + left_only AS left_n, matched + right_only AS right_n,
-        |  matched, left_only, right_only,
-        |  ROUND(CAST(matched AS DOUBLE)
-        |    / CAST(matched + left_only AS DOUBLE), 6) AS left_coverage,
-        |  ROUND(CAST(matched AS DOUBLE)
-        |    / CAST(matched + right_only AS DOUBLE), 6) AS right_coverage
-        |FROM c""".stripMargin,
     // stitched tier answer ≡ direct aggregation of raw over the range:
     // the oracle never sees tiers — it IS the semantics being stitched
     "q140_tier_stitch" -> Transcripts.oracle(

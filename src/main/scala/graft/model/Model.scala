@@ -25,53 +25,19 @@ final case class Turn(
   * windows, which roll into 1-hour, which roll into 1-day. Each tier has
   * a window size and a retention horizon after which the finer tier is
   * compacted away (reference analogue: the per-file lifecycle
-  * `MigrateTask.java:104-110`, generalized to windows).
+  * `MigrateTask.java:104-110`, generalized to windows). The columns of a
+  * tier row are [[graft.rollup.Rollup.columns]].
   */
-sealed abstract class Tier(
-    val name: String,
-    val windowSeconds: Long,
-    /** Sort order in the cascade; tier k is computed from tier k-1. */
-    val level: Int
-) extends Serializable {
+sealed abstract class Tier(val name: String, val windowSeconds: Long)
+    extends Serializable {
   def windowExpr: String = s"$windowSeconds seconds"
 }
 
 object Tier {
-  case object Raw extends Tier("raw", 0L, 0)
-  case object M1 extends Tier("1m", 60L, 1)
-  case object H1 extends Tier("1h", 3600L, 2)
-  case object D1 extends Tier("1d", 86400L, 3)
+  case object M1 extends Tier("1m", 60L)
+  case object H1 extends Tier("1h", 3600L)
+  case object D1 extends Tier("1d", 86400L)
 
+  /** Cascade order: tier k is computed from tier k-1. */
   val cascade: Seq[Tier] = Seq(M1, H1, D1)
-  val all: Seq[Tier] = Raw +: cascade
-
-  def byName(n: String): Tier = all.find(_.name == n).getOrElse(
-    throw new IllegalArgumentException(s"unknown tier: $n"))
 }
-
-/** One rolled-up point: all continuous aggregates of one conversation's
-  * turns within one tumbling window of one tier. The metric set comes
-  * from the north rule: turn counts, turn-rate, token/char-length stats,
-  * tool-call frequencies; plus first/last text for per-turn equality
-  * checks (reference analogue: per-device Tablet aggregation unit,
-  * `IoTDBWriter.java:147-185`).
-  */
-final case class RollupRow(
-    conv_id: String,
-    window_start: Timestamp,
-    turn_count: Long,
-    user_turns: Long,
-    assistant_turns: Long,
-    tool_calls: Long,
-    char_len_sum: Long,
-    char_len_min: Long,
-    char_len_max: Long,
-    token_sum: Long,
-    first_text: String,
-    last_text: String
-)
-
-/** Header of an encoded series block (delta-of-delta timestamps +
-  * Gorilla XOR values), stored alongside the two binary columns.
-  */
-final case class BlockMeta(count: Long, min_ts: Long, max_ts: Long)

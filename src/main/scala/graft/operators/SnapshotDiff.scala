@@ -34,48 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object SnapshotDiff {
 
-  /** Referential-integrity census between two keyed tables — the
-    * cross-table sibling of [[diff]]: ONE summary row counting matched
-    * keys, left-only orphans, right-only orphans, and the ROUND-6
-    * coverage shares. The pipeline health check for any id-linked
-    * pair (transcripts ↔ a rollup tier: conversations the tier lost /
-    * rollup rows whose source conversation is gone). Keys are de-duplicated per side (multiplicity is
-    * [[diff]]'s job) and null keys drop (unkeyable — the samplePerConv
-    * doctrine).
-    *
-    * Plan: two distinct exchanges on 8-byte keys + one full-outer SMJ
-    * of the de-duplicated key sets, then a single-row aggregate —
-    * payloads never move.
-    */
-  def keyCoverage(left: DataFrame, right: DataFrame, leftKey: String,
-      rightKey: String): DataFrame = {
-    val l = left.select(col(leftKey).as("_id"))
-      .filter(col("_id").isNotNull).distinct()
-      .withColumn("_l", lit(1))
-    val r = right.select(col(rightKey).as("_id"))
-      .filter(col("_id").isNotNull).distinct()
-      .withColumn("_r", lit(1))
-    l.join(r, Seq("_id"), "full_outer")
-      .agg(
-        count_if(col("_l").isNotNull && col("_r").isNotNull).as("matched"),
-        count_if(col("_r").isNull).as("left_only"),
-        count_if(col("_l").isNull).as("right_only"))
-      .select(
-        (col("matched") + col("left_only")).as("left_n"),
-        (col("matched") + col("right_only")).as("right_n"),
-        col("matched"), col("left_only"), col("right_only"),
-        // an EMPTY side (no non-null keys) has no defined coverage:
-        // NULL, not a 0/0 that ANSI mode turns into DIVIDE_BY_ZERO
-        when(col("matched") + col("left_only") > 0,
-          round(col("matched").cast("double") /
-            (col("matched") + col("left_only")).cast("double"), 6))
-          .as("left_coverage"),
-        when(col("matched") + col("right_only") > 0,
-          round(col("matched").cast("double") /
-            (col("matched") + col("right_only")).cast("double"), 6))
-          .as("right_coverage"))
-  }
-
   /** Diff `newSnap` against `oldSnap` on `keys`, reporting per-measure
     * old/new values for every added / removed / changed key.
     *

@@ -556,7 +556,7 @@ object Rollup {
       transcripts: DataFrame, fromTs: String, toTs: String): DataFrame = {
     val (from, to) = parseStitchBounds(transcripts, fromTs, toTs)
     stitchMerge(
-      storedParts(spark, m1Table, h1Table, d1Table, transcripts, from, to),
+      storedParts(spark, m1Table, h1Table, d1Table, transcripts, from, to, Nil),
       transcripts)
   }
 
@@ -617,8 +617,9 @@ object Rollup {
   /** Ladder slices of [from, to) as stitch-mergeable frames: ONE read
     * per tier table covering all of that tier's slices, pruned in the
     * manifest to the union of their days and filtered on the OR of
-    * their `window_start` ranges; raw only for sub-minute edges. See
-    * [[stitchRangeStored]] for the contract.
+    * their `window_start` ranges; raw only for sub-minute edges and the
+    * caller's `rawTail` spans, all derived in ONE [[rawParts]] pass.
+    * See [[stitchRangeStored]] for the contract.
     */
   private def storedParts(spark: org.apache.spark.sql.SparkSession,
       m1Table: graft.table.SnapshotTable,
@@ -626,7 +627,9 @@ object Rollup {
       d1Table: graft.table.SnapshotTable,
       transcripts: DataFrame,
       from: java.time.LocalDateTime,
-      to: java.time.LocalDateTime): Seq[DataFrame] = {
+      to: java.time.LocalDateTime,
+      rawTail: Seq[(java.time.LocalDateTime, java.time.LocalDateTime)])
+      : Seq[DataFrame] = {
     // day partitions overlapping [lo, hi): hi is exclusive and minute-
     // aligned or coarser, so the last contributing window starts
     // strictly before hi — minusSeconds(1) lands in its day
@@ -637,10 +640,11 @@ object Rollup {
         .takeWhile(!_.isAfter(last)).map(_.toString).toSet
     }
     val slices = rangeSlices(from, to)
-    // the ≤2 sub-minute raw edges aggregate in ONE combined fromRaw
-    // frame (rawParts) instead of one full scan + conv window EACH
+    // the ≤2 sub-minute raw edges and the tail aggregate in ONE
+    // combined fromRaw frame (rawParts) instead of one full scan +
+    // conv window EACH
     val rawCombined = rawParts(transcripts,
-      slices.collect { case ("raw", lo, hi) => (lo, hi) })
+      slices.collect { case ("raw", lo, hi) => (lo, hi) } ++ rawTail)
     rawCombined ++ Seq("1d" -> d1Table, "1h" -> h1Table, "1m" -> m1Table).flatMap {
       case (tier, table) =>
         val spans = slices.collect { case (`tier`, lo, hi) => (lo, hi) }
@@ -681,7 +685,8 @@ object Rollup {
     * 1m/1h/1d. Ahead of the horizon nothing is trusted: IN_PROGRESS
     * days may be partially committed, so the tail [horizon, to) reads
     * raw — LAG (how far the rollup job has gotten) never affects
-    * correctness.
+    * correctness. The tail and the prefix's sub-minute edge share one
+    * raw derivation ([[rawParts]]).
     *
     * Identity: output ≡ direct raw aggregation over the range for any
     * warehouse lag, PROVIDED closed days are census-stable — the
@@ -732,11 +737,11 @@ object Rollup {
     val cut =
       if (horizon.isBefore(from)) from
       else if (horizon.isAfter(to)) to else horizon
-    val stored =
-      if (cut.isAfter(from))
-        storedParts(spark, m1Table, h1Table, d1Table, transcripts, from, cut)
-      else Seq.empty
-    val tail = rawParts(transcripts, if (to.isAfter(cut)) Seq((cut, to)) else Nil)
-    stitchMerge(stored ++ tail, transcripts)
+    // the tail joins the stored prefix's sub-minute edges in one raw
+    // derivation; rangeSlices of an empty prefix is empty
+    val tail = if (to.isAfter(cut)) Seq((cut, to)) else Nil
+    stitchMerge(
+      storedParts(spark, m1Table, h1Table, d1Table, transcripts, from, cut, tail),
+      transcripts)
   }
 }

@@ -1,13 +1,12 @@
 package graft.table
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Parquet FOOTER metadata read in-process — no Spark job at all (a
   * `count()` or a schema-inferring `spark.read.parquet` costs a full
   * job-schedule round trip, and on a shared cluster a queue wait). Used
   * by [[SnapshotTable]] for manifest-listed files (row counts, the read
-  * schema); [[rowCount]] gives the same count for a plain parquet path.
+  * schema).
   */
 object ParquetFooters {
 
@@ -46,20 +45,5 @@ object ParquetFooters {
       throw new IllegalStateException(
         s"parquet file $path has no Spark schema in its footer ($SparkSchemaKey)")
     DataType.fromJson(json).asInstanceOf[StructType]
-  }
-
-  /** Total rows under `path` (a parquet file or a directory tree). */
-  def rowCount(spark: SparkSession, path: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val it = fs.listFiles(p, true)
-    var total = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet"))
-        total += fileRowCount(f.getPath.toString, conf)
-    }
-    total
   }
 }

@@ -26,6 +26,6 @@ class VerifySpec extends AnyFunSuite {
     assert(oracles.subsetOf(queries), oracles -- queries)
     assert(queries -- oracles == Set("q85_daily_cardinality_approx",
       "q132_rolling_active_sketch", "q143_funnel_latency_gk"))
-    assert(queries.size == 119)
+    assert(queries.size == 118)
   }
 }

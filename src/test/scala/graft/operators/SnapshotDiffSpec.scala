@@ -83,27 +83,6 @@ class SnapshotDiffSpec extends SparkTestBase {
     assert(!plan.contains("Window"), s"no window functions expected:\n$plan")
   }
 
-  test("keyCoverage golden: orphans both sides, dup keys deduped, null keys dropped") {
-    val left = Seq(Some(1L), Some(2L), Some(2L), Some(3L), None)
-      .toDF("doc_id")
-    val right = Seq(Some(2L), Some(3L), Some(3L), Some(4L), Some(5L), None)
-      .toDF("vec_id")
-    val r = SnapshotDiff.keyCoverage(left, right, "doc_id", "vec_id").collect()(0)
-    assert(r.getAs[Long]("left_n") == 3 && r.getAs[Long]("right_n") == 4)
-    assert(r.getAs[Long]("matched") == 2)
-    assert(r.getAs[Long]("left_only") == 1 && r.getAs[Long]("right_only") == 2)
-    assert(r.getAs[Double]("left_coverage") == math.rint(2.0 / 3.0 * 1e6) / 1e6)
-    assert(r.getAs[Double]("right_coverage") == 0.5)
-  }
-
-  test("keyCoverage: full coverage reads 1.0 both ways") {
-    val a = Seq(1L, 2L, 3L).toDF("id")
-    val r = SnapshotDiff.keyCoverage(a, a, "id", "id").collect()(0)
-    assert(r.getAs[Long]("matched") == 3 &&
-      r.getAs[Double]("left_coverage") == 1.0 &&
-      r.getAs[Double]("right_coverage") == 1.0)
-  }
-
   test("diff rejects colliding/overlapping column contracts") {
     val s = Seq((1L, 10L)).toDF("k", "v")
     intercept[IllegalArgumentException](SnapshotDiff.diff(s, s, Seq("k"), Seq("k")))

@@ -40,29 +40,6 @@ class PlanShapeSpec extends SparkTestBase {
       s"expected broadcast left-semi join:\n$p")
   }
 
-  test("knn query-side filter reaches the parquet scan as a pushed filter") {
-    // private copy: another suite caches the shared path in this session,
-    // which would swap the scan for InMemoryTableScan and hide pushdown
-    val dir = tmpDir("planshape-emb")
-    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .write.mode("overwrite").parquet(dir)
-    val emb = spark.read.parquet(dir)
-    val q = graft.operators.Similarity.bruteForceTopK(
-      emb, emb.filter(col("vec_id") < 10), k = 3)
-    val p = plan(q)
-    assert(p.contains("PushedFilters: [IsNotNull(vec_id), LessThan(vec_id,10)]"),
-      s"expected vec_id pushdown:\n$p")
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
-      "expected the small query side broadcast")
-  }
-
-  test("lshPairsAbove never broadcast-nested-loop-joins (q33 scale contract)") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val p = plan(graft.operators.Similarity.lshPairsAbove(emb, 0.35))
-    assert(!p.contains("BroadcastNestedLoopJoin"),
-      s"lshPairsAbove must stay shuffle-shuffle:\n$p")
-  }
-
   test("round-4 timeseries operators: one data exchange each, partial aggs, one Window node") {
     def exchanges(p: String): Int = "Exchange".r.findAllIn(p).size
     def windows(p: String): Int = "\\+- Window ".r.findAllIn(p).size

@@ -277,6 +277,16 @@ class StitchSpec extends SparkTestBase {
       s"live tail must read raw transcripts:\n$plan")
   }
 
+  test("stitchRangeServing plan: a ragged range across the horizon derives raw once") {
+    // the sub-minute edge at `from` and the live tail share one raw pass;
+    // every other leaf is a tier file scan
+    val df = serving("2024-01-03 07:41:23", "2024-01-27 18:22:05")
+    val plan = df.queryExecution.sparkPlan
+    val rawLeaves = plan.collectLeaves().filterNot(
+      _.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec])
+    assert(rawLeaves.size == 1, s"expected one raw leaf:\n$plan")
+  }
+
   test("stitchRangeServing starts no Spark job until collect") {
     val (lo, hi) = ("2024-01-03 07:41:23", "2024-01-20 18:22:05")
     assert(lagWh.nonEmpty) // build the warehouse outside the probe

@@ -238,15 +238,6 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(markers.isEmpty, s"committed writes must release markers, found: $markers")
   }
 
-  test("ParquetFooters.rowCount == a Spark count, file and directory paths") {
-    val t = new SnapshotTable(tmpDir("snap-footers"))
-    t.overwritePartitions(df("a" -> 3, "b" -> 2), "p")
-    assert(ParquetFooters.rowCount(spark, t.root) == t.read(spark).count())
-    // a plain parquet table path, the shape the query suite reads
-    val emb = "/root/testdata/sf0.001/embeddings.parquet"
-    assert(ParquetFooters.rowCount(spark, emb) == spark.read.parquet(emb).count())
-  }
-
   /** A small RollupJob warehouse: conv-clustered tier and blocks tables. */
   private lazy val rollupWh: graft.jobs.RollupJob = {
     val job = new graft.jobs.RollupJob(tmpDir("snap-rollup-wh"))
