@@ -480,15 +480,15 @@ object SparkEntry {
         transcripts(s, dir)
           .filter(org.apache.spark.sql.functions.col("turn_idx") < 8),
         Seq("signup", "purchase", "error"))),
+    // order-sensitive sibling of q59: Simpson over consecutive
+    // tool-call PAIRS per conversation + dominant transition
+    "q145_tool_transition_diversity" -> ((s, dir) =>
+      graft.operators.RefOps.toolTransitionDiversity(transcripts(s, dir))),
     // REAL-TIME serving stitch: the warehouse is built from input
     // TRUNCATED at 2024-01-15 (days < Jan 14 closed, rest absent);
     // the query range runs to Jan 27, so the answer stitches stored
     // tiers up to the serving horizon and raw for the live tail —
     // and must STILL equal direct raw aggregation (q140's oracle)
-    // order-sensitive sibling of q59: Simpson over consecutive
-    // tool-call PAIRS per conversation + dominant transition
-    "q145_tool_transition_diversity" -> ((s, dir) =>
-      graft.operators.RefOps.toolTransitionDiversity(transcripts(s, dir))),
     "q144_tier_stitch_serving" -> ((s, dir) => {
       val wh = servingWarehouse(s, dir)
       graft.rollup.Rollup.stitchRangeServing(s,

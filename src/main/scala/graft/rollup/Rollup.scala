@@ -2,7 +2,11 @@ package graft.rollup
 
 import graft.model.Tier
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** Continuous-aggregate rollup: tumbling-window per-conversation
   * aggregation at cascading retention tiers raw→1m→1h→1d.
@@ -507,7 +511,7 @@ object Rollup {
         t.filter(col("window_start") >= ntz(lo) && col("window_start") < ntz(hi))
           .select(stitchCols.map(col): _*)
     }
-    stitchMerge(parts, transcripts)
+    stitchMerge(parts, transcripts, onePartition = false)
   }
 
   /** [[stitchRange]] served from STORED warehouse tiers — the
@@ -525,7 +529,7 @@ object Rollup {
     * The union thus has at most 3 tier branches plus the raw edges,
     * and planning starts no Spark job
     * ([[graft.table.SnapshotTable.readFiles]] takes the schema from a
-    * footer instead of inferring it).
+    * footer and the file list from the manifest).
     * Raw turns are touched exclusively by the ≤2 sub-minute edge
     * slices (an aligned range reads NO raw file at all — plan-pinned
     * in StitchSpec); the per-call tier recompute + localCheckpoint
@@ -536,18 +540,27 @@ object Rollup {
     * tiers are the same [[fromRaw]]/[[cascade]] frames the recompute
     * mode derives — [[graft.jobs.RollupJob]] commits exactly those.
     *
-    * Scale: a 30-day query plans O(30) day partitions across three
-    * manifests (driver metadata), scans O(windows-in-range) rollup
-    * rows, and shuffles only the final per-conversation merge. The
+    * Plan/scale: a 30-day query plans O(30) day partitions across
+    * three manifests (driver metadata, no file listing or status
+    * call) and scans O(windows-in-range) rollup rows. Each tier's
+    * `window_start` filter, and the raw edges' `ts` filter, is one
+    * range-independent predicate ([[inSpans]]), so every range runs the
+    * same compiled classes.
+    * With no raw part, and tier bytes that fit the smallest split
+    * Spark's file scan ever makes (`spark.sql.files.openCostInBytes`,
+    * 4 MB by default, capped by `spark.sql.files.maxPartitionBytes`),
+    * the merge reads the union as one partition and the query is ONE
+    * Spark job with no exchange; otherwise only the final
+    * per-conversation merge shuffles (see [[stitchMerge]]). The
     * warehouse's day watermark discipline (closed days recompute on
     * late arrivals) means serving from tiers is exact, not
     * approximate — the stitch inherits the job's correctness
     * contract rather than re-deriving it per query.
     *
     * Days with no committed partition (quiet days inside the range)
-    * contribute no files — [[graft.table.SnapshotTable.read]] returns
-    * a zero-column empty frame then, which is skipped (zero rows ≡
-    * zero contribution to the merge).
+    * contribute no files; a tier with no file in the range's days
+    * contributes no branch (zero rows ≡ zero contribution to the
+    * merge).
     */
   def stitchRangeStored(spark: org.apache.spark.sql.SparkSession,
       m1Table: graft.table.SnapshotTable,
@@ -555,9 +568,9 @@ object Rollup {
       d1Table: graft.table.SnapshotTable,
       transcripts: DataFrame, fromTs: String, toTs: String): DataFrame = {
     val (from, to) = parseStitchBounds(transcripts, fromTs, toTs)
-    stitchMerge(
-      storedParts(spark, m1Table, h1Table, d1Table, transcripts, from, to, Nil),
-      transcripts)
+    val (parts, onePartition) =
+      storedParts(spark, m1Table, h1Table, d1Table, transcripts, from, to, Nil)
+    stitchMerge(parts, transcripts, onePartition)
   }
 
   private def parseStitchBounds(transcripts: DataFrame, fromTs: String,
@@ -570,7 +583,7 @@ object Rollup {
     (from, to)
   }
 
-  private val stitchFmt = java.time.format.DateTimeFormatter
+  private[rollup] val stitchFmt = java.time.format.DateTimeFormatter
     .ofPattern("yyyy-MM-dd HH:mm:ss")
 
   // boundary literals cast to EACH frame's own timestamp flavor
@@ -600,26 +613,43 @@ object Rollup {
       spans: Seq[(java.time.LocalDateTime, java.time.LocalDateTime)])
       : Seq[DataFrame] =
     if (spans.isEmpty) Seq.empty
-    else Seq(fromRaw(transcripts.filter(inSpans(transcripts, "ts", spans)), Tier.M1)
+    else Seq(fromRaw(transcripts.filter(inSpans("ts", spans)), Tier.M1)
       .select(stitchCols.map(col): _*))
 
-  /** `c` falls in one of the disjoint `[lo, hi)` spans (non-empty),
-    * boundary literals cast to `c`'s own timestamp flavor in `df`.
+  /** A zoned or NTZ timestamp column `c` falls in one of the disjoint
+    * `[lo, hi)` spans (non-empty): one [[InSpans]] predicate over the
+    * spans' UTC epoch micros (the stitch's UTC guard makes a zoned and a
+    * naive timestamp of the same wall time the same micros), selecting
+    * what the OR of `c >= lo AND c < hi` over literal bounds would. The
+    * bounds reach generated code as reference objects, so every range
+    * compiles to the same classes: literal bounds are inlined into
+    * generated code, so each range would compile its own (about 6), and
+    * a pool of recurring ranges outgrows Spark's codegen cache. Parquet
+    * cannot push it down, and no read here would use that: the manifest
+    * already prunes a tier read to the range's days, tier files are
+    * sorted by `conv_id`, so `window_start` statistics skip nothing
+    * inside a day, and the raw `ts` filter sits above the derivation's
+    * `row_number` window ([[rawParts]]), out of the scan's reach.
     */
-  private def inSpans(df: DataFrame, c: String,
+  private[rollup] def inSpans(c: String,
       spans: Seq[(java.time.LocalDateTime, java.time.LocalDateTime)]): Column = {
-    val dt = df.schema(c).dataType
-    spans.map { case (lo, hi) =>
-      col(c) >= stitchBound(lo, dt) && col(c) < stitchBound(hi, dt)
-    }.reduce(_ || _)
+    import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
+    def micros(t: java.time.LocalDateTime): Long =
+      t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
+    column(InSpans(expression(col(c)),
+      spans.map(s => micros(s._1)).toArray, spans.map(s => micros(s._2)).toArray))
   }
 
   /** Ladder slices of [from, to) as stitch-mergeable frames: ONE read
     * per tier table covering all of that tier's slices, pruned in the
     * manifest to the union of their days and filtered on the OR of
-    * their `window_start` ranges; raw only for sub-minute edges and the
-    * caller's `rawTail` spans, all derived in ONE [[rawParts]] pass.
-    * See [[stitchRangeStored]] for the contract.
+    * their `window_start` ranges ([[inSpans]]); raw only for sub-minute
+    * edges and the caller's `rawTail` spans, all derived in ONE
+    * [[rawParts]] pass. The flag says whether [[stitchMerge]] may merge
+    * in one partition: no raw part, and the tier files' manifest bytes
+    * fit the smallest split Spark's file scan ever makes
+    * ([[org.apache.spark.sql.graftbridge.Bridge.minSplitBytes]]). See
+    * [[stitchRangeStored]] for the contract.
     */
   private def storedParts(spark: org.apache.spark.sql.SparkSession,
       m1Table: graft.table.SnapshotTable,
@@ -629,7 +659,7 @@ object Rollup {
       from: java.time.LocalDateTime,
       to: java.time.LocalDateTime,
       rawTail: Seq[(java.time.LocalDateTime, java.time.LocalDateTime)])
-      : Seq[DataFrame] = {
+      : (Seq[DataFrame], Boolean) = {
     // day partitions overlapping [lo, hi): hi is exclusive and minute-
     // aligned or coarser, so the last contributing window starts
     // strictly before hi — minusSeconds(1) lands in its day
@@ -645,31 +675,41 @@ object Rollup {
     // conv window EACH
     val rawCombined = rawParts(transcripts,
       slices.collect { case ("raw", lo, hi) => (lo, hi) } ++ rawTail)
-    rawCombined ++ Seq("1d" -> d1Table, "1h" -> h1Table, "1m" -> m1Table).flatMap {
+    val tierParts = Seq("1d" -> d1Table, "1h" -> h1Table, "1m" -> m1Table).flatMap {
       case (tier, table) =>
         val spans = slices.collect { case (`tier`, lo, hi) => (lo, hi) }
-        if (spans.isEmpty) None
-        else {
-          val days = spans.flatMap { case (lo, hi) => dayParts(lo, hi) }.toSet
-          val t = table.read(spark, Some(days))
-          if (t.columns.isEmpty) None // no committed files in range days
-          else Some(t.filter(inSpans(t, "window_start", spans))
-            .select(stitchCols.map(col): _*))
-        }
+        // no files: no committed partition in the range's days
+        val files =
+          if (spans.isEmpty) Nil
+          else table.planFiles(Some(spans.flatMap { case (lo, hi) => dayParts(lo, hi) }.toSet))
+        if (files.isEmpty) None
+        else Some((table.readFiles(spark, files).filter(inSpans("window_start", spans))
+          .select(stitchCols.map(col): _*), files))
     }
+    val tierFiles = tierParts.flatMap(_._2)
+    val onePartition = rawCombined.isEmpty && tierFiles.nonEmpty &&
+      tierFiles.map(_.bytes).sum <= org.apache.spark.sql.graftbridge.Bridge.minSplitBytes(spark)
+    (rawCombined ++ tierParts.map(_._1), onePartition)
   }
 
   /** The one stitch merge behind [[stitchRange]], [[stitchRangeStored]]
     * and [[stitchRangeServing]]: slice frames in [[stitchCols]] re-summed
     * per conversation with [[mergeAggs]]; no slices → the empty frame of
-    * the same schema.
+    * the same schema. `onePartition` (a stored prefix with no raw part,
+    * whose bytes fit the smallest split Spark's file scan ever makes)
+    * reads the union as ONE partition: the merge's clustering is then
+    * already met, so the plan has no exchange and the query runs as one
+    * Spark job with nothing for AQE to re-plan. Otherwise the merge
+    * exchanges on `conv_id` — what a raw edge or tail needs, and what
+    * keeps a larger prefix spread over the cores as Spark's scan
+    * spreads it.
     */
-  private def stitchMerge(parts: Seq[DataFrame],
-      transcripts: DataFrame): DataFrame = {
+  private def stitchMerge(parts: Seq[DataFrame], transcripts: DataFrame,
+      onePartition: Boolean): DataFrame = {
     val unioned = parts.reduceOption(_ union _).getOrElse(
       fromRaw(transcripts.filter(lit(false)), Tier.M1)
         .select(stitchCols.map(col): _*))
-    unioned
+    (if (onePartition) unioned.coalesce(1) else unioned)
       .groupBy(col("conv_id"))
       .agg(mergeAggs.head, mergeAggs.tail: _*)
       .withColumn("char_len_avg", charLenAvg)
@@ -740,8 +780,50 @@ object Rollup {
     // the tail joins the stored prefix's sub-minute edges in one raw
     // derivation; rangeSlices of an empty prefix is empty
     val tail = if (to.isAfter(cut)) Seq((cut, to)) else Nil
-    stitchMerge(
-      storedParts(spark, m1Table, h1Table, d1Table, transcripts, from, cut, tail),
-      transcripts)
+    val (parts, onePartition) =
+      storedParts(spark, m1Table, h1Table, d1Table, transcripts, from, cut, tail)
+    stitchMerge(parts, transcripts, onePartition)
+  }
+}
+
+/** Native predicate: a timestamp (zoned or NTZ: both are epoch micros)
+  * lies in one of the half-open spans `[los(i), his(i))`. The spans
+  * reach generated code through `ctx.addReferenceObj`, so the generated
+  * source does not depend on them (see [[Rollup.inSpans]]). Null in →
+  * null out; `eval` and codegen both call [[InSpans.contains]].
+  */
+case class InSpans(child: Expression, los: Array[Long], his: Array[Long])
+    extends UnaryExpression with Predicate {
+  require(los.length == his.length, "every span needs both bounds")
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case TimestampType | TimestampNTZType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(s"in_spans expects a timestamp, got $other")
+  }
+  override def nullSafeEval(v: Any): Any = InSpans.contains(v.asInstanceOf[Long], los, his)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val l = ctx.addReferenceObj("spanLos", los, "long[]")
+    val h = ctx.addReferenceObj("spanHis", his, "long[]")
+    defineCodeGen(ctx, ev, v => s"graft.rollup.InSpans.contains($v, $l, $h)")
+  }
+  // plan text names the spans (the default would print array identities)
+  override def toString: String = {
+    def show(us: Long) = java.time.LocalDateTime.ofEpochSecond(
+      Math.floorDiv(us, 1000000L), 0, java.time.ZoneOffset.UTC).format(Rollup.stitchFmt)
+    los.indices.map(i => s"[${show(los(i))}, ${show(his(i))})")
+      .mkString(s"$child IN SPANS (", ", ", ")")
+  }
+  override protected def withNewChildInternal(newChild: Expression): InSpans =
+    copy(child = newChild)
+}
+
+object InSpans {
+  /** `v` lies in some `[los(i), his(i))`. */
+  def contains(v: Long, los: Array[Long], his: Array[Long]): Boolean = {
+    var i = 0
+    while (i < los.length) {
+      if (v >= los(i) && v < his(i)) return true
+      i += 1
+    }
+    false
   }
 }

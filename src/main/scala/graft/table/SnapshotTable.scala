@@ -170,18 +170,21 @@ final class SnapshotTable(val root: String) {
   /** Read exactly `files` with the Spark schema stored in the FIRST
     * file's footer ([[ParquetFooters.sparkSchema]], one in-process
     * footer open) — the file Spark's own inference would read first, so
-    * the schema is the same, while a bare `spark.read.parquet(paths)`
-    * would start a schema-inference JOB on every call (one per tier
-    * read of a stitch query). No job runs before an action. A file whose
-    * footer has no Spark schema fails, naming it; there is no fallback
-    * to inference. No files → a zero-column empty frame.
+    * the schema is the same. The relation is built here, over a
+    * [[SnapshotTable.ManifestFileIndex]] whose file statuses are the
+    * manifest's paths and byte counts: `spark.read.parquet(paths)`
+    * would infer the schema in a JOB, glob every path through a fresh
+    * thread pool and stat each file, and past 32 paths list them in a
+    * parallel-listing job too. So planning touches no file but that
+    * one footer, and no job runs before an action. A file whose footer
+    * has no Spark schema fails, naming it; there is no fallback to
+    * inference. No files → a zero-column empty frame.
     */
   def readFiles(spark: SparkSession, files: Seq[FileEntry]): DataFrame =
     if (files.isEmpty) spark.emptyDataFrame
-    else spark.read
-      .schema(ParquetFooters.sparkSchema(
-        files.head.path, spark.sparkContext.hadoopConfiguration))
-      .parquet(files.map(_.path): _*)
+    else org.apache.spark.sql.graftbridge.Bridge.parquetFrame(spark,
+      new SnapshotTable.ManifestFileIndex(files),
+      ParquetFooters.sparkSchema(files.head.path, spark.sparkContext.hadoopConfiguration))
 
   /** Point lookup by clustering key: manifest key-range pruning BEFORE
     * any file is opened, then the parquet-level filter. Throws when the
@@ -577,6 +580,32 @@ object SnapshotTable {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   private[table] val markerSuffix = "._STARTED"
+
+  /** Spark's file index over a manifest's file list: each file's status
+    * is its manifest path and byte count (files are immutable once
+    * committed, so nothing on disk can differ), with no partition
+    * columns — the partition value is a data column too. Listing is a
+    * constant; `inputFiles` and `rootPaths` name the files as Spark's
+    * own index would (qualified `file:` URIs).
+    */
+  private[table] final class ManifestFileIndex(files: Seq[FileEntry])
+      extends org.apache.spark.sql.execution.datasources.FileIndex {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.datasources.PartitionDirectory
+    private val statuses = files.map(f => new FileStatus(f.bytes, false, 0, 0, 0L,
+      new Path(new java.io.File(f.path).getAbsoluteFile.toURI)))
+    override def rootPaths: Seq[Path] = statuses.map(_.getPath)
+    override def listFiles(
+        partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+        dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+        : Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(org.apache.spark.sql.catalyst.InternalRow.empty, statuses.toArray))
+    override def inputFiles: Array[String] = statuses.map(_.getPath.toUri.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.bytes).sum
+    override def partitionSchema: org.apache.spark.sql.types.StructType =
+      new org.apache.spark.sql.types.StructType()
+  }
 
   /** Durable in-flight marker for a stage directory: a SIBLING file
     * (`data/stage-<uuid>._STARTED`), not a file inside the stage — the

@@ -295,6 +295,170 @@ class StitchSpec extends SparkTestBase {
     assertSameRows(df, direct(lo, hi))
   }
 
+  /** The executed plan's nodes, inside AQE's final plan and its stages. */
+  private def executedNodes(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    object Nodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    Nodes.collect(df.queryExecution.executedPlan) { case p => p }
+  }
+  private def exchanges(df: DataFrame) = executedNodes(df).collect {
+    case e: org.apache.spark.sql.execution.exchange.Exchange => e
+  }
+
+  /** [[Rollup.stitchRangeServing]] over `storedWh` for a range whose
+    * days are all closed there, so the answer is tier rows only. Synth
+    * leaves quiet days open (no checkpoint), and an open day would put
+    * a raw tail into the range.
+    */
+  private def closedServing(a: String, b: String): DataFrame = {
+    val state = new graft.state.StateStore(s"$storedWh/_state")
+    val cps = state.checkpoints
+    val closed = Seq("1m", "1h", "1d").map(state.completedPartitions(_, cps)).reduce(_ intersect _)
+    val days = Iterator.iterate(LocalDateTime.parse(a.replace(' ', 'T')).toLocalDate)(_.plusDays(1))
+      .takeWhile(_.atStartOfDay.isBefore(LocalDateTime.parse(b.replace(' ', 'T')))).toSeq
+    assert(days.forall(d => closed(d.toString)), s"[$a, $b) needs closed days; closed: ${closed.toSeq.sorted}")
+    Rollup.stitchRangeServing(spark,
+      new graft.table.SnapshotTable(s"$storedWh/rollup_1m"),
+      new graft.table.SnapshotTable(s"$storedWh/rollup_1h"),
+      new graft.table.SnapshotTable(s"$storedWh/rollup_1d"),
+      state, turns, a, b)
+  }
+
+  test("stitchRangeServing: an aligned range runs ONE job, with no exchange") {
+    // closed days, minute-aligned ends: tier rows only, merged in one
+    // partition — no shuffle, so no map-stage job for AQE to split off
+    assert(storedWh.nonEmpty) // build the warehouse outside the probe
+    val (a, b) = ("2024-01-02 03:10:00", "2024-01-04 07:00:00")
+    val df = closedServing(a, b)
+    val (rows, jobs) = jobsStarted(df.collect())
+    assert(jobs == 1, s"an aligned range started $jobs jobs:\n${df.queryExecution.executedPlan}")
+    assert(exchanges(df).isEmpty, s"an aligned range must not shuffle:\n${df.queryExecution.executedPlan}")
+    // AQE still wraps the plan (Spark applies it to any plan whose
+    // aggregate requires a distribution), but with no exchange its only
+    // stage is the result stage: nothing runs before it to re-plan on
+    val stages = executedNodes(df).collect {
+      case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => s.getClass.getSimpleName
+    }
+    assert(stages == Seq("ResultQueryStageExec"),
+      s"an aligned range leaves AQE nothing to re-plan:\n${df.queryExecution.executedPlan}")
+    assertSameRows(spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema), direct(a, b))
+  }
+
+  test("stitchRangeServing: an aligned range above Spark's smallest split keeps its exchange") {
+    // the one-partition merge holds only for a prefix that fits the
+    // smallest split Spark's scan ever makes, min(openCostInBytes,
+    // maxPartitionBytes): at exactly the prefix's bytes it merges in one
+    // partition; one byte less and the merge exchanges. One minimum scan
+    // partition makes the split size Spark picks for these files their
+    // bytes plus every file's open cost, more than the prefix: the bound
+    // must not follow that
+    val (a, b) = ("2024-01-02 03:10:00", "2024-01-04 07:00:00")
+    val bytes = closedServing(a, b).inputFiles
+      .map(u => new java.io.File(new java.net.URI(u)).length).sum
+    val keys = Seq("spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes")
+    val minParts = "spark.sql.files.minPartitionNum"
+    val saved = (keys :+ minParts).map(k => k -> spark.conf.getOption(k)).toMap
+    try {
+      spark.conf.set(minParts, "1")
+      for (k <- keys; (v, shuffles) <- Seq(bytes -> false, (bytes - 1) -> true)) {
+        keys.foreach(spark.conf.unset)
+        spark.conf.set(k, v.toString)
+        val df = closedServing(a, b)
+        val rows = df.collect()
+        assert(exchanges(df).nonEmpty == shuffles,
+          s"$k=$v, prefix $bytes bytes:\n${df.queryExecution.executedPlan}")
+        assertSameRows(spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema), direct(a, b))
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("stitchRangeServing: ragged and horizon-crossing ranges keep their exchange plans") {
+    val ragged = serving("2024-01-04 07:41:23", "2024-01-09 18:22:05")
+    val tail = serving("2024-01-10 00:00:00", "2024-01-20 00:00:00")
+    for (df <- Seq(ragged, tail)) {
+      df.collect()
+      assert(exchanges(df).nonEmpty, s"a raw part merges through an exchange:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
+  test("stitchRangeServing: a second aligned range compiles no new class") {
+    // the tier filters hold their spans as reference objects, not
+    // literals, so two ranges over the same tiers share generated code
+    closedServing("2024-01-02 03:10:00", "2024-01-04 07:00:00").collect()
+    val (a, b) = ("2024-01-12 05:01:00", "2024-01-14 22:59:00")
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val df = closedServing(a, b)
+    val rows = df.collect()
+    assert(compiles.getCount == before,
+      s"the second range compiled ${compiles.getCount - before} class(es)")
+    assertSameRows(spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema), direct(a, b))
+  }
+
+  test("span predicate selects exactly what the literal OR-chain selects") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.scalacheck.Gen
+    val t0 = LocalDateTime.parse("2024-01-01T00:00:00")
+    val t0us = t0.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
+    val windowS = 3L * 86400
+    val gen = for {
+      k <- Gen.choose(1, 3)
+      // 2k distinct whole seconds, paired in order: disjoint spans
+      cuts <- Gen.listOfN(4 * k, Gen.choose(0L, windowS)).map(_.distinct.sorted.take(2 * k))
+      if cuts.size == 2 * k
+      spans = cuts.grouped(2).map(p => (t0.plusSeconds(p(0)), t0.plusSeconds(p(1)))).toSeq
+      edges = spans.flatMap(s => Seq(s._1, s._2))
+        .map(t => t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L)
+      ts <- Gen.listOfN(120, Gen.frequency(
+        6 -> Gen.choose(t0us - 3600L * 1000000L, t0us + (windowS + 3600) * 1000000L).map(Option(_)),
+        3 -> Gen.oneOf(edges).flatMap(e => Gen.oneOf(e - 1, e, e + 1)).map(Option(_)),
+        1 -> Gen.const(Option.empty[Long])))
+    } yield (spans, ts)
+    def external(us: Long, dt: DataType): Any = dt match {
+      case TimestampType => java.time.Instant.EPOCH.plus(us, java.time.temporal.ChronoUnit.MICROS)
+      case _ => LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
+        (Math.floorMod(us, 1000000L) * 1000).toInt, java.time.ZoneOffset.UTC)
+    }
+    val modes = Seq(
+      Map("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.wholeStage" -> "true"),
+      Map("spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false"))
+    val saved = modes.head.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    try {
+      new graft.PropHelpers {}.forAllN(gen, n = 12) { case (spans, ts) =>
+        for (dt <- Seq(TimestampType, TimestampNTZType); mode <- modes) {
+          mode.foreach { case (k, v) => spark.conf.set(k, v) }
+          val schema = StructType(Seq(StructField("id", IntegerType), StructField("ts", dt)))
+          // an RDD source, so the optimizer cannot fold the predicates
+          val df = spark.createDataFrame(spark.sparkContext.parallelize(
+            ts.zipWithIndex.map { case (v, i) => Row(i, v.map(external(_, dt)).orNull) }, 2),
+            schema)
+          val native = Rollup.inSpans("ts", spans)
+          // the reference: the OR of `lo <= ts < hi` over literal bounds
+          // cast to the column's own flavor
+          def bound(t: LocalDateTime) = lit(t.format(Rollup.stitchFmt)).cast(dt)
+          val literal = spans.map { case (lo, hi) =>
+            col("ts") >= bound(lo) && col("ts") < bound(hi)
+          }.reduce(_ || _)
+          def opt(r: Row, i: Int) = if (r.isNullAt(i)) None else Some(r.getBoolean(i))
+          val both = df.select(col("id"), native, literal).collect()
+            .map(r => (r.getInt(0), opt(r, 1), opt(r, 2)))
+          both.foreach { case (i, n, l) =>
+            assert(n == l, s"$dt $mode row $i (${ts(i)}): native $n, literal $l, spans $spans")
+          }
+          val kept = df.filter(native).collect().map(_.getInt(0)).sorted.toSeq
+          assert(kept == df.filter(literal).collect().map(_.getInt(0)).sorted.toSeq,
+            s"$dt $mode spans $spans")
+        }
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("stitchRangeServing: late row in a CLOSED day serves the committed answer until the job heals it") {
     // the continuous-aggregate consistency contract: a late arrival
     // into an already-closed day is invisible to the serving read

@@ -267,6 +267,21 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(all.count() > 0 && one.count() > 0)
   }
 
+  test("read over more files than Spark lists in a job starts no job; files and rows are the manifest's") {
+    // past 32 paths `spark.read.parquet` lists them in a parallel-listing
+    // JOB; the manifest-backed index lists nothing
+    val t = new SnapshotTable(tmpDir("snap-many"))
+    t.overwritePartitions((0 until 400).map(i => (i, s"d${i % 4}")).toDF("v", "p"), "p",
+      maxRecordsPerFile = 10L)
+    val files = t.currentManifest.get.files
+    assert(files.size >= 40, s"want more than 32 files, got ${files.size}")
+    val (df, jobs) = jobsStarted(t.read(spark))
+    assert(jobs == 0, s"the lazy read started $jobs job(s)")
+    assert(df.inputFiles.map(u => new java.io.File(new java.net.URI(u)).getPath).sorted.toSeq ==
+      files.map(_.path).sorted)
+    assert(df.count() == files.map(_.rows).sum && df.count() == 400L)
+  }
+
   test("a file without a Spark schema in its footer fails, naming the file") {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
