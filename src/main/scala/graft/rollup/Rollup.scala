@@ -18,9 +18,12 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   *    (`Converter.java:94`) + Tablet pivot (`IoTDBWriter.java:147-185`).
   *  - The cascade NEVER re-reads raw: tier k is computed from tier k-1
   *    ([[cascade]]), so the 1h/1d jobs scan 60×/1440× less data. All
-  *    carried metrics are decomposable (sums/counts/min/max/argmin-by-
-  *    unique-key); derived metrics (avg, rate) are recomputed from the
-  *    carried sums at every tier, never averaged-of-averages.
+  *    carried metrics are decomposable (sums/min/max/argmin-by-unique-
+  *    key) and defined once: a raw turn enters as one row of per-turn
+  *    partials ([[turnPartials]]), and one aggregate list
+  *    ([[mergeAggs]]) merges those rows and tier rows alike. Derived
+  *    metrics (avg, rate) are recomputed from the carried sums at every
+  *    tier, never averaged-of-averages.
   *  - Skew: hot conversations are handled by [[fromRawSalted]] — a
   *    two-phase salted aggregation (partial per (conv, window, salt),
   *    final per (conv, window)) proven output-identical to [[fromRaw]]
@@ -47,8 +50,8 @@ object Rollup {
 
   /** Carried tier metrics → the [[columns]] tier schema: adds the
     * derived `char_len_avg`/`turn_rate` and projects to canonical order.
-    * `df` must hold `conv_id`, `window_start` and the [[rawAggregate]]
-    * / [[mergeAggs]] outputs. */
+    * `df` must hold `conv_id`, `window_start` and the [[mergeAggs]]
+    * outputs. */
   private[graft] def derived(df: DataFrame, tier: Tier): DataFrame =
     df.withColumn("char_len_avg", charLenAvg)
       .withColumn(
@@ -56,43 +59,42 @@ object Rollup {
         col("turn_count") * lit(1.0) / lit(tier.windowSeconds.toDouble))
       .select(columns.map(col): _*)
 
-  /** Raw turns grouped by `keys` → the raw partial of every carried
-    * tier metric: the per-turn `char_len`/`tokens` measures aggregated
-    * with the 12 partials [[mergeAggs]] merges. ONE definition for
-    * [[fromRaw]], [[fromRawSalted]]'s first phase and the streaming
-    * tier ([[graft.streaming.StreamingRollup.rollup]]), so the batch
-    * and streamed tiers cannot drift. Every partial also runs in
-    * streaming state (`min_by`/`max_by` keep a (value, key) pair).
+  /** Each raw turn as one row of the carried partials ([[stitchCols]],
+    * plus `ts` for the caller's window), so that [[mergeAggs]], the list
+    * that merges tier rows, also aggregates raw turns: in [[fromRaw]],
+    * [[fromRawSalted]], the stitch's raw spans ([[rawParts]]),
+    * [[sliding]], [[multiGranularity]] and the streaming tier
+    * ([[graft.streaming.StreamingRollup.rollup]]). A null role or tool
+    * counts 0; a null text has no length and no tokens, which the sums,
+    * mins and maxes skip.
     */
-  private[graft] def rawAggregate(turns: DataFrame, keys: Column*): DataFrame =
-    turns
-      .withColumn("char_len", length(col("text")).cast("long"))
-      .withColumn("tokens", size(split(col("text"), " ")).cast("long"))
-      .groupBy(keys: _*)
-      .agg(
-        count(lit(1)).as("turn_count"),
-        count_if(col("role") === "user").as("user_turns"),
-        count_if(col("role") === "assistant").as("assistant_turns"),
-        count(col("tool")).as("tool_calls"),
-        sum(col("char_len")).as("char_len_sum"),
-        min(col("char_len")).as("char_len_min"),
-        max(col("char_len")).as("char_len_max"),
-        sum(col("tokens")).as("token_sum"),
-        min(col("turn_idx")).as("min_turn_idx"),
-        max(col("turn_idx")).as("max_turn_idx"),
-        min_by(col("text"), col("turn_idx")).as("first_text"),
-        max_by(col("text"), col("turn_idx")).as("last_text"))
-
-  /** Raw turns → tier rollup. One shuffle on (conv_id, window). */
-  def fromRaw(transcripts: DataFrame, tier: Tier): DataFrame =
-    derived(rawAggregate(transcripts, col("conv_id"),
-      window(col("ts"), tier.windowExpr).getField("start").as("window_start")), tier)
+  private[graft] def turnPartials(turns: DataFrame): DataFrame = {
+    val charLen = length(col("text")).cast("long")
+    def flag(p: Column): Column = when(p, 1L).otherwise(0L)
+    turns.select(
+      col("conv_id"), col("ts"),
+      lit(1L).as("turn_count"),
+      flag(col("role") === "user").as("user_turns"),
+      flag(col("role") === "assistant").as("assistant_turns"),
+      flag(col("tool").isNotNull).as("tool_calls"),
+      charLen.as("char_len_sum"),
+      charLen.as("char_len_min"),
+      charLen.as("char_len_max"),
+      size(split(col("text"), " ")).cast("long").as("token_sum"),
+      col("turn_idx").as("min_turn_idx"),
+      col("turn_idx").as("max_turn_idx"),
+      col("text").as("first_text"),
+      col("text").as("last_text"))
+  }
 
   /** The decomposable-merge aggregate list — counts/sums add, min/max
     * nest, first/last resolve by the carried unique
-    * `min_turn_idx`/`max_turn_idx`. ONE definition shared by every
-    * merge site — [[cascade]], [[fromRawSalted]]'s final phase and
-    * [[stitchMerge]] — so they cannot drift.
+    * `min_turn_idx`/`max_turn_idx` — and the ONE aggregate list: every
+    * rollup merges per-turn rows ([[turnPartials]]) or tier rows with
+    * it, so no two sites can drift. A site that keeps only some metrics
+    * selects them after the merge, and Spark prunes the other merges
+    * from the plan. Every entry also runs in streaming state
+    * (`min_by`/`max_by` keep a (value, key) pair).
     */
   private def mergeAggs: Seq[Column] = Seq(
     sum(col("turn_count")).as("turn_count"),
@@ -108,32 +110,34 @@ object Rollup {
     min_by(col("first_text"), col("min_turn_idx")).as("first_text"),
     max_by(col("last_text"), col("max_turn_idx")).as("last_text"))
 
+  /** `df`'s carried metrics merged per `keys` with [[mergeAggs]]. */
+  private[graft] def mergeBy(df: DataFrame, keys: Column*): DataFrame =
+    df.groupBy(keys: _*).agg(mergeAggs.head, mergeAggs.tail: _*)
+
+  private def windowStart(ts: Column, tier: Tier): Column =
+    window(ts, tier.windowExpr).getField("start").as("window_start")
+
+  /** Raw turns → tier rollup. One shuffle on (conv_id, window). */
+  def fromRaw(transcripts: DataFrame, tier: Tier): DataFrame =
+    derived(mergeBy(turnPartials(transcripts),
+      col("conv_id"), windowStart(col("ts"), tier)), tier)
+
   /** Tier k-1 rollup → tier k rollup, reading ONLY the finer tier. */
-  def cascade(finer: DataFrame, to: Tier): DataFrame = {
-    val agg = finer
-      .groupBy(
-        col("conv_id"),
-        window(col("window_start"), to.windowExpr).getField("start").as("window_start"))
-      .agg(mergeAggs.head, mergeAggs.tail: _*)
-    derived(agg, to)
-  }
+  def cascade(finer: DataFrame, to: Tier): DataFrame =
+    derived(mergeBy(finer, col("conv_id"), windowStart(col("window_start"), to)), to)
 
   /** Skew-safe variant of [[fromRaw]]: two-phase aggregation with an
     * explicit salt so one hot conversation's window spreads over
-    * `salts` reduce tasks before the (cheap) final merge. Output is
-    * identical to [[fromRaw]] (asserted by RollupSpec).
+    * `salts` reduce tasks before the (cheap) final merge. Both phases
+    * are the same [[mergeBy]], so the output is identical to [[fromRaw]]
+    * (asserted by RollupSpec).
     */
   def fromRawSalted(transcripts: DataFrame, tier: Tier, salts: Int): DataFrame = {
-    val salted = transcripts.withColumn(
-      "salt", pmod(hash(col("turn_idx")), lit(salts)))
-    val phase1 = rawAggregate(salted,
-      col("conv_id"),
-      window(col("ts"), tier.windowExpr).getField("start").as("window_start"),
-      col("salt"))
-    val merged = phase1
-      .groupBy(col("conv_id"), col("window_start"))
-      .agg(mergeAggs.head, mergeAggs.tail: _*)
-    derived(merged, tier)
+    val salted = turnPartials(transcripts).withColumn(
+      "salt", pmod(hash(col("min_turn_idx")), lit(salts)))
+    val phase1 = mergeBy(salted,
+      col("conv_id"), windowStart(col("ts"), tier), col("salt"))
+    derived(mergeBy(phase1, col("conv_id"), col("window_start")), tier)
   }
 
   /** Per-window tool-call frequencies as a narrow companion table
@@ -166,22 +170,17 @@ object Rollup {
     * it (an Expand node, map-side — no extra shuffle) and then
     * aggregates with the same single (conv_id, window_start) exchange
     * as [[fromRaw]]; output volume is w/s × the tumbling tier, which
-    * is why only the cheap decomposable metrics are carried here.
+    * is why only four cheap decomposable metrics (their [[mergeAggs]]
+    * entries over [[turnPartials]]) are carried here.
     * NOT cascadable (overlapping windows don't nest) — always computed
     * from raw, like the quantile companion.
     */
   def sliding(transcripts: DataFrame, windowExpr: String = "1 hour",
       slideExpr: String = "30 minutes"): DataFrame =
-    transcripts
-      .withColumn("char_len", length(col("text")).cast("long"))
-      .groupBy(
-        col("conv_id"),
-        window(col("ts"), windowExpr, slideExpr).getField("start").as("window_start"))
-      .agg(
-        count(lit(1)).as("turn_count"),
-        count_if(col("role") === "user").as("user_turns"),
-        count(col("tool")).as("tool_calls"),
-        sum(col("char_len")).as("char_len_sum"))
+    mergeBy(turnPartials(transcripts), col("conv_id"),
+      window(col("ts"), windowExpr, slideExpr).getField("start").as("window_start"))
+      .select(Seq("conv_id", "window_start", "turn_count", "user_turns",
+        "tool_calls", "char_len_sum").map(col): _*)
       .withColumn("char_len_avg", charLenAvg)
 
   /** Fixed-width histogram of turn length per GLOBAL time window — the
@@ -367,7 +366,7 @@ object Rollup {
     * (conv_id)`), so a genuine null conv_id group (scope 0, conv_id
     * null) is never confused with the corpus row.
     *
-    * Aggregates are the decomposable core (counts/sums) only — no
+    * Aggregates are three of [[mergeAggs]] over [[turnPartials]] — no
     * DISTINCT: Catalyst plans the set expansion map-side (`Expand`,
     * ×2 rows BEFORE partial aggregation) and both granularities
     * partial-aggregate into the SAME single exchange, so the wire
@@ -379,20 +378,14 @@ object Rollup {
     * group as null in both engines.
     */
   def multiGranularity(transcripts: DataFrame, tier: Tier): DataFrame =
-    transcripts
-      .withColumn("window_start",
-        window(col("ts"), tier.windowExpr).getField("start"))
-      .withColumn("char_len", length(col("text")).cast("long"))
+    turnPartials(transcripts)
+      .withColumn("window_start", windowStart(col("ts"), tier))
       .groupingSets(
         Seq(Seq(col("conv_id"), col("window_start")), Seq(col("window_start"))),
         col("conv_id"), col("window_start"))
-      .agg(
-        grouping(col("conv_id")).cast("int").as("scope"),
-        count(lit(1)).as("turn_count"),
-        count(col("tool")).as("tool_calls"),
-        sum(col("char_len")).as("char_len_sum"))
-      .select(col("scope"), col("conv_id"), col("window_start"),
-        col("turn_count"), col("tool_calls"), col("char_len_sum"))
+      .agg(grouping(col("conv_id")).cast("int").as("scope"), mergeAggs: _*)
+      .select(Seq("scope", "conv_id", "window_start", "turn_count",
+        "tool_calls", "char_len_sum").map(col): _*)
 
   /** The additive/decomposable metric columns a stitch merges — derived
     * from [[columns]] (not retyped) so a new tier metric flows into
@@ -459,9 +452,10 @@ object Rollup {
     * deployment (here the cascade is recomputed per the driver
     * contract, with the range predicate pushed to the raw scan:
     * tiers are built only from `[floor-minute(from), to)`). The union
-    * merges slice frames that are already per-(conv, window)
-    * aggregates, so the final groupBy(conv_id) exchanges O(windows in
-    * range), never raw turns.
+    * merges tier slices, which are already per-(conv, window)
+    * aggregates, with the ≤2 sub-minute edges' turns, so the final
+    * groupBy(conv_id) exchanges O(windows in range) plus ≤2 minutes of
+    * turns, both partially merged map-side.
     */
   def stitchRange(transcripts: DataFrame, fromTs: String, toTs: String)
       : DataFrame = {
@@ -498,9 +492,9 @@ object Rollup {
     // plan cost more than the one materialization job they avoid
     lazy val h1 = cascade(m1, Tier.H1).localCheckpoint()
     lazy val d1 = cascade(h1, Tier.D1)
-    // both sub-minute raw edges (a ragged range has two) aggregate in
-    // ONE combined fromRaw frame via rawParts — each edge as its
-    // own branch re-ran the full scan + conv window per edge
+    // both sub-minute raw edges (a ragged range has two) come from ONE
+    // raw derivation via rawParts — each edge as its own branch re-ran
+    // the full scan + conv window per edge
     val rawCombined = rawParts(transcripts,
       slices.collect { case ("raw", lo, hi) => (lo, hi) })
     val parts = rawCombined ++ slices.collect {
@@ -595,26 +589,25 @@ object Rollup {
 
   /** Raw-served spans (the ladder's sub-minute edges, or the serving
     * mode's live tail) as ONE stitch-mergeable frame, none for no
-    * spans: a ragged range has up to two sub-minute raw edges, and
-    * deriving each as its own frame re-runs the ENTIRE transcripts
-    * derivation (scan + conv exchange + row-number window — the ts
-    * filter cannot push below the window because turn identity is a
-    * whole-conversation function) once per edge. Instead the edges
-    * aggregate TOGETHER from one pass filtered to the union of the
-    * spans — sound because [[stitchMerge]] re-sums the union of all
-    * slice frames per conversation with the associative [[mergeAggs]],
-    * so whether the two disjoint edges arrive as two frames or one
-    * combined (conv, window) aggregation, the merged totals are
-    * identical. One derivation, zero extra jobs (an r6 intermediate
-    * shared the pass via localCheckpoint, which paid an eager
-    * materialization job per stitch call for the same saving).
+    * spans: the turns of the union of the spans, each as its own
+    * [[turnPartials]] row, with no aggregate of their own —
+    * [[stitchMerge]]'s one `groupBy(conv_id)` merges them with the tier
+    * rows, so a raw part adds no exchange. A ragged range has up to two
+    * sub-minute raw edges, and deriving each as its own frame would
+    * re-run the ENTIRE transcripts derivation (scan + conv exchange +
+    * row-number window — the ts filter cannot push below the window
+    * because turn identity is a whole-conversation function) once per
+    * edge; one frame filtered to the union derives it once.
     */
   private def rawParts(transcripts: DataFrame,
       spans: Seq[(java.time.LocalDateTime, java.time.LocalDateTime)])
       : Seq[DataFrame] =
     if (spans.isEmpty) Seq.empty
-    else Seq(fromRaw(transcripts.filter(inSpans("ts", spans)), Tier.M1)
-      .select(stitchCols.map(col): _*))
+    else Seq(rawPartials(transcripts.filter(inSpans("ts", spans))))
+
+  /** [[turnPartials]] in the [[stitchCols]] layout the stitch unions. */
+  private def rawPartials(turns: DataFrame): DataFrame =
+    turnPartials(turns).select(stitchCols.map(col): _*)
 
   /** A zoned or NTZ timestamp column `c` falls in one of the disjoint
     * `[lo, hi)` spans (non-empty): one [[InSpans]] predicate over the
@@ -670,9 +663,8 @@ object Rollup {
         .takeWhile(!_.isAfter(last)).map(_.toString).toSet
     }
     val slices = rangeSlices(from, to)
-    // the ≤2 sub-minute raw edges and the tail aggregate in ONE
-    // combined fromRaw frame (rawParts) instead of one full scan +
-    // conv window EACH
+    // the ≤2 sub-minute raw edges and the tail come from ONE raw
+    // derivation (rawParts) instead of one full scan + conv window EACH
     val rawCombined = rawParts(transcripts,
       slices.collect { case ("raw", lo, hi) => (lo, hi) } ++ rawTail)
     val tierParts = Seq("1d" -> d1Table, "1h" -> h1Table, "1m" -> m1Table).flatMap {
@@ -693,11 +685,12 @@ object Rollup {
   }
 
   /** The one stitch merge behind [[stitchRange]], [[stitchRangeStored]]
-    * and [[stitchRangeServing]]: slice frames in [[stitchCols]] re-summed
-    * per conversation with [[mergeAggs]]; no slices → the empty frame of
-    * the same schema. `onePartition` (a stored prefix with no raw part,
-    * whose bytes fit the smallest split Spark's file scan ever makes)
-    * reads the union as ONE partition: the merge's clustering is then
+    * and [[stitchRangeServing]]: slice frames in [[stitchCols]] — tier
+    * rows and raw [[turnPartials]] rows alike — merged per conversation
+    * with [[mergeAggs]]; no slices → the empty frame of the same schema.
+    * `onePartition` (a stored prefix with no raw part, whose bytes fit
+    * the smallest split Spark's file scan ever makes) reads the union
+    * as ONE partition: the merge's clustering is then
     * already met, so the plan has no exchange and the query runs as one
     * Spark job with nothing for AQE to re-plan. Otherwise the merge
     * exchanges on `conv_id` — what a raw edge or tail needs, and what
@@ -706,12 +699,9 @@ object Rollup {
     */
   private def stitchMerge(parts: Seq[DataFrame], transcripts: DataFrame,
       onePartition: Boolean): DataFrame = {
-    val unioned = parts.reduceOption(_ union _).getOrElse(
-      fromRaw(transcripts.filter(lit(false)), Tier.M1)
-        .select(stitchCols.map(col): _*))
-    (if (onePartition) unioned.coalesce(1) else unioned)
-      .groupBy(col("conv_id"))
-      .agg(mergeAggs.head, mergeAggs.tail: _*)
+    val unioned = parts.reduceOption(_ union _)
+      .getOrElse(rawPartials(transcripts.filter(lit(false))))
+    mergeBy(if (onePartition) unioned.coalesce(1) else unioned, col("conv_id"))
       .withColumn("char_len_avg", charLenAvg)
   }
 

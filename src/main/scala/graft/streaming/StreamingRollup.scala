@@ -19,8 +19,9 @@ import org.apache.spark.sql.types._
   * `MigrateTask.java:79-111`).
   *
   * [[rollup]] emits the batch tier schema ([[graft.rollup.Rollup.columns]])
-  * from the batch definition itself ([[graft.rollup.Rollup.rawAggregate]]
-  * then [[graft.rollup.Rollup.derived]]): every carried metric merges
+  * from the batch definition itself ([[graft.rollup.Rollup.turnPartials]]
+  * merged by [[graft.rollup.Rollup.mergeBy]], then
+  * [[graft.rollup.Rollup.derived]]): every carried metric merges
   * incrementally in streaming state — first/last text ride min_by/
   * max_by's (value, turn_idx) pair — so an emitted window equals the
   * batch 1m row on all columns.
@@ -40,10 +41,10 @@ object StreamingRollup {
     * each (conv, window) exactly once, when it can no longer change.
     */
   def rollup(stream: DataFrame, tier: Tier, watermarkDelay: String = "10 minutes"): DataFrame = {
-    val agg = Rollup.rawAggregate(
-      stream
+    val agg = Rollup.mergeBy(
+      Rollup.turnPartials(stream
         .filter(col("ts").isNotNull && col("conv_id").isNotNull)
-        .withWatermark("ts", watermarkDelay),
+        .withWatermark("ts", watermarkDelay)),
       // group on the window STRUCT itself — the analyzer only links the
       // watermark to the window when it appears unprojected in the keys
       col("conv_id"), window(col("ts"), tier.windowExpr).as("w"))

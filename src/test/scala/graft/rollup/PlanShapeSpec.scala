@@ -24,7 +24,7 @@ class PlanShapeSpec extends SparkTestBase {
     // The agg is SortAggregate, not Hash: min_by/max_by over string
     // columns have no fixed-size mutable buffer — a known, accepted
     // cost of carrying first/last text (BENCH numbers include it).
-    assert(p.contains("partial_count"), s"expected partial aggregation:\n$p")
+    assert(p.contains("partial_sum"), s"expected partial aggregation:\n$p")
   }
 
   test("cascade 1m->1h adds exactly one more exchange, never re-reads raw") {
@@ -48,7 +48,7 @@ class PlanShapeSpec extends SparkTestBase {
     val pSliding = plan(Rollup.sliding(turns))
     assert(exchanges(pSliding) == 1 && pSliding.contains("Expand"),
       s"sliding must be expand + one exchange:\n$pSliding")
-    assert(pSliding.contains("partial_count"), s"sliding needs map-side combine:\n$pSliding")
+    assert(pSliding.contains("partial_sum"), s"sliding needs map-side combine:\n$pSliding")
 
     // twa: the groupBy(conv_id) must REUSE the lead-window's conv_id
     // partitioning — one exchange total, no shuffle between Window and

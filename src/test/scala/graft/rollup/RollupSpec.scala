@@ -36,10 +36,19 @@ class RollupSpec extends SparkTestBase {
       // conv A, later window
       ("A", 3, "user", "bye", null, Timestamp.valueOf("2024-01-01 00:02:10")),
       // conv B
-      ("B", 0, "user", "x y z", null, Timestamp.valueOf("2024-01-01 00:00:10"))
+      ("B", 0, "user", "x y z", null, Timestamp.valueOf("2024-01-01 00:00:10")),
+      // conv C: a turn with a null role counts in neither role column
+      ("C", 0, null, "abc", null, Timestamp.valueOf("2024-01-01 00:00:20")),
+      ("C", 1, "user", "de f", null, Timestamp.valueOf("2024-01-01 00:00:40")),
+      // conv D: a null-text first turn beside a texted one, then a
+      // window whose only turn has null text
+      ("D", 0, "user", null, null, Timestamp.valueOf("2024-01-01 00:00:15")),
+      ("D", 1, "assistant", "pq", null, Timestamp.valueOf("2024-01-01 00:00:45")),
+      ("D", 2, "user", null, null, Timestamp.valueOf("2024-01-01 00:07:00"))
     ).toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val m1 = Rollup.fromRaw(rows, Tier.M1).collect()
+    def byKey(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[String]("conv_id"), r.getAs[Timestamp]("window_start").toString) -> r).toMap
+    val m1 = byKey(Rollup.fromRaw(rows, Tier.M1))
 
     val a0 = m1(("A", "2024-01-01 00:00:00.0"))
     assert(a0.getAs[Long]("turn_count") == 3L)
@@ -59,6 +68,39 @@ class RollupSpec extends SparkTestBase {
     assert(a2.getAs[Long]("turn_count") == 1L && a2.getAs[String]("first_text") == "bye")
     val b0 = m1(("B", "2024-01-01 00:00:00.0"))
     assert(b0.getAs[Long]("token_sum") == 3L)
+
+    // the null rules, alike for the plain, salted and cascaded paths:
+    // a null text has no length and no tokens (sum/min/max skip it,
+    // and the average still divides by every turn), yet it is the
+    // first/last text when its turn is first/last
+    def check(r: org.apache.spark.sql.Row, turns: Long, user: Long, assistant: Long,
+        lenSum: Option[Long], lenMin: Option[Long], lenMax: Option[Long],
+        tokens: Option[Long], first: String, last: String, avg: Option[Double]): Unit = {
+      def opt[A](c: String): Option[A] = Option(r.getAs[Any](c)).map(_.asInstanceOf[A])
+      assert(r.getAs[Long]("turn_count") == turns, r)
+      assert(r.getAs[Long]("user_turns") == user, r)
+      assert(r.getAs[Long]("assistant_turns") == assistant, r)
+      assert(opt[Long]("char_len_sum") == lenSum, r)
+      assert(opt[Long]("char_len_min") == lenMin, r)
+      assert(opt[Long]("char_len_max") == lenMax, r)
+      assert(opt[Long]("token_sum") == tokens, r)
+      assert(r.getAs[String]("first_text") == first, r)
+      assert(r.getAs[String]("last_text") == last, r)
+      assert(opt[Double]("char_len_avg") == avg, r)
+    }
+    for (m <- Seq(m1, byKey(Rollup.fromRawSalted(rows, Tier.M1, salts = 4)))) {
+      check(m(("C", "2024-01-01 00:00:00.0")), 2, 1, 0,
+        Some(7), Some(3), Some(4), Some(3), "abc", "de f", Some(3.5))
+      check(m(("D", "2024-01-01 00:00:00.0")), 2, 1, 1,
+        Some(2), Some(2), Some(2), Some(1), null, "pq", Some(1.0))
+      check(m(("D", "2024-01-01 00:07:00.0")), 1, 1, 0,
+        None, None, None, None, null, null, None)
+    }
+    val h1 = byKey(Rollup.cascade(Rollup.fromRaw(rows, Tier.M1), Tier.H1))
+    check(h1(("C", "2024-01-01 00:00:00.0")), 2, 1, 0,
+      Some(7), Some(3), Some(4), Some(3), "abc", "de f", Some(3.5))
+    check(h1(("D", "2024-01-01 00:00:00.0")), 3, 2, 1,
+      Some(2), Some(2), Some(2), Some(1), null, null, Some(2.0 / 3))
   }
 
   test("block encode/decode roundtrips the raw series distributedly") {

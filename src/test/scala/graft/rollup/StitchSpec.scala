@@ -235,13 +235,13 @@ class StitchSpec extends SparkTestBase {
       "stitch-serving-build")
     wh
   }
-  private def serving(lo: String, hi: String): DataFrame =
+  private def serving(lo: String, hi: String, input: DataFrame = turns): DataFrame =
     Rollup.stitchRangeServing(spark,
       new graft.table.SnapshotTable(s"$lagWh/rollup_1m"),
       new graft.table.SnapshotTable(s"$lagWh/rollup_1h"),
       new graft.table.SnapshotTable(s"$lagWh/rollup_1d"),
       new graft.state.StateStore(s"$lagWh/_state"),
-      turns, lo, hi)
+      input, lo, hi)
 
   test("stitchRangeServing equals direct aggregation across the horizon") {
     val ranges = Seq(
@@ -375,11 +375,20 @@ class StitchSpec extends SparkTestBase {
   }
 
   test("stitchRangeServing: ragged and horizon-crossing ranges keep their exchange plans") {
-    val ragged = serving("2024-01-04 07:41:23", "2024-01-09 18:22:05")
-    val tail = serving("2024-01-10 00:00:00", "2024-01-20 00:00:00")
-    for (df <- Seq(ragged, tail)) {
-      df.collect()
-      assert(exchanges(df).nonEmpty, s"a raw part merges through an exchange:\n${df.queryExecution.executedPlan}")
+    // a raw part's turns enter the per-conversation merge as per-turn
+    // partials, so that merge's exchange is the plan's only one, whether
+    // the raw input is cached or read from parquet
+    val dir = tmpDir("stitch-turns-parquet")
+    turns.write.mode("overwrite").parquet(dir)
+    val ranges = Seq(
+      ("2024-01-04 07:41:23", "2024-01-09 18:22:05"), // ragged, closed days
+      ("2024-01-10 00:00:00", "2024-01-20 00:00:00")) // crosses the horizon
+    for (input <- Seq(turns, spark.read.parquet(dir)); (a, b) <- ranges) {
+      val df = serving(a, b, input)
+      val rows = df.collect()
+      assert(exchanges(df).size == 1,
+        s"[$a, $b) must merge through exactly one exchange:\n${df.queryExecution.executedPlan}")
+      assertSameRows(spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema), direct(a, b))
     }
   }
 
